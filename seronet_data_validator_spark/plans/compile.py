@@ -192,22 +192,36 @@ def compile_ruleset(
     else:
         fused = None
 
-    if fused is not None and structural is not None:
-        pad = structural.select(
-            *[F.lit(None).cast("string").alias(c) for c in keep_columns], "*"
-        )
-        return fused.unionByName(pad)
+    pad = [F.lit(None).cast("string").alias(c) for c in keep_columns]
+    if structural is not None:
+        structural = structural.select(*pad, "*")
+        return structural if fused is None else fused.unionByName(structural)
     if fused is not None:
         return fused
-    if structural is not None:
-        return structural.select(
-            *[F.lit(None).cast("string").alias(c) for c in keep_columns], "*"
-        )
-    empty = spark.createDataFrame([], VIOLATION_SCHEMA)
-    return empty.select(*[F.lit(None).cast("string").alias(c) for c in keep_columns], "*")
+    return spark.createDataFrame([], VIOLATION_SCHEMA).select(*pad, "*")
 
 
 DEDUP_KEY = ["table_name", "row_ref", "column_name", "column_value"]
+
+
+def union_violation_parts(parts: list[DataFrame]) -> DataFrame:
+    """Union violation families tagged with their pass ordinal ``_ord`` (the
+    ``order_col`` of :func:`dedup_violations`) as a BALANCED tree: DataFrames
+    analyze eagerly, so a left-deep chain re-analyzes its growing left side
+    at every step (O(parts²) driver time). `_ord` is a per-part literal, so
+    first-writer-wins dedup is identical under any union associativity."""
+    if not parts:
+        raise ValueError("parts must be non-empty")
+    tagged = [p.withColumn("_ord", F.lit(i)) for i, p in enumerate(parts)]
+    while len(tagged) > 1:
+        nxt = [
+            tagged[j].unionByName(tagged[j + 1])
+            for j in range(0, len(tagged) - 1, 2)
+        ]
+        if len(tagged) % 2:
+            nxt.append(tagged[-1])
+        tagged = nxt
+    return tagged[0]
 
 
 def dedup_violations(violations: DataFrame, *, order_col: str | None = None) -> DataFrame:

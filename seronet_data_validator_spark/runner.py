@@ -32,6 +32,8 @@ from seronet_data_validator_spark.model import (
     SEVERITY_WARNING,
     VIOLATION_SCHEMA,
 )
+# qc.qc_violations is resolved per call: perfbench/trace.py wraps it on its module
+from seronet_data_validator_spark.operators import qc
 from seronet_data_validator_spark.operators.audio import audio_violations
 from seronet_data_validator_spark.operators.integrity import (
     consistency_violations,
@@ -42,7 +44,11 @@ from seronet_data_validator_spark.operators.integrity import (
     referential_violations,
     suppressed_referential_violations,
 )
-from seronet_data_validator_spark.plans.compile import compile_ruleset, dedup_violations
+from seronet_data_validator_spark.plans.compile import (
+    compile_ruleset,
+    dedup_violations,
+    union_violation_parts,
+)
 from seronet_data_validator_spark.plans.rules import (
     Rule,
     RuleSet,
@@ -85,27 +91,6 @@ class ValidationResult:
 
 def _empty_violations(spark: SparkSession) -> DataFrame:
     return spark.createDataFrame([], VIOLATION_SCHEMA)
-
-
-def _union_parts(parts: list[DataFrame]) -> DataFrame:
-    """Union the violation families tagged with their pass ordinal, as a
-    BALANCED tree rather than a left-deep chain. PySpark DataFrames analyze
-    eagerly at construction, so a 12-part chain re-analyzes the growing
-    left side at every step — O(parts²) driver-side analysis over deep
-    family subtrees (measured as part of the ~1.4 s per-call plan build of
-    the exact-lifecycle query). The balanced tree analyzes each subtree
-    O(log parts) times; `_ord` is a per-part literal, so first-writer-wins
-    dedup is byte-identical under any union associativity."""
-    tagged = [p.withColumn("_ord", F.lit(i)) for i, p in enumerate(parts)]
-    while len(tagged) > 1:
-        nxt = [
-            tagged[j].unionByName(tagged[j + 1])
-            for j in range(0, len(tagged) - 1, 2)
-        ]
-        if len(tagged) % 2:
-            nxt.append(tagged[-1])
-        tagged = nxt
-    return tagged[0]
 
 
 # Compiled-plan cache (PREPARED-STATEMENT reuse, not result caching): the
@@ -221,130 +206,14 @@ def validate_clips(
                 output_root, run_manifest, skipped, prior_ok, row_counts,
             )
 
-    parts: list[DataFrame] = []
-
-    # C15: a registry small enough to collect compiles to a literal isin
-    # INSIDE the fused rule pass — zero extra scans of the fact table, no
-    # join stage. Big registries keep the broadcast anti-join operator.
-    registry_inlined = False
-    if codec_registry is not None and prior_violations is None:
-        keys = codec_registry.select("codec").limit(10_001).collect()
-        if len(keys) <= 10_000:
-            inlined = RuleSet(table_name=rs.table_name, row_ref_column=rs.row_ref_column)
-            for r in rs.rules:
-                inlined.add(r)
-            inlined.add(
-                Rule(
-                    "C15.referential", "codec",
-                    check_registry_membership([k["codec"] for k in keys], "codec_registry"),
-                )
-            )
-            rs = inlined
-            registry_inlined = True
-
-    # (3) fused row-level pass — one scan, bytes column pruned out.
-    row_viol = compile_ruleset(clips, rs, keep_columns=(partition_column,))
-    parts.append(row_viol)
-
-    # (4) table-level passes.
-    dup = duplicate_id_violations(clips, rs.row_ref_column, rs.table_name)
-    parts.append(_with_null_part(dup, partition_column))
-    if codec_registry is not None and not registry_inlined:
-        if prior_violations is not None:
-            # C20: referential with suppression — keys already reported in
-            # the prior violation table are not re-reported. Table-level
-            # (submission-scope) like the reference's map-ids check, so the
-            # NULL-partition sentinel applies.
-            sv = suppressed_referential_violations(
-                clips, codec_registry, "codec", rs.table_name,
-                prior_violations, registry_name="codec_registry",
-                row_ref_column=rs.row_ref_column,
-            )
-            parts.append(_with_null_part(sv, partition_column))
-        else:
-            # keep_columns: attribute each orphan to its real partition,
-            # exactly like the inlined-isin path does via the fused pass —
-            # verdicts must not depend on which C15 strategy the registry
-            # size selected
-            ref_v = referential_violations(
-                clips, codec_registry, "codec", rs.table_name,
-                registry_name="codec_registry", row_ref_column=rs.row_ref_column,
-                keep_columns=(partition_column,),
-            )
-            parts.append(ref_v)
-    if manifest is not None:
-        cnt = count_reconciliation_violations(clips, manifest, partition_column, rs.table_name)
-        parts.append(_with_null_part(cnt, partition_column))
-
-    # C17: clips-vs-reference presence (one union + one groupBy-presence agg
-    # regardless of table count — no outer-join chain).
-    if run_presence_pass and reference_clips is not None:
-        m = presence_matrix(
-            {
-                "clips": clips.select(rs.row_ref_column),
-                "reference": reference_clips.select(rs.row_ref_column),
-            },
-            rs.row_ref_column,
-        )
-        pv = presence_violations(
-            m, rs.row_ref_column, child="clips", parent="reference",
-            child_missing_severity=SEVERITY_WARNING,
-        )
-        parts.append(_with_null_part(pv, partition_column))
-
-    # C19: per-site declared-vs-observed consistency (one conditional
-    # groupBy agg + a tiny declared-side outer join for missing groups).
-    if site_consistency is not None:
-        sc = site_consistency
-        obs = clips.select(sc.group_col, sc.observed_col).join(
-            F.broadcast(sc.declared), sc.group_col, "inner"
-        )
-        cv = consistency_violations(
-            obs,
-            group_col=sc.group_col,
-            declared_col=sc.declared_col,
-            observed_class=F.col(sc.observed_col),
-            table_name=rs.table_name,
-            all_must_match_value=sc.all_must_match_value,
-            any_must_match_value=sc.any_must_match_value,
-            declared=sc.declared,
-        )
-        if sc.group_col == partition_column:
-            # the group IS the partition — attribute mismatch violations to
-            # it so per-partition verdicts fail exactly the offending site.
-            # C19.missing stays on the NULL (global) partition: a declared
-            # site with zero clips has no verdict row of its own, so only a
-            # global error makes the run fail.
-            cv = cv.select(
-                F.when(F.col("rule_id") != "C19.missing", F.col("column_value"))
-                .alias(partition_column),
-                "*",
-            )
-            parts.append(cv)
-        else:
-            parts.append(_with_null_part(cv, partition_column))
-
-    # (5) audio invariant pass (Arrow pandas UDF) — narrow, partition-parallel.
-    if run_audio_pass and "bytes" in clips.columns:
-        av = audio_violations(clips, reference_clips, table_name=rs.table_name,
-                              id_column=rs.row_ref_column,
-                              force_full_decode=audio_force_full_decode)
-        parts.append(_with_null_part(av, partition_column))
-
-    # (5b) optional QC1 acceptance pass — same narrow Arrow shape as (5);
-    # the partition column rides the batch through, so each verdict lands
-    # on its real partition (no NULL-sentinel needed).
-    if run_qc_pass and "bytes" in clips.columns:
-        from seronet_data_validator_spark.operators.qc import qc_violations
-
-        parts.append(
-            qc_violations(
-                clips,
-                table_name=rs.table_name,
-                id_column=rs.row_ref_column,
-                keep_columns=(partition_column,),
-            )
-        )
+    parts = violation_families(
+        clips, rs, partition_column=partition_column,
+        codec_registry=codec_registry, reference_clips=reference_clips,
+        manifest=manifest, prior_violations=prior_violations,
+        site_consistency=site_consistency, run_presence_pass=run_presence_pass,
+        run_audio_pass=run_audio_pass, audio_force_full_decode=audio_force_full_decode,
+        run_qc_pass=run_qc_pass,
+    )
 
     # (6) union + C22 dedup (reference File_Submission_Object.py:255-256):
     # first-writer-wins on (table, row, column, value), "first" = pass order
@@ -372,8 +241,7 @@ def validate_clips(
         )
         parts.append(counts_rows)
 
-    violations = _union_parts(parts)
-    violations = dedup_violations(violations, order_col="_ord")
+    violations = dedup_violations(union_violation_parts(parts), order_col="_ord")
 
     if plan_key is not None:
         while len(_PLAN_CACHE) >= _PLAN_CACHE_MAX:
@@ -389,6 +257,146 @@ def validate_clips(
         spark, violations, run_id, partition_column, fold_counts,
         output_root, run_manifest, skipped, prior_ok, row_counts,
     )
+
+
+def violation_families(
+    df: DataFrame,
+    rs: RuleSet,
+    *,
+    partition_column: str | None = None,
+    codec_registry: DataFrame | None = None,
+    reference_clips: DataFrame | None = None,
+    manifest: DataFrame | None = None,
+    prior_violations: DataFrame | None = None,
+    site_consistency: SiteConsistencySpec | None = None,
+    run_presence_pass: bool = False,
+    run_audio_pass: bool,
+    audio_force_full_decode: bool = False,
+    run_qc_pass: bool,
+) -> list[DataFrame]:
+    """Steps (3)-(5b): the violation families of ``df`` in pass order (the
+    C22 dedup's first-writer order), for ``validate_clips`` and for each
+    micro-batch of ``stream_validate_clips``. With ``partition_column=None``
+    the families carry only the VIOLATION_SCHEMA columns."""
+    keep = (partition_column,) if partition_column else ()
+    parts: list[DataFrame] = []
+
+    # C15: a registry small enough to collect compiles to a literal isin
+    # INSIDE the fused rule pass — zero extra scans of the fact table, no
+    # join stage. Big registries keep the broadcast anti-join operator.
+    anti_join_registry = codec_registry
+    if codec_registry is not None and prior_violations is None:
+        keys = codec_registry.select("codec").limit(10_001).collect()
+        if len(keys) <= 10_000:
+            c15 = Rule(
+                "C15.referential", "codec",
+                check_registry_membership([k["codec"] for k in keys], "codec_registry"),
+            )
+            rs = RuleSet(rs.table_name, [*rs.rules, c15], rs.row_ref_column)
+            anti_join_registry = None
+
+    # (3) fused row-level pass — one scan, bytes column pruned out.
+    parts.append(compile_ruleset(df, rs, keep_columns=keep))
+
+    # (4) table-level passes.
+    dup = duplicate_id_violations(df, rs.row_ref_column, rs.table_name)
+    parts.append(_with_null_part(dup, partition_column))
+    if anti_join_registry is not None:
+        if prior_violations is not None:
+            # C20: referential with suppression — keys already reported in
+            # the prior violation table are not re-reported. Table-level
+            # (submission-scope) like the reference's map-ids check, so the
+            # NULL-partition sentinel applies.
+            sv = suppressed_referential_violations(
+                df, codec_registry, "codec", rs.table_name,
+                prior_violations, registry_name="codec_registry",
+                row_ref_column=rs.row_ref_column,
+            )
+            parts.append(_with_null_part(sv, partition_column))
+        else:
+            # keep_columns: attribute each orphan to its real partition,
+            # exactly like the inlined-isin path does via the fused pass —
+            # verdicts must not depend on which C15 strategy the registry
+            # size selected
+            parts.append(
+                referential_violations(
+                    df, codec_registry, "codec", rs.table_name,
+                    registry_name="codec_registry", row_ref_column=rs.row_ref_column,
+                    keep_columns=keep,
+                )
+            )
+    if manifest is not None:
+        cnt = count_reconciliation_violations(df, manifest, partition_column, rs.table_name)
+        parts.append(_with_null_part(cnt, partition_column))
+
+    # C17: clips-vs-reference presence (one union + one groupBy-presence agg
+    # regardless of table count — no outer-join chain).
+    if run_presence_pass and reference_clips is not None:
+        m = presence_matrix(
+            {
+                "clips": df.select(rs.row_ref_column),
+                "reference": reference_clips.select(rs.row_ref_column),
+            },
+            rs.row_ref_column,
+        )
+        pv = presence_violations(
+            m, rs.row_ref_column, child="clips", parent="reference",
+            child_missing_severity=SEVERITY_WARNING,
+        )
+        parts.append(_with_null_part(pv, partition_column))
+
+    # C19: per-site declared-vs-observed consistency (one conditional
+    # groupBy agg + a tiny declared-side outer join for missing groups).
+    if site_consistency is not None:
+        sc = site_consistency
+        obs = df.select(sc.group_col, sc.observed_col).join(
+            F.broadcast(sc.declared), sc.group_col, "inner"
+        )
+        cv = consistency_violations(
+            obs,
+            group_col=sc.group_col,
+            declared_col=sc.declared_col,
+            observed_class=F.col(sc.observed_col),
+            table_name=rs.table_name,
+            all_must_match_value=sc.all_must_match_value,
+            any_must_match_value=sc.any_must_match_value,
+            declared=sc.declared,
+        )
+        if sc.group_col == partition_column:
+            # the group IS the partition — attribute mismatch violations to
+            # it so per-partition verdicts fail exactly the offending site.
+            # C19.missing stays on the NULL (global) partition: a declared
+            # site with zero clips has no verdict row of its own, so only a
+            # global error makes the run fail.
+            cv = cv.select(
+                F.when(F.col("rule_id") != "C19.missing", F.col("column_value"))
+                .alias(partition_column),
+                "*",
+            )
+        else:
+            cv = _with_null_part(cv, partition_column)
+        parts.append(cv)
+
+    # (5) audio invariant pass (Arrow pandas UDF) — narrow, partition-parallel.
+    if run_audio_pass and "bytes" in df.columns:
+        av = audio_violations(df, reference_clips, table_name=rs.table_name,
+                              id_column=rs.row_ref_column,
+                              force_full_decode=audio_force_full_decode)
+        parts.append(_with_null_part(av, partition_column))
+
+    # (5b) optional QC1 acceptance pass — same narrow Arrow shape as (5);
+    # the partition column rides the batch through, so each verdict lands
+    # on its real partition (no NULL-sentinel needed).
+    if run_qc_pass and "bytes" in df.columns:
+        parts.append(
+            qc.qc_violations(
+                df,
+                table_name=rs.table_name,
+                id_column=rs.row_ref_column,
+                keep_columns=keep,
+            )
+        )
+    return parts
 
 
 def _finish_validation(
@@ -425,7 +433,10 @@ def _finish_validation(
             real_violations.sortWithinPartitions(
                 F.col("row_ref").try_cast("long").asc_nulls_last(), "row_ref"
             )
+            # dynamic on the write itself: under a session whose default is
+            # static, overwrite would delete the partitions resume skipped
             .write.mode("overwrite")
+            .option("partitionOverwriteMode", "dynamic")
             .partitionBy(partition_column)
             .parquet(os.path.join(output_root, "violations", run_id))
         )
@@ -497,7 +508,10 @@ def _finish_validation(
     )
 
 
-def _with_null_part(v: DataFrame, partition_column: str) -> DataFrame:
+def _with_null_part(v: DataFrame, partition_column: str | None) -> DataFrame:
     """Table-level violations aren't attributable to one input partition —
-    tag with NULL partition (the reference's sentinel-row analog)."""
+    tag with NULL partition (the reference's sentinel-row analog). No-op
+    without a partition column."""
+    if partition_column is None:
+        return v
     return v.select(F.lit(None).cast("string").alias(partition_column), "*")

@@ -1,14 +1,13 @@
-"""Streaming validation: readStream → fused rule pass → foreachBatch sink.
+"""Streaming validation: readStream → foreachBatch → the batch families.
 
-Row-level rules are narrow, so the SAME compiled plan from
-plans/compile.compile_ruleset applies unchanged to a streaming DataFrame —
-one definition of the rules, two execution modes (the Spark-idiomatic way to
-keep batch and streaming semantics identical). Table-level checks that need
-a batch view (referential against a static dim) run inside foreachBatch on
-each micro-batch; uniqueness is GLOBAL across batches via a durable compact
-key log (id, batch_id) — a key seen in any earlier micro-batch flags
-C4.cross_batch_dup, the foreachBatch analog of
-dropDuplicatesWithinWatermark state that also survives restarts.
+Each micro-batch runs runner.violation_families, the assembly the batch
+runner uses — one definition of the rules and their families, two execution
+modes. The codec registry is resolved per micro-batch as the batch runner
+resolves it per call; the audio pass runs only when ``reference_clips`` is
+given. The one stream-only family is C4.cross_batch_dup: a durable compact
+key log (id, batch_id) makes uniqueness GLOBAL across batches — the
+foreachBatch analog of dropDuplicatesWithinWatermark state that also
+survives restarts.
 
 At scale this is the continuous-ingestion path: new Iceberg/parquet files
 land, availableNow/continuous triggers pick them up, violations append to
@@ -24,11 +23,17 @@ import shutil
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from seronet_data_validator_spark.operators.integrity import (
+from seronet_data_validator_spark import runner
+# re-exported only as call sites that perfbench/trace.py wraps by name
+from seronet_data_validator_spark.operators.integrity import (  # noqa: F401
     duplicate_id_violations,
     referential_violations,
 )
-from seronet_data_validator_spark.plans.compile import compile_ruleset, dedup_violations
+from seronet_data_validator_spark.plans.compile import (  # noqa: F401
+    compile_ruleset,
+    dedup_violations,
+    union_violation_parts,
+)
 from seronet_data_validator_spark.plans.rules import RuleSet
 from seronet_data_validator_spark.rulesets import clips_ruleset
 from seronet_data_validator_spark.sources.clips import CLIPS_SCHEMA
@@ -101,32 +106,34 @@ def stream_validate_clips(
         if batch_df.isEmpty():
             return
         sp = batch_df.sparkSession
-        parts = [compile_ruleset(batch_df, rs)]
-        parts.append(duplicate_id_violations(batch_df, rs.row_ref_column, rs.table_name))
-        # cross-batch uniqueness: duplicate_id_violations above only sees THIS
-        # micro-batch; a key that arrived in an earlier batch would silently
-        # pass. The key log (id, batch_id) makes uniqueness global: the read
-        # is the LATEST snapshot plus the post-snapshot tail — bounded, not
-        # O(stream history). The batch_id < current filter keeps batch
-        # replays (at-least-once foreachBatch) from flagging a batch against
-        # its own earlier append; snapshots preserve each key's FIRST
-        # batch_id so the guard survives compaction.
+        parts = runner.violation_families(
+            batch_df, rs,
+            codec_registry=codec_registry,
+            reference_clips=reference_clips,
+            run_audio_pass=reference_clips is not None,
+            run_qc_pass=run_qc_pass,
+        )
+        # cross-batch uniqueness: C4.dup_id only sees THIS micro-batch. The
+        # key log read is the LATEST snapshot plus the post-snapshot tail —
+        # bounded, not O(stream history). batch_id < current keeps replays
+        # (at-least-once foreachBatch) from flagging a batch against its own
+        # earlier append; snapshots keep each key's FIRST batch_id. Appended
+        # last: its dedup key (row_ref "-3", the id column) is shared only
+        # with C4.dup_id, which keeps the row.
         read_paths = []
         snaps = _seen_snapshots(seen_root)
         if snaps:
             read_paths.append(os.path.join(seen_root, f"snap={snaps[-1]}"))
         if os.path.isdir(seen_tail):
             read_paths.append(seen_tail)
-        prior_keys = None
         if read_paths:
             prior_keys = (
                 sp.read.schema(seen_schema).parquet(*read_paths)
                 .where(F.col("batch_id") < batch_id)
                 .select(rs.row_ref_column).dropDuplicates([rs.row_ref_column])
             )
-        if prior_keys is not None:
             key = F.col(rs.row_ref_column)
-            cross = (
+            parts.append(
                 batch_df.join(prior_keys, rs.row_ref_column, "left_semi")
                 .select(
                     F.lit("Error").alias("severity"),
@@ -141,45 +148,8 @@ def stream_validate_clips(
                     ).alias("message"),
                 )
             )
-            parts.append(cross)
-        if codec_registry is not None:
-            parts.append(
-                referential_violations(
-                    batch_df, codec_registry, "codec", rs.table_name,
-                    registry_name="codec_registry", row_ref_column=rs.row_ref_column,
-                )
-            )
-        # decoded-PCM invariant pass (C13a) per micro-batch: the same Arrow
-        # operator as the batch runner, joined against the static reference
-        # table — batch backfill and stream emit identical violation
-        # families for identical rows. The identity fast path applies
-        # per batch (clean rows ship ~44 B/clip).
-        if reference_clips is not None and "bytes" in batch_df.columns:
-            from seronet_data_validator_spark.operators.audio import audio_violations
-
-            parts.append(
-                audio_violations(batch_df, reference_clips,
-                                 table_name=rs.table_name,
-                                 id_column=rs.row_ref_column)
-            )
-        # optional QC1 acceptance pass, mirroring the batch runner's step 5b
-        # — stream and backfill emit the same QC verdict family
-        if run_qc_pass and "bytes" in batch_df.columns:
-            from seronet_data_validator_spark.operators.qc import qc_violations
-
-            parts.append(
-                qc_violations(
-                    batch_df, table_name=rs.table_name,
-                    id_column=rs.row_ref_column,
-                )
-            )
-        # same first-writer-wins C22 dedup as the batch runner (pass order =
-        # rules, uniqueness, cross-batch, referential, audio, qc) so batch
-        # backfill and stream emit identical violation sets for identical rows
-        from seronet_data_validator_spark.runner import _union_parts
-
-        v = _union_parts(parts)
-        v = dedup_violations(v, order_col="_ord")
+        # same first-writer-wins C22 dedup as the batch runner
+        v = runner.dedup_violations(union_violation_parts(parts), order_col="_ord")
         # partitioned by batch_id + dynamic overwrite: a replayed batch
         # overwrites ITS OWN partition only — exactly-once output under
         # at-least-once foreachBatch execution
