@@ -14,7 +14,8 @@ The script uses the session spark-submit provides (or builds a local one when
 run directly), reads the clips table, runs the full validation lifecycle
 (schema contract → resume filter → fused row rules → uniqueness/referential/
 count reconciliation → decoded-PCM invariants → verdicts), writes violations
-+ partition verdicts + run-manifest lineage under --output-root, and exits 0
+and then one run-manifest row per partition (its verdict, metrics and
+lineage) under --output-root, and exits 0
 on a clean run / 1 when any partition fails — the reference's triage-folder
 verdict (\"02_...No_Errors\" vs \"04_...Data_Errors\",
 /root/reference/Data_Validation_v1.py:191-199) as a process exit code.

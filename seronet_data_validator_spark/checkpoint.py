@@ -4,16 +4,20 @@ The reference resumes via a folder/status protocol (move processed
 submissions between triage folders, re-scan on restart —
 /root/reference/Data_Validation_v1.py:59-71,374-392). The Spark-native
 analog is a ``run_manifest`` table: one row per (run_id, partition_key) with
-status + metrics, committed AFTER that partition's violations are durably
-written. A restarted run anti-filters its input on the completed set before
-the heavy pass, so finished partitions are pruned at the scan (partition
-pruning via an isin predicate on the partition column — Iceberg/parquet
-prunes whole files).
+status, verdict and metrics, committed AFTER that partition's violations are
+durably written. That row is the partition's one verdict of record:
+:func:`partition_verdicts` reads the verdict table out of the manifest, so
+there is no second table to append to and no crash window between two
+appends. A restarted run reads the manifest once
+(:meth:`RunManifest.prior_verdicts`) and anti-filters its input on the
+completed set before the heavy pass, so finished partitions are pruned at the
+scan (partition pruning via an isin predicate on the partition column —
+Iceberg/parquet prunes whole files).
 
 Writes are idempotent: re-running a completed partition overwrites the same
 partition directory (dynamic partition overwrite), so at-least-once retries
 converge — matching the reference's re-runnable folder semantics without its
-manual bookkeeping. In production both tables are Iceberg (atomic commits);
+manual bookkeeping. In production the tables are Iceberg (atomic commits);
 the sandbox uses partitioned parquet with the same layout and semantics.
 """
 
@@ -28,6 +32,9 @@ from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from seronet_data_validator_spark.model import PARTITION_VERDICT_SCHEMA
+from seronet_data_validator_spark.sources.local import local_df
 
 MANIFEST_SCHEMA = T.StructType(
     [
@@ -64,33 +71,21 @@ class RunManifest:
                 raise
             return None
 
-    def completed_partitions(self, run_id: str) -> list[str]:
-        df = self._read()
-        if df is None:
-            return []
-        return [
-            r["partition_key"]
-            for r in df.where((F.col("run_id") == run_id) & (F.col("status") == "done"))
-            .select("partition_key")
-            .distinct()
-            .collect()
-        ]
-
-    def prior_verdicts(self, run_id: str, partitions: list[str]) -> dict[str, bool]:
-        """Stored pass/fail for already-committed partitions — a resumed run
-        derives its exit status from these instead of reporting a failed
-        dataset as clean just because nothing re-validated (the reference's
-        triage verdict is durable in its summary workbook the same way,
+    def prior_verdicts(self, run_id: str) -> dict[str, bool]:
+        """``{partition_key: passed}`` for every partition committed 'done'
+        under ``run_id``, from one manifest read and one collect. A resumed
+        run skips these partitions and derives its exit status from the
+        stored verdicts instead of reporting a failed dataset as clean just
+        because nothing re-validated (the reference's triage verdict is
+        durable in its summary workbook the same way,
         Data_Validation_v1.py:204-228). Conservative fold: any failing commit
         for a partition marks it failed; a pre-upgrade manifest row with no
         ``passed`` column falls back to n_errors == 0."""
-        if not partitions:
-            return {}
         df = self._read()
         if df is None:
             return {}
         rows = (
-            df.where((F.col("run_id") == run_id) & F.col("partition_key").isin(partitions))
+            df.where((F.col("run_id") == run_id) & (F.col("status") == "done"))
             .groupBy("partition_key")
             .agg(
                 F.min(
@@ -101,10 +96,13 @@ class RunManifest:
         )
         return {r["partition_key"]: bool(r["ok"]) for r in rows}
 
-    def resume_filter(self, df: DataFrame, run_id: str, partition_column: str) -> DataFrame:
-        """Prune partitions already committed for this run. The isin predicate
-        on the partition column pushes down to the scan → whole-file pruning."""
-        done = self.completed_partitions(run_id)
+    def completed_partitions(self, run_id: str) -> list[str]:
+        """Sorted keys of the partitions committed 'done' under ``run_id``."""
+        return sorted(self.prior_verdicts(run_id))
+
+    def resume_filter(self, df: DataFrame, done: list[str], partition_column: str) -> DataFrame:
+        """Prune the ``done`` partitions. The isin predicate on the partition
+        column pushes down to the scan → whole-file pruning."""
         if not done:
             return df
         return df.where(~F.col(partition_column).isin(done))
@@ -134,7 +132,8 @@ class RunManifest:
             )
             for v in verdict_rows
         ]
-        self.spark.createDataFrame(rows, MANIFEST_SCHEMA).coalesce(1).write.mode(
+        # Arrow-built local relation: no pickled-RDD Python-worker task
+        local_df(self.spark, rows, MANIFEST_SCHEMA).coalesce(1).write.mode(
             "append"
         ).parquet(self.path)
 
@@ -143,49 +142,38 @@ class RunManifest:
 
         Each :meth:`commit` appends one small file; thousands of runs →
         thousands of tiny files and a slow manifest read. Call this from a
-        maintenance cadence. Returns the row count compacted."""
+        maintenance cadence. Returns the row count compacted.
+
+        The production analog is an Iceberg ``rewrite_data_files`` table
+        service — Iceberg makes the swap an atomic snapshot commit; on a
+        plain filesystem we materialize off the source files
+        (localCheckpoint), stage to a temp dir and rename, with a ``.old``
+        fallback so a crash mid-swap loses nothing readable."""
         df = self._read()
         if df is None:
             return 0
-        return _compact_parquet_dir(df, self.path, target_files)
+        snap = df.localCheckpoint(eager=True)
+        n = snap.count()
+        tmp = self.path + ".compact.tmp"
+        old = self.path + ".compact.old"
+        shutil.rmtree(tmp, ignore_errors=True)
+        snap.coalesce(max(1, target_files)).write.mode("overwrite").parquet(tmp)
+        shutil.rmtree(old, ignore_errors=True)
+        os.rename(self.path, old)
+        os.rename(tmp, self.path)
+        shutil.rmtree(old, ignore_errors=True)
+        return n
 
 
-def _compact_parquet_dir(df: DataFrame, path: str, target_files: int) -> int:
-    """Rewrite ``path`` (an append-grown parquet dir whose content is
-    ``df``) into ``target_files`` files. The production analog is an Iceberg
-    ``rewrite_data_files`` table service — Iceberg makes the swap an atomic
-    snapshot commit; on a plain filesystem we materialize off the source
-    files (localCheckpoint), stage to a temp dir and rename, with a ``.old``
-    fallback so a crash mid-swap loses nothing readable."""
-    snap = df.localCheckpoint(eager=True)
-    n = snap.count()
-    tmp = path + ".compact.tmp"
-    old = path + ".compact.old"
-    shutil.rmtree(tmp, ignore_errors=True)
-    snap.coalesce(max(1, target_files)).write.mode("overwrite").parquet(tmp)
-    shutil.rmtree(old, ignore_errors=True)
-    os.rename(path, old)
-    os.rename(tmp, path)
-    shutil.rmtree(old, ignore_errors=True)
-    return n
-
-
-def compact_partition_verdicts(
-    spark: SparkSession, output_root: str, *, target_files: int = 1
-) -> int:
-    """Same tiny-file hygiene for the ``partition_verdicts`` table the
-    runner appends one file per run (runner.validate_clips step 8). Returns
-    the row count compacted; 0 when the table does not exist yet."""
-    from seronet_data_validator_spark.model import PARTITION_VERDICT_SCHEMA
-
-    path = os.path.join(output_root, "partition_verdicts")
-    schema = T.StructType(
-        list(PARTITION_VERDICT_SCHEMA.fields)
-    )
-    try:
-        df = spark.read.schema(schema).parquet(path)
-    except AnalysisException as e:
-        if "PATH_NOT_FOUND" not in str(e):
-            raise
-        return 0
-    return _compact_parquet_dir(df, path, target_files)
+def partition_verdicts(spark: SparkSession, output_root: str) -> DataFrame:
+    """The per-partition verdict table (PARTITION_VERDICT_SCHEMA columns, the
+    manifest's ``passed`` exposed as ``pass``): one row per (run_id,
+    partition_key) commit under ``output_root``, read from its run_manifest.
+    Empty when nothing has been committed yet."""
+    df = RunManifest(spark, output_root)._read()
+    if df is None:
+        return spark.createDataFrame([], PARTITION_VERDICT_SCHEMA)
+    return df.where(F.col("status") == "done").select(*[
+        F.col("passed" if f.name == "pass" else f.name).alias(f.name)
+        for f in PARTITION_VERDICT_SCHEMA.fields
+    ])

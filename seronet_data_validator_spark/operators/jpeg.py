@@ -95,10 +95,6 @@ _C = np.cos((2 * _k[None, :] + 1) * _k[:, None] * np.pi / 16) * np.sqrt(2 / 8)
 _C[0] *= np.sqrt(0.5)
 
 
-def _fdct(block: np.ndarray) -> np.ndarray:
-    return _C @ block @ _C.T
-
-
 def _idct(coef: np.ndarray) -> np.ndarray:
     return _C.T @ coef @ _C
 

@@ -32,6 +32,7 @@ from seronet_data_validator_spark.model import (
     VIOLATION_SCHEMA,
 )
 from seronet_data_validator_spark.plans.rules import Rule, RuleSet, dict_flag_col
+from seronet_data_validator_spark.sources.local import local_df
 
 
 def _violation_struct(
@@ -76,7 +77,7 @@ def _structural_violations(
                 )
         else:
             runnable.append(rule)
-    struct_df = spark.createDataFrame(rows, VIOLATION_SCHEMA) if rows else None
+    struct_df = local_df(spark, rows, VIOLATION_SCHEMA) if rows else None
     return runnable, struct_df
 
 

@@ -5,8 +5,9 @@ validate_clips(): (1) schema contract (driver-side, C21) → (2) resume filter
 (4) uniqueness + referential + count-reconciliation table passes →
 (5) decoded-PCM invariant pass (Arrow pandas UDF) → (6) union violations →
 (7) per-partition verdicts (pass = zero Error rows, the reference's verdict
-at /root/reference/Data_Validation_v1.py:191-199) → (8) write violations +
-verdicts, commit partitions to the run manifest.
+at /root/reference/Data_Validation_v1.py:191-199) → (8) write violations,
+then commit one run-manifest row per partition: that row is the verdict of
+record, read back by ``checkpoint.partition_verdicts``.
 
 Plan shape at scale: pass (3) and (5) are narrow (no shuffle); (4) shuffles
 once per distinct aggregation key; the verdict aggregation reuses the
@@ -157,17 +158,15 @@ def validate_clips(
     if contract is not None:
         return ValidationResult(run_id, contract, [], False, [])
 
-    # (2) resume: prune committed partitions before any heavy work.
+    # (2) resume: prune committed partitions before any heavy work. One
+    # manifest read gives both the skip list and the exit-status contract:
+    # skipped partitions keep their STORED verdict — a failed dataset must
+    # not report clean on re-run just because its partitions are committed.
     run_manifest = RunManifest(spark, output_root) if output_root else None
-    skipped: list[str] = []
-    prior_ok: dict[str, bool] = {}
+    prior_ok = run_manifest.prior_verdicts(run_id) if run_manifest else {}
+    skipped = sorted(prior_ok)
     if run_manifest is not None:
-        skipped = run_manifest.completed_partitions(run_id)
-        clips = run_manifest.resume_filter(clips, run_id, partition_column)
-        # exit-status contract on resume: skipped partitions keep their STORED
-        # verdict — a failed dataset must not report clean on re-run just
-        # because its partitions are already committed.
-        prior_ok = run_manifest.prior_verdicts(run_id, skipped)
+        clips = run_manifest.resume_filter(clips, skipped, partition_column)
 
     # Per-partition row counts are needed for verdicts. In the hot path they
     # are FOLDED into the single heavy job as pseudo-rows (each Spark job
@@ -184,8 +183,7 @@ def validate_clips(
         }
         if skipped and not row_counts:
             return ValidationResult(
-                run_id, _empty_violations(spark), [],
-                all(prior_ok.get(p, True) for p in skipped), skipped,
+                run_id, _empty_violations(spark), [], all(prior_ok.values()), skipped,
             )
 
     # Prepared-plan reuse (see _PLAN_CACHE): hot path only — durable runs
@@ -489,18 +487,13 @@ def _finish_validation(
             }
         )
 
-    # (8) commit checkpoint after durable write.
+    # (8) commit checkpoint after durable write: the manifest row is the
+    # partition's verdict of record (checkpoint.partition_verdicts reads it).
     if run_manifest is not None and verdicts:
         run_manifest.commit(run_id, verdicts)
-    if output_root and verdicts:
-        spark.createDataFrame(
-            [tuple(v.values()) for v in verdicts],
-            "run_id string, partition_key string, pass boolean, n_rows long, "
-            "n_errors long, n_warnings long, wall_ms long",
-        ).coalesce(1).write.mode("append").parquet(os.path.join(output_root, "partition_verdicts"))
 
     passed = all(v["pass"] for v in verdicts) if verdicts else global_errors == 0
-    passed = passed and all(prior_ok.get(p, True) for p in skipped)
+    passed = passed and all(prior_ok.values())
     return ValidationResult(
         run_id,
         real_violations.select(*[f.name for f in VIOLATION_SCHEMA.fields]),

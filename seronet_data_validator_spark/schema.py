@@ -21,6 +21,7 @@ from seronet_data_validator_spark.model import (
     VIOLATION_SCHEMA,
 )
 from seronet_data_validator_spark.sources.clips import CLIPS_SCHEMA
+from seronet_data_validator_spark.sources.local import local_df
 
 CONTRACTS: dict[str, T.StructType] = {"clips": CLIPS_SCHEMA}
 
@@ -106,7 +107,7 @@ def schema_contract_violations(
     errors = [r for r in rows if r[0] == SEVERITY_ERROR]
     if not errors:
         return None
-    return spark.createDataFrame(rows, VIOLATION_SCHEMA)
+    return local_df(spark, rows, VIOLATION_SCHEMA)
 
 
 def schema_diff(old: DataFrame, new: DataFrame) -> list[dict]:

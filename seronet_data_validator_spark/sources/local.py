@@ -34,12 +34,15 @@ def local_df(spark: SparkSession, rows, schema: str | T.StructType | None = None
         if schema is None:
             return spark.createDataFrame(rows)
         return spark.createDataFrame(rows, schema=schema)
-    rows = list(rows)
+    rows = [tuple(r) for r in rows]
     if not rows:
         return spark.createDataFrame([], schema)
-    pdf = pd.DataFrame.from_records(
-        [tuple(r) for r in rows], columns=[f.name for f in schema.fields]
-    )
+    pdf = pd.DataFrame.from_records(rows, columns=[f.name for f in schema.fields])
+    # pandas widens an integer column holding None to float64, which rounds
+    # values past 2^53; hand Arrow the Python ints instead (None -> NULL)
+    for i, f in enumerate(schema.fields):
+        if isinstance(f.dataType, T.IntegralType) and pdf[f.name].dtype.kind == "f":
+            pdf[f.name] = pd.Series([r[i] for r in rows], dtype=object)
     df = spark.createDataFrame(pdf, schema=schema)
     # createDataFrame slices the pandas frame into defaultParallelism Arrow
     # batches (~3 rows each here): a multi-consumer DAG then schedules that

@@ -40,7 +40,6 @@ from pyspark.sql import types as T
 from seronet_data_validator_spark.operators.sampling import pack_documents
 
 _BLOCK = 512
-_RECORD = 10240  # tarfile RECORDSIZE (20 blocks)
 
 
 def member_footprint(bytes_col: str = "bytes") -> F.Column:
@@ -48,13 +47,6 @@ def member_footprint(bytes_col: str = "bytes") -> F.Column:
     to a 512-B block."""
     sz = F.length(F.col(bytes_col)).cast("long")
     return (F.lit(_BLOCK) + F.ceil(sz / _BLOCK).cast("long") * _BLOCK).cast("long")
-
-
-def archive_len(sum_footprints: F.Column) -> F.Column:
-    """Final archive size: members + 1024 B end-of-archive marker, padded
-    up to the 10240-B record size."""
-    raw = sum_footprints + 2 * _BLOCK
-    return (F.ceil(raw / _RECORD).cast("long") * _RECORD).cast("long")
 
 
 def shard_assignments(

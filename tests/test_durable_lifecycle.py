@@ -1,0 +1,170 @@
+"""Durable lifecycle: a crash at either write boundary of ``validate_clips``
+(violations write, then the run-manifest commit) resumes to the result of an
+uninterrupted run; the manifest keeps NULL metrics and 64-bit counts exactly;
+and a resumed durable run stays within its Spark job budget."""
+
+from __future__ import annotations
+
+import os
+from collections import Counter
+
+import pytest
+from pyspark.sql import DataFrameWriter
+from pyspark.sql import types as T
+
+from seronet_data_validator_spark.checkpoint import RunManifest, partition_verdicts
+from seronet_data_validator_spark.model import VIOLATION_SCHEMA
+from seronet_data_validator_spark.runner import validate_clips
+from seronet_data_validator_spark.sources.clips import SITES, codec_registry_df, generate_clips
+
+RUN = "crash"
+STORED_SCHEMA = T.StructType(
+    list(VIOLATION_SCHEMA.fields) + [T.StructField("site", T.StringType(), True)]
+)
+
+
+class Crash(RuntimeError):
+    """The injected fault."""
+
+
+@pytest.fixture(scope="module")
+def plain_session(spark):
+    """The session with Spark's default (static) partition overwrite mode,
+    restored afterwards."""
+    key = "spark.sql.sources.partitionOverwriteMode"
+    before = spark.conf.get(key)
+    spark.conf.set(key, "static")
+    yield spark
+    spark.conf.set(key, before)
+
+
+@pytest.fixture(scope="module")
+def bad_clips(spark):
+    clips = generate_clips(spark, 200, seed=47, bad=True)
+    assert sorted(r["site"] for r in clips.select("site").distinct().collect()) == SITES
+    return clips
+
+
+def _run(spark, clips, root):
+    # each run executes its plan: no violations served from an earlier
+    # run's persisted result
+    spark.catalog.clearCache()
+    return validate_clips(spark, clips, codec_registry=codec_registry_df(spark),
+                          run_id=RUN, output_root=root, run_audio_pass=False)
+
+
+def _outcome(spark, res, root) -> dict:
+    stored = spark.read.schema(STORED_SCHEMA).parquet(os.path.join(root, "violations", RUN))
+    return {
+        "stored": Counter(tuple(r) for r in stored.collect()),
+        "returned": Counter(tuple(r) for r in res.violations.collect()),
+        "passed": res.passed,
+        "verdicts": [(v["partition_key"], v["pass"], v["n_rows"], v["n_errors"],
+                      v["n_warnings"]) for v in res.verdicts],
+    }
+
+
+@pytest.fixture(scope="module")
+def uninterrupted(plain_session, bad_clips, tmp_path_factory):
+    root = str(tmp_path_factory.mktemp("uninterrupted"))
+    res = _run(plain_session, bad_clips, root)
+    out = _outcome(plain_session, res, root)
+    assert not out["passed"] and out["stored"] and len(out["verdicts"]) == len(SITES)
+    return out
+
+
+def _resume_matches(spark, clips, root, expected) -> None:
+    """Re-run after the crash: every site re-validates and the outcome equals
+    the uninterrupted run's; a further re-run skips every site and keeps the
+    stored exit status."""
+    res = _run(spark, clips, root)
+    assert res.skipped_partitions == []
+    assert _outcome(spark, res, root) == expected
+    again = _run(spark, clips, root)
+    assert again.skipped_partitions == SITES
+    assert again.passed == expected["passed"]
+
+
+def test_crash_in_commit_revalidates_every_site(
+    plain_session, bad_clips, uninterrupted, tmp_path, monkeypatch
+):
+    spark, root = plain_session, str(tmp_path)
+
+    def commit(self, *args, **kwargs):
+        raise Crash("commit")
+
+    with monkeypatch.context() as m:
+        m.setattr(RunManifest, "commit", commit)
+        with pytest.raises(Crash):
+            _run(spark, bad_clips, root)
+    assert os.path.isdir(os.path.join(root, "violations", RUN))
+    assert RunManifest(spark, root).prior_verdicts(RUN) == {}
+    _resume_matches(spark, bad_clips, root, uninterrupted)
+
+
+def test_crash_in_violations_write_commits_nothing(
+    plain_session, bad_clips, uninterrupted, tmp_path, monkeypatch
+):
+    spark, root = plain_session, str(tmp_path)
+    parquet = DataFrameWriter.parquet
+
+    def failing_parquet(self, path, *args, **kwargs):
+        if f"{os.sep}violations{os.sep}" in path:
+            raise Crash("violations write")
+        return parquet(self, path, *args, **kwargs)
+
+    with monkeypatch.context() as m:
+        m.setattr(DataFrameWriter, "parquet", failing_parquet)
+        with pytest.raises(Crash):
+            _run(spark, bad_clips, root)
+    # no partition may be marked done without its violations
+    assert RunManifest(spark, root).prior_verdicts(RUN) == {}
+    assert partition_verdicts(spark, root).count() == 0
+    _resume_matches(spark, bad_clips, root, uninterrupted)
+
+
+def test_manifest_commit_roundtrip_is_exact(spark, tmp_path):
+    """NULL metrics stay NULL (not 0, not NaN) and 64-bit counts survive the
+    commit's pandas/Arrow build exactly."""
+    root = str(tmp_path)
+    committed = [
+        ("a", True, None, 0, 0, None),
+        ("b", False, 2**62, 3, 1, 7),
+        ("c", True, 2**62 + 1, None, 2, 2**53 + 1),
+    ]
+    RunManifest(spark, root).commit("r", [
+        dict(zip(("partition_key", "pass", "n_rows", "n_errors", "n_warnings", "wall_ms"), c))
+        for c in committed
+    ])
+    got = sorted(tuple(r) for r in partition_verdicts(spark, root).collect())
+    assert got == [("r", *c) for c in committed]
+    assert all(v is None or type(v) is int for row in got for v in row[3:])
+    assert RunManifest(spark, root).prior_verdicts("r") == {"a": True, "b": False, "c": True}
+
+
+def test_durable_resume_job_budget(spark, tmp_path):
+    """A resumed durable run with 2 of 4 sites committed runs at most 12
+    Spark jobs: one manifest read and one commit append."""
+    clips = generate_clips(spark, 200, seed=53, bad=True)
+    root = str(tmp_path)
+    RunManifest(spark, root).commit("budget", [
+        {"partition_key": s, "pass": True, "n_rows": 1, "n_errors": 0,
+         "n_warnings": 0, "wall_ms": 0}
+        for s in SITES[:2]
+    ])
+    registry = codec_registry_df(spark)
+    spark.catalog.clearCache()
+    sc = spark.sparkContext
+    group = "durable-resume-job-budget"
+    sc.setJobGroup(group, "validate_clips durable resume")
+    try:
+        res = validate_clips(spark, clips, codec_registry=registry, run_id="budget",
+                             output_root=root, run_qc_pass=True)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert res.skipped_partitions == SITES[:2]
+    tracker = sc.statusTracker()
+    jobs = [tracker.getJobInfo(j) for j in tracker.getJobIdsForGroup(group)]
+    done = [j for j in jobs if j is not None and j.status == "SUCCEEDED"]
+    assert 0 < len(done) <= 12, f"{len(done)} jobs"

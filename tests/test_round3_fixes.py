@@ -1,6 +1,6 @@
-"""Round-3 fix tests: numeric violation sort (W1), manifest compaction,
-JDBC key-list hygiene (S4), static parallelism probe, C19 declared-side
-missing groups."""
+"""Round-3 fix tests: numeric violation sort (W1), manifest compaction and
+the verdict reader over the manifest, JDBC key-list hygiene (S4), static
+parallelism probe, C19 declared-side missing groups."""
 
 from __future__ import annotations
 
@@ -67,29 +67,32 @@ def test_manifest_compact_bounds_file_count(spark, tmp_path):
     # contents survive: every run still reports its committed partition
     for i in range(5):
         assert m.completed_partitions(f"run-{i}") == ["p1"]
-        assert m.prior_verdicts(f"run-{i}", ["p1"]) == {"p1": True}
+        assert m.prior_verdicts(f"run-{i}") == {"p1": True}
 
 
-def test_partition_verdicts_compaction(spark, tmp_path):
-    """Runner appends one coalesce(1) file per run to partition_verdicts;
-    compact_partition_verdicts folds the pile into one file, contents
-    intact."""
-    from seronet_data_validator_spark.checkpoint import compact_partition_verdicts
+def test_partition_verdicts_reads_the_manifest(spark, tmp_path):
+    """The run_manifest row is each partition's one verdict of record:
+    partition_verdicts() returns exactly the verdicts of every committed run,
+    and no second verdict table is written."""
+    from seronet_data_validator_spark.checkpoint import partition_verdicts
+    from seronet_data_validator_spark.model import PARTITION_VERDICT_SCHEMA
     from seronet_data_validator_spark.sources.clips import generate_clips
 
+    root = str(tmp_path)
+    assert partition_verdicts(spark, root).count() == 0
     clips = generate_clips(spark, 40, seed=2)
+    expected = []
     for i in range(3):
-        validate_clips(spark, clips, run_id=f"r{i}", output_root=str(tmp_path),
-                       run_audio_pass=False)
-    path = os.path.join(str(tmp_path), "partition_verdicts")
-    before = glob.glob(os.path.join(path, "*.parquet"))
-    assert len(before) == 3
-    n = compact_partition_verdicts(spark, str(tmp_path))
-    after = glob.glob(os.path.join(path, "*.parquet"))
-    assert len(after) == 1
-    df = spark.read.parquet(path)
-    assert df.count() == n
-    assert df.select("run_id").distinct().count() == 3
+        res = validate_clips(spark, clips, run_id=f"r{i}", output_root=root,
+                             run_audio_pass=False)
+        expected += [tuple(v.values()) for v in res.verdicts]
+    assert len(expected) == 3 * 4
+    df = partition_verdicts(spark, root)
+    assert df.schema.names == PARTITION_VERDICT_SCHEMA.names
+    assert [f.dataType for f in df.schema.fields] == [
+        f.dataType for f in PARTITION_VERDICT_SCHEMA.fields]
+    assert sorted(tuple(r) for r in df.collect()) == sorted(expected)
+    assert not os.path.exists(os.path.join(root, "partition_verdicts"))
 
 
 def test_manifest_corrupt_read_raises_not_swallows(spark, tmp_path):
