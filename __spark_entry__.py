@@ -4654,9 +4654,11 @@ GROUP BY clip_id
             FROM feat f JOIN scales sc USING (clip_id)
         """,
         # Replays the int64 autocorrelation over the five-kind QC recipe:
-        # r(L) = SUM(s_i * s_{i+L}) via a shifted self-join, argmax with
-        # the operator's smallest-lag tie-break (ORDER BY r DESC, lag ASC),
-        # periodicity as the one BIGINT/BIGINT -> DOUBLE division.
+        # r(L) = SUM(s_i * s_{i+L}) via a shifted self-join (j = i + L is
+        # projected first, so the join is a hash equi-join, not a nested
+        # loop), argmax with the operator's smallest-lag tie-break (ORDER BY
+        # r DESC, lag ASC), periodicity as the one BIGINT/BIGINT -> DOUBLE
+        # division.
         "pitch_lag": """
             WITH ks AS (
                 SELECT CAST(range AS BIGINT) AS k FROM range(0, 24)
@@ -4682,12 +4684,12 @@ GROUP BY clip_id
             ), lags AS (
                 SELECT CAST(UNNEST(range(8, 201)) AS BIGINT) AS lag
             ), prods AS (
-                SELECT a.clip_id, l.lag,
+                SELECT a.clip_id, a.lag,
                        CAST(SUM(a.s * b.s) AS BIGINT) AS r
-                FROM vals a
-                JOIN lags l ON TRUE
-                JOIN vals b ON b.clip_id = a.clip_id AND b.i = a.i + l.lag
-                GROUP BY a.clip_id, l.lag
+                FROM (SELECT v.clip_id, v.s, l.lag, v.i + l.lag AS j
+                      FROM vals v CROSS JOIN lags l) a
+                JOIN vals b ON b.clip_id = a.clip_id AND b.i = a.j
+                GROUP BY a.clip_id, a.lag
             ), zeros AS (
                 SELECT clip_id, COUNT(*) AS n_samples,
                        CAST(SUM(s * s) AS BIGINT) AS r_zero

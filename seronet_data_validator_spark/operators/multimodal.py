@@ -147,75 +147,6 @@ def audio_resample(clips: DataFrame, target_sr: int, *, id_col: str = "clip_id")
     return src.mapInArrow(run, schema=RESAMPLED_SCHEMA)
 
 
-TRIMMED_SCHEMA = T.StructType(
-    [
-        T.StructField("clip_id", T.StringType()),
-        T.StructField("bytes", T.BinaryType()),
-        T.StructField("sr_hz", T.IntegerType()),
-        T.StructField("trimmed_head_ms", T.IntegerType()),
-        T.StructField("trimmed_tail_ms", T.IntegerType()),
-    ]
-)
-
-
-def audio_trim_silence(
-    clips: DataFrame,
-    *,
-    frame_ms: int = 25,
-    rms_threshold: float = 0.01,
-    id_col: str = "clip_id",
-) -> DataFrame:
-    """Strip leading/trailing silence — the standard speech-dataset prep
-    step before training (silence carries no transcript signal and skews
-    the duration/speech-rate invariants). Frames of ``frame_ms`` whose RMS
-    is below ``rms_threshold`` (full-scale fraction) are silence; the clip
-    is cut to [first active frame, last active frame], re-encoded as WAV,
-    and the removed head/tail durations are reported so the declared
-    ``dur_ms`` can be re-validated downstream. An all-silent clip keeps
-    one frame rather than emitting zero-length audio.
-
-    Same execution shape as `audio_resample`: narrow mapInArrow (no
-    shuffle), zero-copy byte views in, vectorized numpy per clip —
-    per-partition cost is pure decode+frame-RMS arithmetic, so the stage
-    scales with executors like every other payload pass."""
-    src = clips.select(id_col, "bytes")
-
-    def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for batch in batches:
-            ids, blobs, srs, heads, tails = [], [], [], [], []
-            for _, cid, pcm, sr in _decoded_rows(batch, id_col):
-                ids.append(cid)
-                if pcm is None:
-                    blobs.append(None); srs.append(None)
-                    heads.append(None); tails.append(None)
-                    continue
-                flen = max(1, int(sr * frame_ms / 1000))
-                n_frames = max(1, len(pcm) // flen)
-                usable = pcm[: n_frames * flen]
-                frames = usable.reshape(n_frames, flen)
-                rms = np.sqrt(np.mean(frames.astype(np.float64) ** 2, axis=1))
-                active = np.nonzero(rms >= rms_threshold)[0]
-                if len(active) == 0:
-                    first, last = 0, 0
-                else:
-                    first, last = int(active[0]), int(active[-1])
-                # tail keeps the remainder samples after the last full frame
-                end = len(pcm) if last == n_frames - 1 else (last + 1) * flen
-                out = pcm[first * flen : end]
-                blobs.append(wav_bytes((out * 32767).astype(np.int16), sr))
-                srs.append(sr)
-                heads.append(int(first * flen * 1000 / sr))
-                tails.append(int((len(pcm) - end) * 1000 / sr))
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(ids, pa.string()), pa.array(blobs, pa.binary()),
-                 pa.array(srs, pa.int32()), pa.array(heads, pa.int32()),
-                 pa.array(tails, pa.int32())],
-                ["clip_id", "bytes", "sr_hz", "trimmed_head_ms", "trimmed_tail_ms"],
-            )
-
-    return src.mapInArrow(run, schema=TRIMMED_SCHEMA)
-
-
 FRAME_SAMPLE_SCHEMA = T.StructType(
     [
         T.StructField("clip_id", T.StringType()),
@@ -271,13 +202,6 @@ def ppm_bytes(rgb: np.ndarray) -> bytes:
     the decode path below."""
     h, w, _ = rgb.shape
     return f"P6\n{w} {h}\n255\n".encode() + rgb.astype(np.uint8).tobytes()
-
-
-def pgm_bytes(gray: np.ndarray) -> bytes:
-    """Minimal binary PGM (P5, maxval 255) encoder — public netpbm spec.
-    ``gray``: (h, w) uint8."""
-    h, w = gray.shape
-    return f"P5\n{w} {h}\n255\n".encode() + gray.astype(np.uint8).tobytes()
 
 
 def bmp_bytes(rgb: np.ndarray) -> bytes:
@@ -798,89 +722,6 @@ def video_frames(
             )
 
     return src.mapInArrow(run, schema=VIDEO_FRAMES_SCHEMA)
-
-
-IMAGE_RESIZED_SCHEMA = T.StructType(
-    [
-        T.StructField("item_id", T.StringType()),
-        T.StructField("bytes", T.BinaryType()),
-        T.StructField("width", T.IntegerType()),
-        T.StructField("height", T.IntegerType()),
-    ]
-)
-
-
-def _resize_rgb(px: np.ndarray, out_w: int, out_h: int, *, bilinear: bool) -> np.ndarray:
-    """Pure-numpy image resize, fully vectorized. Nearest: one fancy-index
-    gather. Bilinear: four gathers + separable weights (align-corners=False
-    / half-pixel-centers convention, the one PIL/cv2 default to)."""
-    h, w, _ = px.shape
-    if not bilinear:
-        yi = np.minimum((np.arange(out_h) + 0.5) * h / out_h, h - 1).astype(int)
-        xi = np.minimum((np.arange(out_w) + 0.5) * w / out_w, w - 1).astype(int)
-        return px[yi][:, xi]
-    ys = (np.arange(out_h) + 0.5) * h / out_h - 0.5
-    xs = (np.arange(out_w) + 0.5) * w / out_w - 0.5
-    y0 = np.clip(np.floor(ys).astype(int), 0, h - 1)
-    x0 = np.clip(np.floor(xs).astype(int), 0, w - 1)
-    y1 = np.minimum(y0 + 1, h - 1)
-    x1 = np.minimum(x0 + 1, w - 1)
-    wy = np.clip(ys - y0, 0.0, 1.0)[:, None, None]
-    wx = np.clip(xs - x0, 0.0, 1.0)[None, :, None]
-    p = px.astype(np.float32)
-    top = p[y0][:, x0] * (1 - wx) + p[y0][:, x1] * wx
-    bot = p[y1][:, x0] * (1 - wx) + p[y1][:, x1] * wx
-    out = top * (1 - wy) + bot * wy
-    return np.clip(np.rint(out), 0, 255).astype(np.uint8)
-
-
-def image_resize(
-    images: DataFrame,
-    target_w: int,
-    target_h: int,
-    *,
-    method: str = "bilinear",
-    id_col: str = "item_id",
-    bytes_col: str = "bytes",
-) -> DataFrame:
-    """Image resize over the binary column — the 'resize' leg of the image
-    path (decode → features → RESIZE → batch), the preprocessing step a
-    vision model's fixed input size forces on every training image. Decodes
-    natively-supported formats (PPM/PGM/BMP; compressed formats skip, as in
-    `image_features`), resizes with vectorized numpy (nearest or
-    half-pixel-centers bilinear — PIL/cv2's default convention), re-encodes
-    as PPM. Narrow mapInArrow; undecodable rows emit NULL bytes so the
-    caller can route them to quarantine rather than lose the ids."""
-    if method not in ("nearest", "bilinear"):
-        raise ValueError(f"unknown resize method {method!r}")
-    src = images.select(id_col, bytes_col)
-
-    def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for batch in batches:
-            ids = batch.column(0).to_pylist()
-            get, _ = _binary_views(batch.column(1))
-            oi, ob, ow, oh = [], [], [], []
-            for i in range(batch.num_rows):
-                seg = get(i)
-                oi.append(ids[i])
-                try:
-                    blob = seg.tobytes() if seg is not None else None
-                    _, _, px = _decode_image(blob)
-                except (ValueError, NotImplementedError):
-                    ob.append(None); ow.append(None); oh.append(None)
-                    continue
-                out = _resize_rgb(px, target_w, target_h,
-                                  bilinear=(method == "bilinear"))
-                ob.append(ppm_bytes(out))
-                ow.append(target_w)
-                oh.append(target_h)
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(oi, pa.string()), pa.array(ob, pa.binary()),
-                 pa.array(ow, pa.int32()), pa.array(oh, pa.int32())],
-                ["item_id", "bytes", "width", "height"],
-            )
-
-    return src.mapInArrow(run, schema=IMAGE_RESIZED_SCHEMA)
 
 
 def clip_chunks(

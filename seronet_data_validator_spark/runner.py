@@ -3,11 +3,12 @@
 validate_clips(): (1) schema contract (driver-side, C21) → (2) resume filter
 (skip checkpointed partitions) → (3) ONE fused row-level rule pass →
 (4) uniqueness + referential + count-reconciliation table passes →
-(5) decoded-PCM invariant pass (Arrow pandas UDF) → (6) union violations →
-(7) per-partition verdicts (pass = zero Error rows, the reference's verdict
-at /root/reference/Data_Validation_v1.py:191-199) → (8) write violations,
-then commit one run-manifest row per partition: that row is the verdict of
-record, read back by ``checkpoint.partition_verdicts``.
+(5) decoded-PCM invariant pass (Arrow pandas UDF) → (6) union violations and
+per-partition row counts → (7) persist; ONE aggregation gives the verdicts
+(pass = zero Error rows, the reference's Data_Validation_v1.py:191-199) →
+(8) durable runs write the violations from the cache, release it, commit one
+run-manifest row per partition (the verdict of record, read back by
+``checkpoint.partition_verdicts``) and return the stored read.
 
 Plan shape at scale: pass (3) and (5) are narrow (no shuffle); (4) shuffles
 once per distinct aggregation key; the verdict aggregation reuses the
@@ -20,7 +21,7 @@ from __future__ import annotations
 
 import os
 import time
-from dataclasses import dataclass, field
+from dataclasses import dataclass, field, replace
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -83,15 +84,18 @@ class SiteConsistencySpec:
 
 @dataclass
 class ValidationResult:
+    """``violations`` of a durable run (``output_root``) is a lazy read of
+    the stored violations of ``run_id``, skipped partitions included; the
+    run has released its cache. An in-memory run's ``violations`` reads the
+    persisted result, which the caller owns: it stays cached until the
+    caller runs ``spark.catalog.clearCache()`` (``unpersist()`` on the
+    returned frame does not match the cached plan)."""
+
     run_id: str
     violations: DataFrame
     verdicts: list[dict] = field(default_factory=list)
     passed: bool = True
     skipped_partitions: list[str] = field(default_factory=list)
-
-
-def _empty_violations(spark: SparkSession) -> DataFrame:
-    return spark.createDataFrame([], VIOLATION_SCHEMA)
 
 
 # Compiled-plan cache (PREPARED-STATEMENT reuse, not result caching): the
@@ -149,6 +153,7 @@ def validate_clips(
       bias → Warnings. Beyond-reference: the audio analog of the
       reference's per-cell value rules, as a second narrow Arrow pass.
     """
+    t0 = time.perf_counter()
     rs = ruleset or clips_ruleset()
 
     # (1) schema contract — metadata-only, gates like the reference's
@@ -162,34 +167,27 @@ def validate_clips(
     # manifest read gives both the skip list and the exit-status contract:
     # skipped partitions keep their STORED verdict — a failed dataset must
     # not report clean on re-run just because its partitions are committed.
+    # The declared sides of C18 and C19 lose the skipped partitions too, or
+    # their now-absent clips would read as missing.
     run_manifest = RunManifest(spark, output_root) if output_root else None
     prior_ok = run_manifest.prior_verdicts(run_id) if run_manifest else {}
     skipped = sorted(prior_ok)
     if run_manifest is not None:
         clips = run_manifest.resume_filter(clips, skipped, partition_column)
-
-    # Per-partition row counts are needed for verdicts. In the hot path they
-    # are FOLDED into the single heavy job as pseudo-rows (each Spark job
-    # carries ~0.5 s of fixed driver/stage latency that the 4N-core side pays
-    # proportionally more for); a separate up-front count job runs only when
-    # resume needs it to short-circuit, or when a durable write will split
-    # the aggregation anyway.
-    fold_counts = output_root is None and not skipped
-    row_counts: dict | None = None
-    if not fold_counts:
-        row_counts = {
-            r[partition_column]: r["n"]
-            for r in clips.groupBy(partition_column).agg(F.count(F.lit(1)).alias("n")).collect()
-        }
-        if skipped and not row_counts:
-            return ValidationResult(
-                run_id, _empty_violations(spark), [], all(prior_ok.values()), skipped,
+        if manifest is not None:
+            manifest = run_manifest.resume_filter(manifest, skipped, partition_column)
+        if site_consistency is not None and site_consistency.group_col == partition_column:
+            site_consistency = replace(
+                site_consistency,
+                declared=run_manifest.resume_filter(
+                    site_consistency.declared, skipped, partition_column),
             )
 
-    # Prepared-plan reuse (see _PLAN_CACHE): hot path only — durable runs
-    # (output_root) and resume interact with external state per call.
+    # Prepared-plan reuse (see _PLAN_CACHE): in-memory runs without a C18
+    # manifest only — durable runs (output_root) interact with external
+    # state per call, and the manifest is not part of the key.
     plan_key = None
-    if fold_counts and manifest is None:
+    if output_root is None and manifest is None:
         plan_key = (
             spark.sparkContext.applicationId,
             id(clips), id(codec_registry), id(reference_clips),
@@ -200,8 +198,8 @@ def validate_clips(
         hit = _PLAN_CACHE.get(plan_key)
         if hit is not None:
             return _finish_validation(
-                spark, hit["plan"], run_id, partition_column, fold_counts,
-                output_root, run_manifest, skipped, prior_ok, row_counts,
+                spark, hit["plan"], run_id, partition_column,
+                output_root, run_manifest, skipped, prior_ok, t0,
             )
 
     parts = violation_families(
@@ -219,25 +217,24 @@ def validate_clips(
     # it deterministic under any partitioning; rule_id breaks ties within a
     # pass. Violations are tiny relative to the input, so the dedup shuffle is
     # negligible at scale.
-    if fold_counts:
-        # pseudo-rows carrying per-partition input counts: table_name
-        # '__rows__' (never written, never returned), row_ref = the partition
-        # key so the dedup window keys stay unique.
-        counts_rows = (
-            clips.groupBy(partition_column)
-            .agg(F.count(F.lit(1)).alias("_n"))
-            .select(
-                F.col(partition_column),
-                F.lit("__rows__").alias("severity"),
-                F.lit("__rows__").alias("table_name"),
-                F.col(partition_column).cast("string").alias("row_ref"),
-                F.lit("").alias("column_name"),
-                F.lit("").alias("column_value"),
-                F.lit("").alias("rule_id"),
-                F.col("_n").cast("string").alias("message"),
-            )
+    # pseudo-rows carrying per-partition input counts, so the one verdict
+    # aggregation also counts rows (no separate count job): table_name
+    # '__rows__' (never written, never returned), row_ref = the partition key
+    # so the dedup window keys stay unique.
+    parts.append(
+        clips.groupBy(partition_column)
+        .agg(F.count(F.lit(1)).alias("_n"))
+        .select(
+            F.col(partition_column),
+            F.lit("__rows__").alias("severity"),
+            F.lit("__rows__").alias("table_name"),
+            F.col(partition_column).cast("string").alias("row_ref"),
+            F.lit("").alias("column_name"),
+            F.lit("").alias("column_value"),
+            F.lit("").alias("rule_id"),
+            F.col("_n").cast("string").alias("message"),
         )
-        parts.append(counts_rows)
+    )
 
     violations = dedup_violations(union_violation_parts(parts), order_col="_ord")
 
@@ -252,8 +249,8 @@ def validate_clips(
         }
 
     return _finish_validation(
-        spark, violations, run_id, partition_column, fold_counts,
-        output_root, run_manifest, skipped, prior_ok, row_counts,
+        spark, violations, run_id, partition_column,
+        output_root, run_manifest, skipped, prior_ok, t0,
     )
 
 
@@ -402,72 +399,70 @@ def _finish_validation(
     violations: DataFrame,
     run_id: str,
     partition_column: str,
-    fold_counts: bool,
     output_root: str | None,
     run_manifest: RunManifest | None,
     skipped: list[str],
     prior_ok: dict[str, bool],
-    row_counts: dict | None,
+    t0: float,
 ) -> ValidationResult:
-    """Steps (6b)-(8): persist, write, verdict aggregation, commit — the
-    per-run execution tail shared by fresh and prepared-plan calls."""
-    # Violations feed ≥2 actions (write/severity counts/caller inspection) —
-    # persist so the expensive passes (audio decode, joins) run ONCE.
+    """Steps (7)-(8): persist, verdict aggregation, write, commit — the one
+    execution tail of fresh and prepared-plan calls. ``t0`` is the call's
+    start, so ``wall_ms`` covers the whole call up to the commit."""
+    # Violations feed the aggregation, then the write or the caller — persist
+    # so the expensive passes (audio decode, joins) run ONCE; the aggregation
+    # fills the cache.
     violations = violations.persist(StorageLevel.MEMORY_AND_DISK)
-    real_violations = (
-        violations.where(F.col("table_name") != "__rows__") if fold_counts else violations
-    )
+    real_violations = violations.where(F.col("table_name") != "__rows__")
 
-    # (7) per-partition verdicts: one aggregation over row counts + one over
-    # violations, joined driver-side (both tiny).
-    t0 = time.perf_counter()
-    if output_root:
-        (
-            # W1/S5: the reference writes error files sorted by Row_Index
-            # (File_Submission_Object.py:796-799) — NUMERICALLY ("2" before
-            # "10"); try_cast orders numeric refs as longs with non-numeric
-            # refs after, lexicographic within. sortWithinPartitions keeps
-            # the sort shuffle-free (per output file, not global).
-            real_violations.sortWithinPartitions(
-                F.col("row_ref").try_cast("long").asc_nulls_last(), "row_ref"
+    try:
+        # (7) ONE aggregation drives both severity counts and row counts.
+        agg_rows = (
+            violations.groupBy(partition_column, "severity")
+            .agg(F.count(F.lit(1)).alias("n"), F.max("message").alias("_msg"))
+            .collect()
+        )
+        sev_counts = {(r[partition_column], r["severity"]): r["n"] for r in agg_rows}
+        row_counts = {r[partition_column]: int(r["_msg"])
+                      for r in agg_rows if r["severity"] == "__rows__"}
+        if skipped and not row_counts:
+            # every partition was committed by an earlier call: nothing to write
+            return ValidationResult(
+                run_id, spark.createDataFrame([], VIOLATION_SCHEMA), [],
+                all(prior_ok.values()), skipped,
             )
-            # dynamic on the write itself: under a session whose default is
-            # static, overwrite would delete the partitions resume skipped
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy(partition_column)
-            .parquet(os.path.join(output_root, "violations", run_id))
-        )
-        # explicit schema: survives an all-clean (empty) write and keeps the
-        # partition-dir value a string instead of type-inferring "11" -> 11
-        stored_schema = T.StructType(
-            list(VIOLATION_SCHEMA.fields)
-            + [T.StructField(partition_column, T.StringType(), True)]
-        )
-        v_stored = spark.read.schema(stored_schema).parquet(
-            os.path.join(output_root, "violations", run_id)
-        )
-    else:
-        v_stored = violations
-    # ONE aggregation drives both severity counts and (hot path) row counts.
-    agg_rows = (
-        v_stored.groupBy(partition_column, "severity")
-        .agg(F.count(F.lit(1)).alias("n"), F.max("message").alias("_msg"))
-        .collect()
-    )
-    sev_counts = {
-        (r[partition_column], r["severity"]): r["n"]
-        for r in agg_rows
-        if r["severity"] != "__rows__"
-    }
-    if row_counts is None:
-        row_counts = {
-            r[partition_column]: int(r["_msg"])
-            for r in agg_rows
-            if r["severity"] == "__rows__"
-        }
-    wall_ms = int((time.perf_counter() - t0) * 1000)
 
+        if output_root:
+            path = os.path.join(output_root, "violations", run_id)
+            (
+                # W1/S5: the reference writes error files sorted by Row_Index
+                # (File_Submission_Object.py:796-799) — NUMERICALLY ("2" before
+                # "10", non-numeric refs after). sortWithinPartitions keeps it
+                # shuffle-free; the partition column leads so the writer keeps
+                # this order instead of re-sorting by partition alone.
+                real_violations.sortWithinPartitions(
+                    partition_column,
+                    F.col("row_ref").try_cast("long").asc_nulls_last(),
+                    "row_ref",
+                )
+                # dynamic on the write itself: under a session whose default is
+                # static, overwrite would delete the partitions resume skipped
+                .write.mode("overwrite")
+                .option("partitionOverwriteMode", "dynamic")
+                .partitionBy(partition_column)
+                .parquet(path)
+            )
+            # the caller gets exactly what is durable. Explicit schema: an
+            # all-clean (empty) write reads back, and "11" stays a string
+            real_violations = spark.read.schema(T.StructType(
+                list(VIOLATION_SCHEMA.fields)
+                + [T.StructField(partition_column, T.StringType(), True)]
+            )).parquet(path)
+    finally:
+        # a durable call releases its cache on every exit, a failed one too
+        if output_root:
+            violations.unpersist()
+
+    wall_ms = int((time.perf_counter() - t0) * 1000)
     verdicts = []
     # verdicts only for partitions processed THIS run (resume keeps old ones)
     all_parts = sorted(k for k in row_counts if k is not None)
@@ -480,7 +475,7 @@ def _finish_validation(
                 "run_id": run_id,
                 "partition_key": pk,
                 "pass": n_err == 0 and global_errors == 0,
-                "n_rows": row_counts.get(pk, 0),
+                "n_rows": row_counts[pk],
                 "n_errors": n_err,
                 "n_warnings": n_warn,
                 "wall_ms": wall_ms,

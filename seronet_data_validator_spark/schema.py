@@ -108,34 +108,3 @@ def schema_contract_violations(
     if not errors:
         return None
     return local_df(spark, rows, VIOLATION_SCHEMA)
-
-
-def schema_diff(old: DataFrame, new: DataFrame) -> list[dict]:
-    """Schema-evolution report between two snapshots of the same table —
-    the metadata companion to `operators/integrity.snapshot_diff`'s row
-    diff: columns added, removed, or type-changed. Pure metadata (no job
-    runs); C21's contract gate asks "does THIS table match the declared
-    template", this asks "what moved between versions" — the question a
-    pipeline owner triages before re-pointing downstream readers.
-
-    Returns [{change, column, old_type, new_type}] sorted by column;
-    nullability changes report as type changes (a column going
-    nullable→required is a contract change downstream writers feel)."""
-    o = {f.name: f for f in old.schema.fields}
-    n = {f.name: f for f in new.schema.fields}
-    out: list[dict] = []
-    for name in sorted(o.keys() | n.keys()):
-        fo, fn = o.get(name), n.get(name)
-        if fo is None:
-            out.append({"change": "added", "column": name,
-                        "old_type": None, "new_type": fn.dataType.simpleString()})
-        elif fn is None:
-            out.append({"change": "removed", "column": name,
-                        "old_type": fo.dataType.simpleString(), "new_type": None})
-        elif fo.dataType != fn.dataType or fo.nullable != fn.nullable:
-            fmt = lambda f: f.dataType.simpleString() + (
-                "" if f.nullable else " not null"
-            )
-            out.append({"change": "type_changed", "column": name,
-                        "old_type": fmt(fo), "new_type": fmt(fn)})
-    return out

@@ -204,24 +204,3 @@ def test_run_validation_cli_rule_pack(spark, tmp_path):
          "--run-id", "p2", "--skip-audio", "--rule-pack", json.dumps(loose)]
     )
     assert rc2 == 0
-
-
-def test_read_jsonl_clean_and_quarantine(spark, tmp_path):
-    from seronet_data_validator_spark.sources.jsonl import read_jsonl
-
-    p = str(tmp_path / "shard.jsonl")
-    with open(p, "w") as f:
-        f.write('{"doc_id": 1, "text": "alpha", "n": 10}\n')
-        f.write('{"doc_id": 2, "text": "beta"}\n')          # missing field -> NULL
-        f.write('{"doc_id": "x3", "text": "gamma", "n": 5}\n')  # type mismatch -> NULL field
-        f.write('this is not json at all\n')                 # quarantine
-        f.write('{"broken": \n')                             # quarantine
-    clean, quarantine = read_jsonl(spark, p, "doc_id long, text string, n long")
-    rows = {r["text"]: r for r in clean.collect() if r["text"]}
-    assert rows["alpha"]["doc_id"] == 1 and rows["alpha"]["n"] == 10
-    assert rows["beta"]["n"] is None          # missing field -> NULL, stays clean
-    assert "gamma" not in rows                # type mismatch -> quarantined line
-    q = [r["raw_line"] for r in quarantine.collect()]
-    assert any("not json" in x for x in q)
-    assert any("gamma" in x for x in q)       # raw line preserved for re-parse
-    assert len(q) == 3

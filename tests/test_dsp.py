@@ -154,35 +154,6 @@ def test_audio_near_duplicates_param_validation(spark):
         audio_near_duplicates(df, max_hamming=16, n_bands_lsh=16)
 
 
-def test_audio_trim_silence(spark):
-    from seronet_data_validator_spark.operators.multimodal import audio_trim_silence
-    from seronet_data_validator_spark.sources.clips import decode_wav
-
-    sr = 8000
-    silence = np.zeros(int(sr * 0.2), dtype=np.float32)          # 200 ms
-    tone = _tone(440, sr, 500, amp=0.6, noise=0.0)               # 500 ms
-    clip = np.concatenate([silence, tone, silence, silence])     # 200|500|400
-    df = _clips_df(spark, [("c1", _wav(clip, sr)), ("c2", _wav(silence, sr))])
-
-    out = {r["clip_id"]: r for r in audio_trim_silence(df, frame_ms=25).collect()}
-    c1 = out["c1"]
-    # 200 ms head and 400 ms tail removed, to 25 ms frame resolution
-    assert abs(c1["trimmed_head_ms"] - 200) <= 25
-    assert abs(c1["trimmed_tail_ms"] - 400) <= 25
-    pcm, sr2 = decode_wav(bytes(c1["bytes"]))
-    assert sr2 == sr
-    kept_ms = len(pcm) * 1000 / sr
-    assert abs(kept_ms - 500) <= 50
-    # trimmed audio is the loud part: RMS close to the tone's
-    # (decode_wav returns [-1, 1] floats)
-    rms = float(np.sqrt(np.mean(np.asarray(pcm, dtype=np.float64) ** 2)))
-    assert rms > 0.3
-    # an all-silent clip keeps one frame instead of zero-length audio
-    c2 = out["c2"]
-    pcm2, _ = decode_wav(bytes(c2["bytes"]))
-    assert len(pcm2) >= int(sr * 0.025)
-
-
 def test_transcript_cer(spark):
     from seronet_data_validator_spark.operators.audio import transcript_cer
 
@@ -280,43 +251,6 @@ def test_video_frames_y4m(spark):
         assert r["mean_luma"] == 10.0 * fi and r["std_luma"] == 0.0
     # compressed/garbage items are skipped, not crashed
     assert all(k[0] == "v1" for k in got)
-
-
-def test_image_resize_nearest_and_bilinear(spark):
-    from seronet_data_validator_spark.operators.multimodal import (
-        _decode_image,
-        image_resize,
-        ppm_bytes,
-    )
-
-    # 2x2 checkerboard: nearest upscale 4x4 keeps exact quadrant blocks
-    rgb = np.zeros((2, 2, 3), np.uint8)
-    rgb[0, 1] = rgb[1, 0] = 255
-    rows = [("a", bytearray(ppm_bytes(rgb))), ("bad", bytearray(b"\x89PNG..."))]
-    df = spark.createDataFrame(rows, "item_id string, bytes binary")
-
-    out = {r["item_id"]: r for r in
-           image_resize(df, 4, 4, method="nearest").collect()}
-    w, h, px = _decode_image(bytes(out["a"]["bytes"]))
-    assert (w, h) == (4, 4)
-    assert np.array_equal(px[:2, :2], np.zeros((2, 2, 3), np.uint8))
-    assert np.array_equal(px[:2, 2:], np.full((2, 2, 3), 255, np.uint8))
-    assert out["bad"]["bytes"] is None        # quarantine, ids preserved
-
-    # bilinear downscale of a constant image stays constant (no ringing);
-    # a horizontal ramp downsamples to its midpoints
-    const = np.full((8, 8, 3), 77, np.uint8)
-    ramp = np.tile(np.arange(0, 256, 32, dtype=np.uint8)[None, :, None], (8, 1, 3))
-    df2 = spark.createDataFrame(
-        [("c", bytearray(ppm_bytes(const))), ("r", bytearray(ppm_bytes(ramp)))],
-        "item_id string, bytes binary",
-    )
-    out2 = {r["item_id"]: r for r in image_resize(df2, 4, 4).collect()}
-    _, _, pc = _decode_image(bytes(out2["c"]["bytes"]))
-    assert np.all(pc == 77)
-    _, _, pr = _decode_image(bytes(out2["r"]["bytes"]))
-    # ramp columns 0,32,64,... pair-averaged -> 16, 80, 144, 208
-    assert list(pr[0, :, 0]) == [16, 80, 144, 208]
 
 
 def test_audio_basic_features_exact(spark):

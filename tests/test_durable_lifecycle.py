@@ -1,20 +1,25 @@
 """Durable lifecycle: a crash at either write boundary of ``validate_clips``
 (violations write, then the run-manifest commit) resumes to the result of an
 uninterrupted run; the manifest keeps NULL metrics and 64-bit counts exactly;
-and a resumed durable run stays within its Spark job budget."""
+a resumed durable run stays within its Spark job budget, leaves nothing
+cached and does not flag the sites it skipped; and ``wall_ms`` times the
+whole call."""
 
 from __future__ import annotations
 
 import os
+import time
 from collections import Counter
 
 import pytest
 from pyspark.sql import DataFrameWriter
+from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from seronet_data_validator_spark import runner
 from seronet_data_validator_spark.checkpoint import RunManifest, partition_verdicts
-from seronet_data_validator_spark.model import VIOLATION_SCHEMA
-from seronet_data_validator_spark.runner import validate_clips
+from seronet_data_validator_spark.model import SEVERITY_ERROR, VIOLATION_SCHEMA
+from seronet_data_validator_spark.runner import SiteConsistencySpec, validate_clips
 from seronet_data_validator_spark.sources.clips import SITES, codec_registry_df, generate_clips
 
 RUN = "crash"
@@ -51,6 +56,14 @@ def _run(spark, clips, root):
     spark.catalog.clearCache()
     return validate_clips(spark, clips, codec_registry=codec_registry_df(spark),
                           run_id=RUN, output_root=root, run_audio_pass=False)
+
+
+def _commit_passed(spark, root, run_id, sites):
+    RunManifest(spark, root).commit(run_id, [
+        {"partition_key": s, "pass": True, "n_rows": 1, "n_errors": 0,
+         "n_warnings": 0, "wall_ms": 0}
+        for s in sites
+    ])
 
 
 def _outcome(spark, res, root) -> dict:
@@ -117,7 +130,9 @@ def test_crash_in_violations_write_commits_nothing(
         m.setattr(DataFrameWriter, "parquet", failing_parquet)
         with pytest.raises(Crash):
             _run(spark, bad_clips, root)
-    # no partition may be marked done without its violations
+    # the failed call released its cache; no partition may be marked done
+    # without its violations
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
     assert RunManifest(spark, root).prior_verdicts(RUN) == {}
     assert partition_verdicts(spark, root).count() == 0
     _resume_matches(spark, bad_clips, root, uninterrupted)
@@ -143,15 +158,12 @@ def test_manifest_commit_roundtrip_is_exact(spark, tmp_path):
 
 
 def test_durable_resume_job_budget(spark, tmp_path):
-    """A resumed durable run with 2 of 4 sites committed runs at most 12
-    Spark jobs: one manifest read and one commit append."""
+    """A resumed durable run with 2 of 4 sites committed runs at most 11
+    Spark jobs: one manifest read, no separate row-count job, and one commit
+    append."""
     clips = generate_clips(spark, 200, seed=53, bad=True)
     root = str(tmp_path)
-    RunManifest(spark, root).commit("budget", [
-        {"partition_key": s, "pass": True, "n_rows": 1, "n_errors": 0,
-         "n_warnings": 0, "wall_ms": 0}
-        for s in SITES[:2]
-    ])
+    _commit_passed(spark, root, "budget", SITES[:2])
     registry = codec_registry_df(spark)
     spark.catalog.clearCache()
     sc = spark.sparkContext
@@ -167,4 +179,72 @@ def test_durable_resume_job_budget(spark, tmp_path):
     tracker = sc.statusTracker()
     jobs = [tracker.getJobInfo(j) for j in tracker.getJobIdsForGroup(group)]
     done = [j for j in jobs if j is not None and j.status == "SUCCEEDED"]
-    assert 0 < len(done) <= 12, f"{len(done)} jobs"
+    assert 0 < len(done) <= 11, f"{len(done)} jobs"
+
+
+def test_durable_run_releases_its_cache(spark, bad_clips, tmp_path):
+    """A durable call leaves the session's cache empty, whether it writes
+    or finds every partition committed, and returns the stored violations."""
+    spark.catalog.clearCache()
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    root = str(tmp_path)
+    res = validate_clips(spark, bad_clips, codec_registry=codec_registry_df(spark),
+                         run_id="cache", output_root=root, run_audio_pass=False)
+    assert cache.isEmpty()
+    stored = spark.read.schema(STORED_SCHEMA).parquet(os.path.join(root, "violations", "cache"))
+    assert Counter(tuple(r) for r in res.violations.collect()) == Counter(
+        tuple(r)[:-1] for r in stored.collect())
+    again = validate_clips(spark, bad_clips, codec_registry=codec_registry_df(spark),
+                           run_id="cache", output_root=root, run_audio_pass=False)
+    assert again.skipped_partitions == SITES
+    assert again.passed is False and again.verdicts == []
+    assert again.violations.count() == 0
+    assert cache.isEmpty()
+
+
+@pytest.mark.parametrize("declared_side", ["site_consistency", "manifest"])
+def test_resume_does_not_flag_skipped_sites(spark, tmp_path, declared_side):
+    """The resume filter prunes the committed sites from the declared side
+    of C19 and C18 as well as from the clips: on the Good fixture, a run
+    resumed with 2 of 4 sites committed passes like the full run."""
+    clips = generate_clips(spark, 400, seed=42, bad=False)
+    if declared_side == "site_consistency":
+        declared = spark.createDataFrame(
+            [(s, "pcm_s16le") for s in SITES], "site string, declared_codec string")
+        kw = {"site_consistency": SiteConsistencySpec(declared=declared)}
+    else:
+        per_site = sorted(tuple(r) for r in clips.groupBy("site").count().collect())
+        kw = {"manifest": spark.createDataFrame(
+            per_site, "site string, declared_clip_count long")}
+    registry = codec_registry_df(spark)
+    full = validate_clips(spark, clips, codec_registry=registry, run_id="full",
+                          output_root=str(tmp_path / "full"), run_audio_pass=False, **kw)
+    assert full.passed
+    root = str(tmp_path / "resumed")
+    _commit_passed(spark, root, "resumed", SITES[:2])
+    res = validate_clips(spark, clips, codec_registry=registry, run_id="resumed",
+                         output_root=root, run_audio_pass=False, **kw)
+    assert res.skipped_partitions == SITES[:2]
+    assert [v["partition_key"] for v in res.verdicts] == SITES[2:]
+    assert res.violations.where(F.col("severity") == SEVERITY_ERROR).count() == 0
+    assert res.passed
+
+
+def test_wall_ms_covers_the_whole_call(spark, monkeypatch):
+    """``wall_ms`` times the call from its entry: a schema step slowed by
+    0.5 s shows in every verdict, and nothing but the return follows it."""
+    contract = runner.schema_contract_violations
+
+    def slow_contract(*args, **kwargs):
+        time.sleep(0.5)
+        return contract(*args, **kwargs)
+
+    monkeypatch.setattr(runner, "schema_contract_violations", slow_contract)
+    clips = generate_clips(spark, 40, seed=2)
+    t = time.perf_counter()
+    res = validate_clips(spark, clips, run_id="wall", run_audio_pass=False)
+    elapsed_ms = (time.perf_counter() - t) * 1000
+    assert res.verdicts
+    for v in res.verdicts:
+        assert 500 <= v["wall_ms"] <= elapsed_ms
+        assert v["wall_ms"] >= elapsed_ms - 250

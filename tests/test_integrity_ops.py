@@ -297,20 +297,6 @@ def test_snapshot_diff_report(spark):
     assert out_s[("row", "changed")] == 1 and out_s[("row", "unchanged")] == 2
 
 
-def test_schema_diff_reports_evolution(spark):
-    from seronet_data_validator_spark.schema import schema_diff
-
-    old = spark.createDataFrame([(1, "a", 1.0)], "k long, s string, v double")
-    new = spark.createDataFrame([(1, "a", 1)], "k long, s string, v int")
-    new = new.withColumn("extra", F.lit(True))
-    out = schema_diff(old.drop("s"), new)
-    got = {(r["change"], r["column"]) for r in out}
-    assert got == {("added", "s"), ("added", "extra"), ("type_changed", "v")}
-    typed = {r["column"]: (r["old_type"], r["new_type"]) for r in out}
-    assert typed["v"] == ("double", "int")
-    assert schema_diff(old, old) == []
-
-
 def test_g711_clip_through_invariant_pass(spark):
     """A µ-law WAV rides the full decoded-PCM invariant suite: header
     sample-count math (1 byte/sample) feeds the dur check, and a wrong

@@ -80,26 +80,6 @@ def test_image_features_handles_jpeg(spark):
     assert out["png"]["width"] is None  # stub boundary intact
 
 
-def test_image_resize_accepts_jpeg_input(spark):
-    """The resize leg consumes JPEG transparently through the shared
-    _decode_image dispatch: decode -> bilinear resize -> PPM re-encode."""
-    from seronet_data_validator_spark.operators.multimodal import (
-        _decode_image,
-        image_resize,
-    )
-
-    img = np.full((16, 16, 3), 90, np.uint8)
-    df = spark.createDataFrame(
-        [("j", bytearray(jpeg_bytes(img, quality=92)))],
-        "item_id string, bytes binary",
-    )
-    out = image_resize(df, 8, 8).collect()[0]
-    w, h, px = _decode_image(bytes(out["bytes"]))
-    assert (w, h) == (8, 8)
-    # constant image survives decode+bilinear within JPEG quantization error
-    assert abs(float(px.mean()) - 90.0) < 2.0
-
-
 def test_fill_bytes_before_marker():
     """T.81 B.1.1.2: any number of 0xFF fill bytes may precede a marker
     code; inject padding before DQT/SOF/SOS and decode must stay in sync."""

@@ -244,12 +244,11 @@ def test_image_features_decodes_ppm_and_bmp(spark):
     rgb[0, :, 0] = 255  # top row pure red
     rgb[1, :, 2] = 255  # bottom row pure blue
     expected_luma = (0.299 * 255 + 0.114 * 255) / 2
-    from seronet_data_validator_spark.operators.multimodal import pgm_bytes
-
     gray = np.array([[0, 100], [200, 255]], np.uint8)
+    pgm = b"P5\n2 2\n255\n" + gray.tobytes()  # binary PGM, netpbm spec
     df = spark.createDataFrame(
         [("ppm", bytearray(ppm_bytes(rgb))), ("bmp", bytearray(bmp_bytes(rgb))),
-         ("pgm", bytearray(pgm_bytes(gray))),
+         ("pgm", bytearray(pgm)),
          ("trunc", bytearray(ppm_bytes(rgb)[:-4]))],
         "item_id string, bytes binary",
     )
