@@ -42,8 +42,6 @@ VIOLATION_SCHEMA = T.StructType(
     [T.StructField(name, dtype, True) for name, dtype in VIOLATION_FIELDS]
 )
 
-VIOLATION_STRUCT_DDL = ", ".join(f"{n}: string" for n, _ in VIOLATION_FIELDS)
-
 PARTITION_VERDICT_SCHEMA = T.StructType(
     [
         T.StructField("run_id", T.StringType(), False),

@@ -41,12 +41,14 @@ worker is copied ≥3× (socket write, socket read, Arrow assembly):
 
 from __future__ import annotations
 
-from typing import Callable, Iterator
+from typing import Callable, Iterable, Iterator
 
 import numpy as np
 import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 
 from seronet_data_validator_spark.model import SEVERITY_ERROR, VIOLATION_SCHEMA
 
@@ -325,6 +327,55 @@ def _decode_view_channels(seg: np.ndarray | None) -> tuple[np.ndarray, int]:
         return (s >> 8).reshape(-1, ch), sr
     mono, sr = _decode_view(seg)
     return mono.astype(np.int64).reshape(-1, 1), sr
+
+
+def _decoded_map(
+    clips: DataFrame,
+    schema: T.StructType,
+    rows: Callable[[object, np.ndarray | None, int | None], Iterable[tuple]],
+    *,
+    id_col: str,
+    keep_columns: tuple = (),
+    decode: Callable[[np.ndarray | None], tuple[np.ndarray, int]] = _decode_view,
+) -> DataFrame:
+    """The one Arrow decode pass behind every per-clip PCM operator.
+
+    Selects ``(id_col, bytes, *keep_columns)``, decodes each payload with
+    ``decode`` over a zero-copy view (a NULL payload or a failed decode
+    gives ``pcm = sr = None``) and calls ``rows(id, pcm, sr)``, which
+    yields that clip's output tuples in ``schema`` order: none, one or
+    many. Batches are built with the Arrow types of ``schema`` itself, and
+    each keep column rides along once per output row of its clip, so the
+    result is ``schema`` plus the keep columns. Narrow, no shuffle."""
+    src = clips.select(id_col, "bytes", *keep_columns)
+    out_schema = T.StructType(
+        list(schema.fields) + [src.schema[c] for c in keep_columns]
+    )
+    types = [f.type for f in to_arrow_schema(schema)]
+
+    def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        for batch in batches:
+            ids = batch.column(0).to_pylist()
+            get, _ = _binary_views(batch.column(1))
+            out: list[tuple] = []
+            src_row: list[int] = []
+            for i in range(batch.num_rows):
+                try:
+                    pcm, sr = decode(get(i))
+                except ValueError:  # a NULL payload fails the header parse too
+                    pcm = sr = None
+                for row in rows(ids[i], pcm, sr):
+                    out.append(row)
+                    src_row.append(i)
+            cols = zip(*out) if out else [()] * len(types)
+            take = pa.array(src_row, pa.int64())
+            yield pa.RecordBatch.from_arrays(
+                [pa.array(c, type=t) for c, t in zip(cols, types)]
+                + [batch.column(2 + j).take(take) for j in range(len(keep_columns))],
+                names=out_schema.names,
+            )
+
+    return src.mapInArrow(run, schema=out_schema)
 
 
 def audio_violations(

@@ -32,7 +32,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from seronet_data_validator_spark.operators.multimodal import _decoded_rows
+from seronet_data_validator_spark.operators.audio import _decoded_map
 
 SPECTRAL_SCHEMA = T.StructType(
     [
@@ -76,44 +76,28 @@ def spectral_features(
 
     Narrow Arrow pass; decode failures yield NULL features.
     """
-    src = clips.select(id_col, "bytes")
-    names = [f.name for f in SPECTRAL_SCHEMA.fields]
 
-    def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for batch in batches:
-            cols: dict[str, list] = {n: [] for n in names}
-            for _, cid, pcm, sr in _decoded_rows(batch, id_col):
-                power = _welch_power(pcm, n_fft) if pcm is not None else None
-                if power is None or float(np.sum(power[1:])) <= 0.0:
-                    row = (cid, None, None, None, None, None)
-                else:
-                    p = power[1:]  # drop DC: silence offsets are not "signal"
-                    freqs = np.fft.rfftfreq(n_fft, d=1.0 / sr)[1:]
-                    total = float(np.sum(p))
-                    centroid = float(np.sum(freqs * p) / total)
-                    bandwidth = float(
-                        np.sqrt(np.sum(p * (freqs - centroid) ** 2) / total)
-                    )
-                    cum = np.cumsum(p)
-                    rolloff = float(freqs[int(np.searchsorted(cum, 0.85 * total))])
-                    flat = float(
-                        np.exp(np.mean(np.log(p + 1e-20))) / (total / len(p))
-                    )
-                    row = (
-                        cid, float(freqs[int(np.argmax(p))]),
-                        centroid, bandwidth, rolloff, flat,
-                    )
-                for n, v in zip(names, row):
-                    cols[n].append(v)
-            yield pa.RecordBatch.from_arrays(
-                [
-                    pa.array(cols[n], type=pa.string() if n == "clip_id" else pa.float64())
-                    for n in names
-                ],
-                names,
-            )
+    def rows(cid, s16, sr):
+        power = (
+            _welch_power(s16.astype(np.float32) / 32768.0, n_fft)
+            if s16 is not None else None
+        )
+        if power is None or float(np.sum(power[1:])) <= 0.0:
+            yield (cid, None, None, None, None, None)
+            return
+        p = power[1:]  # drop DC: silence offsets are not "signal"
+        freqs = np.fft.rfftfreq(n_fft, d=1.0 / sr)[1:]
+        total = float(np.sum(p))
+        centroid = float(np.sum(freqs * p) / total)
+        bandwidth = float(np.sqrt(np.sum(p * (freqs - centroid) ** 2) / total))
+        cum = np.cumsum(p)
+        rolloff = float(freqs[int(np.searchsorted(cum, 0.85 * total))])
+        flat = float(np.exp(np.mean(np.log(p + 1e-20))) / (total / len(p)))
+        yield (
+            cid, float(freqs[int(np.argmax(p))]), centroid, bandwidth, rolloff, flat,
+        )
 
-    return src.mapInArrow(run, schema=SPECTRAL_SCHEMA)
+    return _decoded_map(clips, SPECTRAL_SCHEMA, rows, id_col=id_col)
 
 
 SILENCE_SCHEMA = T.StructType(
@@ -139,42 +123,31 @@ def silence_stats(
     `frame_ms` windows, mark a frame silent when its RMS (re full scale 1.0)
     is below `threshold_db`, and report the silence ratio, leading/trailing
     silence (trim points) and the count of contiguous speech segments."""
-    src = clips.select(id_col, "bytes")
     thr = 10.0 ** (threshold_db / 20.0)
-    names = [f.name for f in SILENCE_SCHEMA.fields]
-    types = [pa.string(), pa.int32(), pa.float64(), pa.float64(), pa.float64(), pa.int32()]
 
-    def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for batch in batches:
-            cols: dict[str, list] = {n: [] for n in names}
-            for _, cid, pcm, sr in _decoded_rows(batch, id_col):
-                flen = max(1, int(sr * frame_ms / 1000)) if pcm is not None else 1
-                if pcm is None or len(pcm) < flen:
-                    row = (cid, 0, None, None, None, None)
-                else:
-                    n = (len(pcm) // flen) * flen
-                    frames = pcm[:n].reshape(-1, flen)
-                    rms = np.sqrt(np.mean(frames.astype(np.float64) ** 2, axis=1))
-                    speech = rms >= thr
-                    k = len(speech)
-                    idx = np.flatnonzero(speech)
-                    if len(idx) == 0:
-                        lead, trail, segs = float(k), float(k), 0
-                    else:
-                        lead = float(idx[0])
-                        trail = float(k - 1 - idx[-1])
-                        segs = int(np.sum(np.diff(idx) > 1)) + 1
-                    row = (
-                        cid, k, float(np.mean(~speech)),
-                        lead * frame_ms, trail * frame_ms, segs,
-                    )
-                for nm, v in zip(names, row):
-                    cols[nm].append(v)
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(cols[nm], type=t) for nm, t in zip(names, types)], names
-            )
+    def rows(cid, s16, sr):
+        flen = max(1, int(sr * frame_ms / 1000)) if s16 is not None else 1
+        if s16 is None or len(s16) < flen:
+            yield (cid, 0, None, None, None, None)
+            return
+        pcm = s16.astype(np.float32) / 32768.0
+        n = (len(pcm) // flen) * flen
+        frames = pcm[:n].reshape(-1, flen)
+        rms = np.sqrt(np.mean(frames.astype(np.float64) ** 2, axis=1))
+        speech = rms >= thr
+        k = len(speech)
+        idx = np.flatnonzero(speech)
+        if len(idx) == 0:
+            lead, trail, segs = float(k), float(k), 0
+        else:
+            lead = float(idx[0])
+            trail = float(k - 1 - idx[-1])
+            segs = int(np.sum(np.diff(idx) > 1)) + 1
+        yield (
+            cid, k, float(np.mean(~speech)), lead * frame_ms, trail * frame_ms, segs,
+        )
 
-    return src.mapInArrow(run, schema=SILENCE_SCHEMA)
+    return _decoded_map(clips, SILENCE_SCHEMA, rows, id_col=id_col)
 
 
 FINGERPRINT_SCHEMA = T.StructType(
@@ -259,28 +232,15 @@ def audio_fingerprint(clips: DataFrame, *, id_col: str = "clip_id") -> DataFrame
     """Per-clip 128-bit spectral fingerprint as two long columns (fp0, fp1).
     Narrow Arrow pass; clips too short to fingerprint (or failing decode)
     yield NULL words."""
-    src = clips.select(id_col, "bytes")
 
-    def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for batch in batches:
-            ids, w0, w1 = [], [], []
-            for _, cid, pcm, sr in _decoded_rows(batch, id_col):
-                bits = _fingerprint_bits(pcm, sr) if pcm is not None else None
-                ids.append(cid)
-                if bits is None:
-                    w0.append(None)
-                    w1.append(None)
-                else:
-                    a, b = _pack_bits(bits)
-                    w0.append(a)
-                    w1.append(b)
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(ids, pa.string()), pa.array(w0, pa.int64()),
-                 pa.array(w1, pa.int64())],
-                ["clip_id", "fp0", "fp1"],
-            )
+    def rows(cid, s16, sr):
+        bits = (
+            _fingerprint_bits(s16.astype(np.float32) / 32768.0, sr)
+            if s16 is not None else None
+        )
+        yield (cid, None, None) if bits is None else (cid, *_pack_bits(bits))
 
-    return src.mapInArrow(run, schema=FINGERPRINT_SCHEMA)
+    return _decoded_map(clips, FINGERPRINT_SCHEMA, rows, id_col=id_col)
 
 
 def audio_near_duplicates(
@@ -366,43 +326,19 @@ def audio_basic_features_exact(
     Narrow mapInArrow pass, zero-copy int16 views, no shuffle — the same
     execution shape as the other DSP operators.
     """
-    from seronet_data_validator_spark.operators.audio import (
-        _binary_views,
-        _decode_view,
-    )
 
-    src = clips.select(id_col, "bytes")
-    names = [f.name for f in BASIC_EXACT_SCHEMA.fields]
-    types = [pa.string(), pa.int64(), pa.int32(), pa.int64(), pa.int64(), pa.float64()]
+    def rows(cid, s16, sr):
+        if s16 is None or len(s16) == 0:
+            yield (cid, 0, sr or 0, None, None, None)
+            return
+        s = s16.astype(np.int64)
+        n = len(s)
+        sum_sq = int(np.dot(s, s))
+        peak = int(np.max(np.abs(s)))
+        zc = int(np.sum(s[:-1] * s[1:] < 0)) if n > 1 else 0
+        yield (cid, n, sr, peak, zc, float(np.sqrt(sum_sq / n)))
 
-    def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for batch in batches:
-            cols: dict[str, list] = {n: [] for n in names}
-            ids = batch.column(0).to_pylist()
-            get, _ = _binary_views(batch.column(1))
-            for i in range(batch.num_rows):
-                try:
-                    s16, sr = _decode_view(get(i))
-                except ValueError:
-                    row = (ids[i], 0, 0, None, None, None)
-                else:
-                    s = s16.astype(np.int64)
-                    n = len(s)
-                    if n == 0:
-                        row = (ids[i], 0, sr, None, None, None)
-                    else:
-                        sum_sq = int(np.dot(s, s))
-                        peak = int(np.max(np.abs(s)))
-                        zc = int(np.sum(s[:-1] * s[1:] < 0)) if n > 1 else 0
-                        row = (ids[i], n, sr, peak, zc, float(np.sqrt(sum_sq / n)))
-                for name, v in zip(names, row):
-                    cols[name].append(v)
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(cols[n], type=t) for n, t in zip(names, types)],
-                names=names,
-            )
-
-    return src.mapInArrow(run, schema=BASIC_EXACT_SCHEMA)
+    return _decoded_map(clips, BASIC_EXACT_SCHEMA, rows, id_col=id_col)
 
 
 MEL_SCHEMA = T.StructType(
@@ -459,13 +395,6 @@ def mel_features(
     bands). FFT math → rows-only verifiability; the known-answer pytest
     anchors tone locations and filterbank partition-of-unity instead.
     """
-    from seronet_data_validator_spark.operators.audio import (
-        _binary_views,
-        _decode_view,
-    )
-
-    src = clips.select(id_col, "bytes")
-    names = [f.name for f in MEL_SCHEMA.fields]
     win = np.hanning(n_fft)
     # orthonormal DCT-II applied to the mel axis → MFCCs
     k = np.arange(n_mels)
@@ -474,56 +403,30 @@ def mel_features(
     dct[0] *= np.sqrt(0.5)
     banks: dict[int, np.ndarray] = {}
 
-    def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for batch in batches:
-            cols: dict[str, list] = {n: [] for n in names}
-            ids = batch.column(0).to_pylist()
-            get, _ = _binary_views(batch.column(1))
-            for i in range(batch.num_rows):
-                try:
-                    s16, sr = _decode_view(get(i))
-                except ValueError:
-                    row = (ids[i], 0, n_mels, None, None, None)
-                else:
-                    x = s16.astype(np.float64) / 32768.0
-                    if len(x) < n_fft:
-                        x = np.pad(x, (0, n_fft - len(x)))
-                    n_frames = 1 + (len(x) - n_fft) // hop
-                    idx = (
-                        np.arange(n_fft)[None, :]
-                        + hop * np.arange(n_frames)[:, None]
-                    )
-                    spec = np.abs(np.fft.rfft(x[idx] * win, axis=1)) ** 2
-                    if sr not in banks:
-                        banks[sr] = _mel_filterbank(n_mels, n_fft, sr)
-                    logmel = np.log(spec @ banks[sr].T + 1e-10)
-                    mfcc = logmel @ dct.T
-                    row = (
-                        ids[i],
-                        int(n_frames),
-                        n_mels,
-                        [float(v) for v in logmel.mean(axis=0)],
-                        [float(v) for v in logmel.std(axis=0)],
-                        [float(v) for v in mfcc.mean(axis=0)],
-                    )
-                for name, v in zip(names, row):
-                    cols[name].append(v)
-            yield pa.RecordBatch.from_arrays(
-                [
-                    pa.array(cols[n], type=t)
-                    for n, t in zip(
-                        names,
-                        [
-                            pa.string(), pa.int32(), pa.int32(),
-                            pa.list_(pa.float64()), pa.list_(pa.float64()),
-                            pa.list_(pa.float64()),
-                        ],
-                    )
-                ],
-                names=names,
-            )
+    def rows(cid, s16, sr):
+        if s16 is None:
+            yield (cid, 0, n_mels, None, None, None)
+            return
+        x = s16.astype(np.float64) / 32768.0
+        if len(x) < n_fft:
+            x = np.pad(x, (0, n_fft - len(x)))
+        n_frames = 1 + (len(x) - n_fft) // hop
+        idx = np.arange(n_fft)[None, :] + hop * np.arange(n_frames)[:, None]
+        spec = np.abs(np.fft.rfft(x[idx] * win, axis=1)) ** 2
+        if sr not in banks:
+            banks[sr] = _mel_filterbank(n_mels, n_fft, sr)
+        logmel = np.log(spec @ banks[sr].T + 1e-10)
+        mfcc = logmel @ dct.T
+        yield (
+            cid,
+            int(n_frames),
+            n_mels,
+            [float(v) for v in logmel.mean(axis=0)],
+            [float(v) for v in logmel.std(axis=0)],
+            [float(v) for v in mfcc.mean(axis=0)],
+        )
 
-    return src.mapInArrow(run, schema=MEL_SCHEMA)
+    return _decoded_map(clips, MEL_SCHEMA, rows, id_col=id_col)
 
 
 RESAMPLE_EXACT_SCHEMA = T.StructType(
@@ -553,46 +456,25 @@ def resample_features_exact(
     that can regenerate the source samples — no FFT, no rounding mode in
     sight. Narrow mapInArrow pass over the real decode path, one output row
     per (clip, target rate), no shuffle."""
-    from seronet_data_validator_spark.operators.audio import (
-        _binary_views,
-        _decode_view,
-    )
     from seronet_data_validator_spark.operators.multimodal import resample_linear
 
-    src = clips.select(id_col, "bytes")
-    names = [f.name for f in RESAMPLE_EXACT_SCHEMA.fields]
-    types = [pa.string(), pa.int32(), pa.int64(), pa.int64(), pa.int64(), pa.int64()]
-
-    def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for batch in batches:
-            cols: dict[str, list] = {n: [] for n in names}
-            ids = batch.column(0).to_pylist()
-            get, _ = _binary_views(batch.column(1))
-            for i in range(batch.num_rows):
-                try:
-                    s16, sr = _decode_view(get(i))
-                except ValueError:
-                    continue
-                pcm = s16.astype(np.float32) / 32768.0
-                for t in targets:
-                    y = resample_linear(pcm, sr, t)
-                    num = np.rint(y.astype(np.float64) * 65536.0).astype(np.int64)
-                    row = (
-                        ids[i],
-                        t,
-                        len(num),
-                        int(num.sum()),
-                        int(np.max(np.abs(num))) if len(num) else None,
-                        int(np.dot(num, num)),
-                    )
-                    for name, v in zip(names, row):
-                        cols[name].append(v)
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(cols[n], type=ty) for n, ty in zip(names, types)],
-                names=names,
+    def rows(cid, s16, sr):
+        if s16 is None:
+            return
+        pcm = s16.astype(np.float32) / 32768.0
+        for t in targets:
+            y = resample_linear(pcm, sr, t)
+            num = np.rint(y.astype(np.float64) * 65536.0).astype(np.int64)
+            yield (
+                cid,
+                t,
+                len(num),
+                int(num.sum()),
+                int(np.max(np.abs(num))) if len(num) else None,
+                int(np.dot(num, num)),
             )
 
-    return src.mapInArrow(run, schema=RESAMPLE_EXACT_SCHEMA)
+    return _decoded_map(clips, RESAMPLE_EXACT_SCHEMA, rows, id_col=id_col)
 
 
 FRAME_ENERGY_SCHEMA = T.StructType(
@@ -602,18 +484,6 @@ FRAME_ENERGY_SCHEMA = T.StructType(
         T.StructField("sumsq", T.LongType()),
     ]
 )
-
-SEGMENTS_SCHEMA = T.StructType(
-    [
-        T.StructField("clip_id", T.StringType()),
-        T.StructField("seg_idx", T.LongType()),
-        T.StructField("start_frame", T.LongType()),
-        T.StructField("end_frame", T.LongType()),
-        T.StructField("n_frames", T.LongType()),
-        T.StructField("energy", T.LongType()),
-    ]
-)
-
 
 def frame_energies(
     clips: DataFrame, *, frame_len: int = 160, id_col: str = "clip_id"
@@ -745,48 +615,24 @@ def pitch_lag_exact(
     rows-only FFT variant. Same narrow mapInArrow shape as the other DSP
     passes — the per-clip lag scan is ~200 vectorized dot products.
     """
-    from seronet_data_validator_spark.operators.audio import (
-        _binary_views,
-        _decode_view,
-    )
-
-    src = clips.select(id_col, "bytes")
-    names = [f.name for f in PITCH_SCHEMA.fields]
-    types = [pa.string(), pa.int64(), pa.int64(), pa.int64(), pa.int64(), pa.float64()]
     lo, hi = int(min_lag), int(max_lag)
 
-    def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for batch in batches:
-            cols: dict[str, list] = {n: [] for n in names}
-            ids = batch.column(0).to_pylist()
-            get, _ = _binary_views(batch.column(1))
-            for i in range(batch.num_rows):
-                try:
-                    s16, _sr = _decode_view(get(i))
-                except ValueError:
-                    row = (ids[i], 0, None, None, None, None)
-                else:
-                    s = s16.astype(np.int64)
-                    n = len(s)
-                    if n == 0:
-                        row = (ids[i], 0, None, None, None, None)
-                    else:
-                        r_zero = int(np.dot(s, s))
-                        best_lag, r_best = lo, None
-                        for lag in range(lo, hi + 1):
-                            r = int(np.dot(s[:-lag], s[lag:])) if lag < n else 0
-                            if r_best is None or r > r_best:
-                                best_lag, r_best = lag, r
-                        per = (r_best / r_zero) if r_zero > 0 else None
-                        row = (ids[i], n, best_lag, r_best, r_zero, per)
-                for name, v in zip(names, row):
-                    cols[name].append(v)
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(cols[n], type=t) for n, t in zip(names, types)],
-                names=names,
-            )
+    def rows(cid, s16, _sr):
+        if s16 is None or len(s16) == 0:
+            yield (cid, 0, None, None, None, None)
+            return
+        s = s16.astype(np.int64)
+        n = len(s)
+        r_zero = int(np.dot(s, s))
+        best_lag, r_best = lo, None
+        for lag in range(lo, hi + 1):
+            r = int(np.dot(s[:-lag], s[lag:])) if lag < n else 0
+            if r_best is None or r > r_best:
+                best_lag, r_best = lag, r
+        per = (r_best / r_zero) if r_zero > 0 else None
+        yield (cid, n, best_lag, r_best, r_zero, per)
 
-    return src.mapInArrow(run, schema=PITCH_SCHEMA)
+    return _decoded_map(clips, PITCH_SCHEMA, rows, id_col=id_col)
 
 
 HUM_SCHEMA = T.StructType(
@@ -834,53 +680,30 @@ def hum_detection(
     """
     import math
 
-    from seronet_data_validator_spark.operators.audio import (
-        _binary_views,
-        _decode_view,
-    )
-
     probe = [float(f) for f in freqs]
-    src = clips.select(id_col, "bytes")
-    names = [f.name for f in HUM_SCHEMA.fields]
-    types = [pa.string(), pa.float64(), pa.int64(), pa.int32(), pa.int64(), pa.float64()]
 
-    def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for batch in batches:
-            cols: dict[str, list] = {n: [] for n in names}
-            ids = batch.column(0).to_pylist()
-            get, _ = _binary_views(batch.column(1))
-            for i in range(batch.num_rows):
-                try:
-                    s16, sr = _decode_view(get(i))
-                except ValueError:
-                    for f in probe:
-                        for name, v in zip(names, (ids[i], f, 0, 0, None, None)):
-                            cols[name].append(v)
-                    continue
-                s = s16.astype(np.int64)
-                n = len(s)
-                sum_sq = int(np.dot(s, s)) if n else 0
-                xs = s.astype(np.float64).tolist()
-                for f in probe:
-                    if n == 0 or sum_sq == 0:
-                        row = (ids[i], f, n, sr, sum_sq if n else None, None)
-                    else:
-                        c = 2.0 * math.cos(2.0 * math.pi * f / sr)
-                        s1 = s2 = 0.0
-                        for x in xs:
-                            s0 = x + c * s1 - s2
-                            s2 = s1
-                            s1 = s0
-                        p = s1 * s1 + s2 * s2 - c * s1 * s2
-                        row = (ids[i], f, n, sr, sum_sq, p)
-                    for name, v in zip(names, row):
-                        cols[name].append(v)
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(cols[n], type=t) for n, t in zip(names, types)],
-                names=names,
-            )
+    def rows(cid, s16, sr):
+        if s16 is None:
+            for f in probe:
+                yield (cid, f, 0, 0, None, None)
+            return
+        s = s16.astype(np.int64)
+        n = len(s)
+        sum_sq = int(np.dot(s, s)) if n else 0
+        xs = s.astype(np.float64).tolist()
+        for f in probe:
+            if n == 0 or sum_sq == 0:
+                yield (cid, f, n, sr, sum_sq if n else None, None)
+                continue
+            c = 2.0 * math.cos(2.0 * math.pi * f / sr)
+            s1 = s2 = 0.0
+            for x in xs:
+                s0 = x + c * s1 - s2
+                s2 = s1
+                s1 = s0
+            yield (cid, f, n, sr, sum_sq, s1 * s1 + s2 * s2 - c * s1 * s2)
 
-    stats = src.mapInArrow(run, schema=HUM_SCHEMA)
+    stats = _decoded_map(clips, HUM_SCHEMA, rows, id_col=id_col)
     frac = (
         F.lit(2.0)
         * F.col("hum_power")

@@ -143,15 +143,6 @@ def _rice_read(r: _BitReader, n: int, param: int) -> np.ndarray:
     return out
 
 
-_FIXED_COEFS = {  # order -> s[n] prediction in terms of previous samples
-    0: [],
-    1: [1],
-    2: [2, -1],
-    3: [3, -3, 1],
-    4: [4, -6, 4, -1],
-}
-
-
 def _fixed_residual(x: np.ndarray, order: int) -> np.ndarray:
     e = x.astype(np.int64)
     for _ in range(order):

@@ -2,10 +2,10 @@
 
 Media payloads are opaque `binary` columns with typed metadata columns
 beside them (the clips table's (bytes, sr_hz, dur_ms, codec) is the audio
-instance). The audio operators run as Arrow-batched ``mapInArrow`` passes
-over zero-copy buffer views (the same ``_binary_views`` accessor as the
-audio-invariant pass — a pandas conversion would materialize a Python
-``bytes`` object per row, one extra full copy of the corpus): schema,
+instance). The audio operators run through the shared Arrow decode pass
+(audio._decoded_map) over zero-copy buffer views — a pandas conversion
+would materialize a Python ``bytes`` object per row, one extra full copy
+of the corpus: schema,
 partitioning and batch shape are the real 100 TB plumbing. Decoders for
 formats whose libraries are not in this container are STUBBED behind a
 clearly-marked NotImplementedError, as permitted by the build brief.
@@ -26,7 +26,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from seronet_data_validator_spark.operators.audio import _binary_views, _decode_view
+from seronet_data_validator_spark.operators.audio import _binary_views, _decoded_map
 from seronet_data_validator_spark.sources.clips import wav_bytes
 
 AUDIO_FEATURES_SCHEMA = T.StructType(
@@ -42,55 +42,25 @@ AUDIO_FEATURES_SCHEMA = T.StructType(
 )
 
 
-def _decoded_rows(batch: pa.RecordBatch, id_col: str):
-    """Iterate (row_idx, id, float32_pcm, sr) over a batch, skipping rows
-    that fail decode by yielding (i, id, None, None). PCM is scaled to
-    [-1, 1] like sources/clips.decode_wav."""
-    names = batch.schema.names
-    col = {n: batch.column(i) for i, n in enumerate(names)}
-    ids = col[id_col].to_pylist()
-    get, _ = _binary_views(col["bytes"])
-    for i in range(batch.num_rows):
-        try:
-            pcm_i16, sr = _decode_view(get(i))
-        except ValueError:
-            yield i, ids[i], None, None
-            continue
-        yield i, ids[i], pcm_i16.astype(np.float32) / 32768.0, sr
-
-
 def audio_features(clips: DataFrame, *, id_col: str = "clip_id") -> DataFrame:
     """Feature-extract over the binary audio column: RMS, peak, ZCR,
-    clipping ratio — the audio analog of image feature extraction.
+    clipping ratio — the audio analog of image feature extraction. PCM is
+    scaled to [-1, 1] like sources/clips.decode_wav.
     Narrow (no shuffle); Arrow record batches; zero-copy byte views."""
-    src = clips.select(id_col, "bytes")
-    out_fields = [
-        ("clip_id", pa.string()), ("n_samples", pa.int64()), ("sr_hz", pa.int32()),
-        ("rms", pa.float64()), ("peak", pa.float64()),
-        ("zero_crossing_rate", pa.float64()), ("clipping_ratio", pa.float64()),
-    ]
 
-    def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for batch in batches:
-            cols: dict[str, list] = {n: [] for n, _ in out_fields}
-            for _, cid, pcm, sr in _decoded_rows(batch, id_col):
-                if pcm is None:
-                    row = (cid, 0, 0, None, None, None, None)
-                else:
-                    n = len(pcm)
-                    rms = float(np.sqrt(np.mean(pcm**2))) if n else 0.0
-                    peak = float(np.max(np.abs(pcm))) if n else 0.0
-                    zcr = float(np.mean(np.abs(np.diff(np.sign(pcm))) > 0)) if n > 1 else 0.0
-                    clip_ratio = float(np.mean(np.abs(pcm) >= 0.999)) if n else 0.0
-                    row = (cid, n, sr, rms, peak, zcr, clip_ratio)
-                for (name, _), v in zip(out_fields, row):
-                    cols[name].append(v)
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(cols[n], type=t) for n, t in out_fields],
-                [n for n, _ in out_fields],
-            )
+    def rows(cid, s16, sr):
+        if s16 is None:
+            yield (cid, 0, 0, None, None, None, None)
+            return
+        pcm = s16.astype(np.float32) / 32768.0
+        n = len(pcm)
+        rms = float(np.sqrt(np.mean(pcm**2))) if n else 0.0
+        peak = float(np.max(np.abs(pcm))) if n else 0.0
+        zcr = float(np.mean(np.abs(np.diff(np.sign(pcm))) > 0)) if n > 1 else 0.0
+        clip_ratio = float(np.mean(np.abs(pcm) >= 0.999)) if n else 0.0
+        yield (cid, n, sr, rms, peak, zcr, clip_ratio)
 
-    return src.mapInArrow(run, schema=AUDIO_FEATURES_SCHEMA)
+    return _decoded_map(clips, AUDIO_FEATURES_SCHEMA, rows, id_col=id_col)
 
 
 RESAMPLED_SCHEMA = T.StructType(
@@ -124,66 +94,15 @@ def resample_linear(pcm: np.ndarray, sr: int, target_sr: int) -> np.ndarray:
 def audio_resample(clips: DataFrame, target_sr: int, *, id_col: str = "clip_id") -> DataFrame:
     """Resample audio to `target_sr` (linear interpolation — numpy; the
     'resize' analog for audio). Returns re-encoded WAV bytes."""
-    src = clips.select(id_col, "bytes")
 
-    def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for batch in batches:
-            ids, blobs, srs = [], [], []
-            for _, cid, pcm, sr in _decoded_rows(batch, id_col):
-                ids.append(cid)
-                if pcm is None:
-                    blobs.append(None)
-                    srs.append(None)
-                    continue
-                out = resample_linear(pcm, sr, target_sr)
-                blobs.append(wav_bytes((out * 32767).astype(np.int16), target_sr))
-                srs.append(target_sr)
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(ids, pa.string()), pa.array(blobs, pa.binary()),
-                 pa.array(srs, pa.int32())],
-                ["clip_id", "bytes", "sr_hz"],
-            )
+    def rows(cid, s16, sr):
+        if s16 is None:
+            yield (cid, None, None)
+            return
+        out = resample_linear(s16.astype(np.float32) / 32768.0, sr, target_sr)
+        yield (cid, wav_bytes((out * 32767).astype(np.int16), target_sr), target_sr)
 
-    return src.mapInArrow(run, schema=RESAMPLED_SCHEMA)
-
-
-FRAME_SAMPLE_SCHEMA = T.StructType(
-    [
-        T.StructField("clip_id", T.StringType()),
-        T.StructField("frame_idx", T.IntegerType()),
-        T.StructField("frame", T.ArrayType(T.FloatType())),
-    ]
-)
-
-
-def audio_frame_sample(
-    clips: DataFrame, *, frame_ms: int = 25, max_frames: int = 8, id_col: str = "clip_id"
-) -> DataFrame:
-    """Frame-sampling (the video frame-sample analog): split decoded PCM into
-    fixed-length frames, emit up to `max_frames` evenly-spaced frames per
-    clip as float arrays — the batch shape a downstream feature model wants."""
-    src = clips.select(id_col, "bytes")
-
-    def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for batch in batches:
-            ids, idxs, frames = [], [], []
-            for _, cid, pcm, sr in _decoded_rows(batch, id_col):
-                if pcm is None:
-                    continue
-                flen = max(1, int(sr * frame_ms / 1000))
-                n_frames = max(1, len(pcm) // flen)
-                take = np.linspace(0, n_frames - 1, num=min(max_frames, n_frames)).astype(int)
-                for fi in np.unique(take):
-                    ids.append(cid)
-                    idxs.append(int(fi))
-                    frames.append(pcm[fi * flen : (fi + 1) * flen])
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(ids, pa.string()), pa.array(idxs, pa.int32()),
-                 pa.array(frames, pa.list_(pa.float32()))],
-                ["clip_id", "frame_idx", "frame"],
-            )
-
-    return src.mapInArrow(run, schema=FRAME_SAMPLE_SCHEMA)
+    return _decoded_map(clips, RESAMPLED_SCHEMA, rows, id_col=id_col)
 
 
 IMAGE_FEATURES_SCHEMA = T.StructType(
@@ -614,7 +533,7 @@ def video_frames(
     bytes_col: str = "bytes",
 ) -> DataFrame:
     """Video frame-sampling + per-frame luma features over a binary video
-    column — the third leg of the multimodal triad (audio_frame_sample /
+    column — the third leg of the multimodal triad (audio_features /
     image_features / THIS). Y4M frames sit at a fixed stride
     (`FRAME\\n` + planar YUV), so sampling frame i is a single slice — no
     sequential decode, exactly the property Iceberg-resident uncompressed

@@ -33,13 +33,15 @@ than the corpus.
 
 from __future__ import annotations
 
-from typing import Iterator
-
 import numpy as np
-import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from seronet_data_validator_spark.operators.audio import (
+    _decode_view_channels,
+    _decoded_map,
+)
 
 QC_STATS_SCHEMA = T.StructType(
     [
@@ -78,63 +80,27 @@ def audio_qc_stats(
     (operators/audio._decode_view) — a decode bug surfaces as a value
     mismatch in the oracle, exactly like audio_basic_features.
     """
-    from seronet_data_validator_spark.operators.audio import (
-        _binary_views,
-        _decode_view,
+
+    def rows(cid, s16, sr):
+        if s16 is None or len(s16) == 0:
+            yield (cid, 0, sr or 0, None, None, None, None)
+            return
+        s = s16.astype(np.int64)
+        n = len(s)
+        a = np.abs(s)
+        clip_count = int((a >= 32767).sum())
+        dc_sum = int(s.sum())
+        nf = (n + frame - 1) // frame
+        pad = nf * frame - n
+        if pad:
+            a = np.concatenate([a, np.zeros(pad, np.int64)])
+        fpeak = a.reshape(nf, frame).max(axis=1)
+        silent = int((fpeak < silence_peak).sum())
+        yield (cid, n, sr, clip_count, dc_sum, nf, silent)
+
+    return _decoded_map(
+        clips, QC_STATS_SCHEMA, rows, id_col=id_col, keep_columns=keep_columns
     )
-
-    src = clips.select(id_col, "bytes", *keep_columns)
-    names = [f.name for f in QC_STATS_SCHEMA.fields]
-    types = [
-        pa.string(),
-        pa.int64(),
-        pa.int32(),
-        pa.int64(),
-        pa.int64(),
-        pa.int64(),
-        pa.int64(),
-    ]
-    # passthrough columns ride the batch unchanged (rows map 1:1 in order)
-    out_schema = T.StructType(
-        list(QC_STATS_SCHEMA.fields)
-        + [src.schema[c] for c in keep_columns]
-    )
-
-    def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for batch in batches:
-            cols: dict[str, list] = {n: [] for n in names}
-            ids = batch.column(0).to_pylist()
-            get, _ = _binary_views(batch.column(1))
-            for i in range(batch.num_rows):
-                try:
-                    s16, sr = _decode_view(get(i))
-                except ValueError:
-                    row = (ids[i], 0, 0, None, None, None, None)
-                else:
-                    s = s16.astype(np.int64)
-                    n = len(s)
-                    if n == 0:
-                        row = (ids[i], 0, sr, None, None, None, None)
-                    else:
-                        a = np.abs(s)
-                        clip_count = int((a >= 32767).sum())
-                        dc_sum = int(s.sum())
-                        nf = (n + frame - 1) // frame
-                        pad = nf * frame - n
-                        if pad:
-                            a = np.concatenate([a, np.zeros(pad, np.int64)])
-                        fpeak = a.reshape(nf, frame).max(axis=1)
-                        silent = int((fpeak < silence_peak).sum())
-                        row = (ids[i], n, sr, clip_count, dc_sum, nf, silent)
-                for name, v in zip(names, row):
-                    cols[name].append(v)
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(cols[n], type=t) for n, t in zip(names, types)]
-                + [batch.column(2 + j) for j in range(len(keep_columns))],
-                names=names + list(keep_columns),
-            )
-
-    return src.mapInArrow(run, schema=out_schema)
 
 
 def audio_qc(
@@ -524,57 +490,30 @@ def audio_dropouts(
     views), run detection is three vectorized numpy ops on the boolean
     mask; no shuffle, fixed-width output row per clip.
     """
-    from seronet_data_validator_spark.operators.audio import (
-        _binary_views,
-        _decode_view,
-    )
 
-    src = clips.select(id_col, "bytes")
-    names = [f.name for f in DROPOUT_SCHEMA.fields]
-    types = [pa.string(), pa.int64(), pa.int32(), pa.int64(), pa.int64(), pa.int64()]
+    def rows(cid, s16, sr):
+        if s16 is None or len(s16) == 0:
+            yield (cid, 0, sr or 0, None, None, None)
+            return
+        n = len(s16)
+        quiet = np.abs(s16.astype(np.int64)) <= eps
+        # run boundaries of the quiet mask; pad with False so edge-touching
+        # runs are CLOSED at the edges and can then be excluded by position
+        edged = np.concatenate(([False], quiet, [False]))
+        flips = np.flatnonzero(np.diff(edged.astype(np.int8)))
+        starts, ends = flips[0::2], flips[1::2]  # [start, end)
+        keep = (starts > 0) & (ends < n) & (ends - starts >= min_run)
+        lens = (ends - starts)[keep]
+        yield (
+            cid,
+            n,
+            sr,
+            int(keep.sum()),
+            int(lens.max()) if len(lens) else 0,
+            int(lens.sum()),
+        )
 
-    def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for batch in batches:
-            cols: dict[str, list] = {n: [] for n in names}
-            ids = batch.column(0).to_pylist()
-            get, _ = _binary_views(batch.column(1))
-            for i in range(batch.num_rows):
-                try:
-                    s16, sr = _decode_view(get(i))
-                except ValueError:
-                    row = (ids[i], 0, 0, None, None, None)
-                else:
-                    n = len(s16)
-                    if n == 0:
-                        row = (ids[i], 0, sr, None, None, None)
-                    else:
-                        quiet = np.abs(s16.astype(np.int64)) <= eps
-                        # run boundaries of the quiet mask; pad with False
-                        # so edge-touching runs are CLOSED at the edges and
-                        # can then be excluded by position
-                        edged = np.concatenate(([False], quiet, [False]))
-                        flips = np.flatnonzero(np.diff(edged.astype(np.int8)))
-                        starts, ends = flips[0::2], flips[1::2]  # [start, end)
-                        keep = (
-                            (starts > 0) & (ends < n) & (ends - starts >= min_run)
-                        )
-                        lens = (ends - starts)[keep]
-                        row = (
-                            ids[i],
-                            n,
-                            sr,
-                            int(keep.sum()),
-                            int(lens.max()) if len(lens) else 0,
-                            int(lens.sum()),
-                        )
-                for name, v in zip(names, row):
-                    cols[name].append(v)
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(cols[n], type=t) for n, t in zip(names, types)],
-                names=names,
-            )
-
-    stats = src.mapInArrow(run, schema=DROPOUT_SCHEMA)
+    stats = _decoded_map(clips, DROPOUT_SCHEMA, rows, id_col=id_col)
     decoded = F.col("n_dropouts").isNotNull()
     return stats.select(
         id_col,
@@ -638,60 +577,31 @@ def stereo_balance(clips: DataFrame, *, id_col: str = "clip_id") -> DataFrame:
     scope). Undecodable clips get NULL n_channels and false verdicts.
     One narrow mapInArrow pass, fixed-width output, no shuffle.
     """
-    from seronet_data_validator_spark.operators.audio import (
-        _binary_views,
-        _decode_view_channels,
+
+    def rows(cid, full, sr):
+        if full is None:
+            yield (cid, 0, 0, None, None, None, None, None, None)
+            return
+        n, ch = full.shape
+        if ch != 2 or n == 0:
+            yield (cid, n, sr, ch, None, None, None, None, None)
+            return
+        left, right = full[:, 0], full[:, 1]
+        yield (
+            cid,
+            n,
+            sr,
+            2,
+            int(np.dot(left, left)),
+            int(np.dot(right, right)),
+            int(np.dot(left, right)),
+            int(np.abs(left).max()),
+            int(np.abs(right).max()),
+        )
+
+    stats = _decoded_map(
+        clips, STEREO_STATS_SCHEMA, rows, id_col=id_col, decode=_decode_view_channels
     )
-
-    src = clips.select(id_col, "bytes")
-    names = [f.name for f in STEREO_STATS_SCHEMA.fields]
-    types = [
-        pa.string(),
-        pa.int64(),
-        pa.int32(),
-        pa.int32(),
-        pa.int64(),
-        pa.int64(),
-        pa.int64(),
-        pa.int64(),
-        pa.int64(),
-    ]
-
-    def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for batch in batches:
-            cols: dict[str, list] = {n: [] for n in names}
-            ids = batch.column(0).to_pylist()
-            get, _ = _binary_views(batch.column(1))
-            for i in range(batch.num_rows):
-                try:
-                    full, sr = _decode_view_channels(get(i))
-                except ValueError:
-                    row = (ids[i], 0, 0, None, None, None, None, None, None)
-                else:
-                    n, ch = full.shape
-                    if ch != 2 or n == 0:
-                        row = (ids[i], n, sr, ch, None, None, None, None, None)
-                    else:
-                        left, right = full[:, 0], full[:, 1]
-                        row = (
-                            ids[i],
-                            n,
-                            sr,
-                            2,
-                            int(np.dot(left, left)),
-                            int(np.dot(right, right)),
-                            int(np.dot(left, right)),
-                            int(np.abs(left).max()),
-                            int(np.abs(right).max()),
-                        )
-                for name, v in zip(names, row):
-                    cols[name].append(v)
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(cols[n], type=t) for n, t in zip(names, types)],
-                names=names,
-            )
-
-    stats = src.mapInArrow(run, schema=STEREO_STATS_SCHEMA)
     is_pair = F.col("sum_ll").isNotNull()
     both_live = (F.col("sum_ll") > 0) & (F.col("sum_rr") > 0)
     corr = F.col("sum_lr").cast("double") / F.sqrt(

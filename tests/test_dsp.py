@@ -471,6 +471,62 @@ def test_decode_view_stereo_and_24bit_wav():
     assert np.array_equal(pcm, (e >> 8).astype(np.int16))
 
 
+def test_decoded_map_fans_out_rows_with_keep_columns(spark):
+    """The shared decode pass (_decoded_map): ``rows`` may yield 0, 1 or 2 rows per
+    clip, keep columns repeat on every output row of their clip, and an
+    undecodable or NULL payload reaches ``rows`` as ``pcm = sr = None``."""
+    from pyspark.sql import types as T
+
+    from seronet_data_validator_spark.operators.audio import _decoded_map
+
+    def wav(samples):
+        return bytearray(wav_bytes(np.array(samples, np.int16), 8000))
+
+    df = spark.createDataFrame(
+        [
+            ("zero", wav([]), "s0", 0),
+            ("one", wav([1000]), "s1", 1),
+            ("two", wav([5, -7]), "s2", 2),
+            ("junk", bytearray(b"not audio"), "s3", 3),
+            ("null", None, "s4", 4),
+        ],
+        "clip_id string, bytes binary, site string, grp int",
+    ).repartition(2)
+    schema = T.StructType(
+        [
+            T.StructField("clip_id", T.StringType()),
+            T.StructField("k", T.IntegerType()),
+            T.StructField("v", T.LongType()),
+            T.StructField("sr", T.IntegerType()),
+        ]
+    )
+
+    def rows(cid, pcm, sr):
+        if pcm is None:
+            yield (cid, None, None, sr)
+            return
+        for k, v in enumerate(pcm.tolist()):
+            yield (cid, k, v, sr)
+
+    out = _decoded_map(
+        df, schema, rows, id_col="clip_id", keep_columns=("site", "grp")
+    )
+    assert out.schema == T.StructType(
+        list(schema.fields)
+        + [T.StructField("site", T.StringType()), T.StructField("grp", T.IntegerType())]
+    )
+    assert sorted((tuple(r) for r in out.collect()), key=repr) == sorted(
+        [
+            ("one", 0, 1000, 8000, "s1", 1),
+            ("two", 0, 5, 8000, "s2", 2),
+            ("two", 1, -7, 8000, "s2", 2),
+            ("junk", None, None, None, "s3", 3),
+            ("null", None, None, None, "s4", 4),
+        ],
+        key=repr,
+    )
+
+
 def test_header_only_duration_uses_frames_for_stereo(spark):
     """C13a.dur check must count FRAMES, not interleaved samples: a stereo
     clip with a correct dur_ms declaration passes; mismatches still fire."""

@@ -7,7 +7,6 @@ from pyspark.sql import functions as F
 from seronet_data_validator_spark.operators import dedup, similarity, text
 from seronet_data_validator_spark.operators.multimodal import (
     audio_features,
-    audio_frame_sample,
     audio_resample,
     image_features,
 )
@@ -212,17 +211,6 @@ def test_audio_features_and_resample(spark):
     res = audio_resample(clips, 16000)
     out = audio_features(res).collect()
     assert all(r["sr_hz"] == 16000 for r in out)
-
-
-def test_audio_frame_sample_shape(spark):
-    clips = generate_clips(spark, 5, seed=42)
-    frames = audio_frame_sample(clips, frame_ms=25, max_frames=4).collect()
-    assert len(frames) > 0
-    by_clip = {}
-    for r in frames:
-        by_clip.setdefault(r["clip_id"], []).append(r)
-        assert len(r["frame"]) >= 1
-    assert all(len(v) <= 4 for v in by_clip.values())
 
 
 def test_image_features_compressed_stubbed(spark):
@@ -939,45 +927,28 @@ def test_benford_profile_shares(spark):
     assert out[9]["deviation"] == round(abs(0.25 - math.log10(10 / 9)), 6)
 
 
-def test_tdigest_accuracy_and_merge_invariance(spark):
-    import numpy as np
-
-    from seronet_data_validator_spark.operators.sketch import (
-        TDigest,
-        tdigest_quantiles,
-    )
+def test_profile_quantile_sketch_tail_accuracy(spark):
+    """The GK sketch behind stats.profile and the tdigest_profile query,
+    on a heavy-tailed column spread over 8 partitions with NULLs: rank
+    error stays under 2e-3 at every probe, p999 included."""
+    import pandas as pd
 
     rng = np.random.default_rng(11)
     data = rng.lognormal(0.0, 1.0, 200_000)  # heavy tail: the hard case
     probs = [0.01, 0.25, 0.5, 0.75, 0.99, 0.999]
-
-    def rank_err(estimates):
-        # the t-digest guarantee is QUANTILE-SPACE error: |F(est) - p|
-        return np.array([abs((data < e).mean() - p)
-                         for e, p in zip(estimates, probs)])
-
-    est = TDigest(200).add(data).quantile(probs)
-    assert np.all(rank_err(est) < 2e-3), rank_err(est)
+    pdf = pd.DataFrame({"v": np.concatenate([data, np.full(50, np.nan)])})
+    pdf["v"] = pdf["v"].astype(object).where(pdf["v"].notna(), None)
+    df = spark.createDataFrame(pdf, "v double").repartition(8)
+    assert df.rdd.getNumPartitions() >= 8
+    row = profile(df, ["v"], quantiles=probs).collect()[0]
+    assert row["n_null"] == 50 and row["n"] == len(data)
+    est = np.array(row["quantiles"])
+    rank_err = np.array([abs((data < e).mean() - p) for e, p in zip(est, probs)])
+    assert np.all(rank_err < 2e-3), rank_err
     # mid-range value-space accuracy is also tight
     exact = np.quantile(data, probs)
-    mid_rel = np.abs(np.array(est[1:5]) - exact[1:5]) / exact[1:5]
+    mid_rel = np.abs(est[1:5] - exact[1:5]) / exact[1:5]
     assert np.all(mid_rel < 0.01), mid_rel
-
-    # merge invariance: union digest ≈ merged partition digests
-    a, b = data[:100_000], data[100_000:]
-    da = TDigest(200).add(a).compress()
-    db = TDigest(200).add(b).compress()
-    merged = TDigest(200).merge_from(da).merge_from(db)
-    assert np.all(rank_err(merged.quantile(probs)) < 3e-3)
-
-    # distributed path: partition digests -> driver merge, NULLs excluded
-    sub = data[:20_000]
-    rows = [(float(v),) for v in sub] + [(None,)] * 50
-    df = spark.createDataFrame(rows, "v double").repartition(8)
-    d_est = tdigest_quantiles(df, "v", probs)
-    sub_rank = np.array([abs((sub < e).mean() - p)
-                         for e, p in zip(d_est, probs)])
-    assert np.all(sub_rank < 3e-3), sub_rank
 
 
 def test_compression_ratio_separates_repetition(spark):
