@@ -346,10 +346,13 @@ def _decoded_map(
     yields that clip's output tuples in ``schema`` order: none, one or
     many. Batches are built with the Arrow types of ``schema`` itself, and
     each keep column rides along once per output row of its clip, so the
-    result is ``schema`` plus the keep columns. Narrow, no shuffle."""
+    result is ``schema`` (its first field, the id, named ``id_col``) plus
+    the keep columns. Narrow, no shuffle."""
     src = clips.select(id_col, "bytes", *keep_columns)
+    id_field, *rest = schema.fields
     out_schema = T.StructType(
-        list(schema.fields) + [src.schema[c] for c in keep_columns]
+        [T.StructField(id_col, id_field.dataType, id_field.nullable)]
+        + rest + [src.schema[c] for c in keep_columns]
     )
     types = [f.type for f in to_arrow_schema(schema)]
 

@@ -68,9 +68,9 @@ def _normalize_params(params: dict[str, Any]) -> dict[str, Any]:
 def _precondition(spec: dict[str, Any]) -> R.Precondition:
     return R.Precondition(
         column=spec["column"],
-        values=tuple(spec["values"]) if spec.get("values") else None,
+        values=spec.get("values") or None,
         kind=spec.get("kind", "in_list"),
-        exempt_values=tuple(spec.get("exempt_values", ())),
+        exempt_values=spec.get("exempt_values", ()),
         emit_not_validated=spec.get("emit_not_validated", True),
     )
 

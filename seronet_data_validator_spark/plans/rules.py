@@ -102,6 +102,13 @@ class Precondition:
     exempt_values: tuple[str, ...] = ()
     emit_not_validated: bool = True
 
+    def __post_init__(self) -> None:
+        # list arguments become tuples, so every Rule stays hashable (the
+        # compiler memoizes lanes keyed on the Rule value)
+        if self.values is not None:
+            object.__setattr__(self, "values", tuple(self.values))
+        object.__setattr__(self, "exempt_values", tuple(self.exempt_values))
+
     def gate(self) -> Column:
         c = F.col(self.column).cast("string")
         if self.kind == "is_number":
@@ -161,6 +168,10 @@ def dict_flag_col(rule_id: str) -> str:
 
 @dataclass(frozen=True)
 class Rule:
+    """One check bound to a column. Hashable: the compiler memoizes each
+    rule's lanes on its value, and check builders compare by identity, so a
+    Rule built once and reused compiles its lanes once (plans/compile.py)."""
+
     rule_id: str
     column: str
     check: CheckFn

@@ -6,6 +6,8 @@ fused pass by plans/compile.py.
 
 from __future__ import annotations
 
+import functools
+
 from seronet_data_validator_spark.plans.rules import (
     Rule,
     RuleSet,
@@ -30,29 +32,35 @@ def clips_ruleset(*, site_registry: list[str] | None = None) -> RuleSet:
     referential (C15), presence (C17), count reconciliation (C18) and the
     decoded-PCM invariant (C13 analog) run as separate table-level operators
     — see runner.validate_clips.
+
+    Each call returns a fresh RuleSet (``add`` on it does not leak into the
+    next call) over the SAME Rule values per site registry, so the
+    compiler's per-rule lane memo (plans/compile.py) hits across calls.
     """
-    rs = RuleSet(table_name="clips", row_ref_column="clip_id")
-    rs.add(
+    rules = _clips_rules(tuple(site_registry or SITES))
+    return RuleSet(table_name="clips", rules=list(rules), row_ref_column="clip_id")
+
+
+@functools.lru_cache(maxsize=8)
+def _clips_rules(site_registry: tuple[str, ...]) -> tuple[Rule, ...]:
+    return (
         Rule(
             "C3.clip_id_format",
             "clip_id",
-            check_id_format(CLIP_ID_PATTERN, registry_prefixes=site_registry or SITES),
-        )
-    )
-    rs.add(
+            check_id_format(CLIP_ID_PATTERN, registry_prefixes=site_registry),
+        ),
         Rule(
             "C6.sr_hz_allowed",
             "sr_hz",
             check_in_list([str(s) for s in SAMPLE_RATES], case_insensitive=False),
-        )
+        ),
+        Rule("C9.dur_ms_range", "dur_ms", check_number(lower=1, upper=600_000, int_only=True)),
+        Rule("C10.transcript_text", "transcript", check_string()),
+        Rule("C14.transcript_required", "transcript", check_required(required="Yes")),
+        # C13b: cross-modal metadata screen — transcript word count vs
+        # declared duration. The fixture's synthetic clips are 50-400 ms
+        # with 3-11 words (7.5-220 words/sec), so the band is calibrated to
+        # 240; real speech corpora would run ~0.5-6 wps.
+        Rule("C13b.speech_rate", "transcript", check_speech_rate("dur_ms", max_wps=240.0)),
+        Rule("C14.codec_required", "codec", check_required(required="Yes")),
     )
-    rs.add(Rule("C9.dur_ms_range", "dur_ms", check_number(lower=1, upper=600_000, int_only=True)))
-    rs.add(Rule("C10.transcript_text", "transcript", check_string()))
-    rs.add(Rule("C14.transcript_required", "transcript", check_required(required="Yes")))
-    # C13b: cross-modal metadata screen — transcript word count vs declared
-    # duration. The fixture's synthetic clips are 50-400 ms with 3-11 words
-    # (7.5-220 words/sec), so the band is calibrated to 240; real speech
-    # corpora would run ~0.5-6 wps.
-    rs.add(Rule("C13b.speech_rate", "transcript", check_speech_rate("dur_ms", max_wps=240.0)))
-    rs.add(Rule("C14.codec_required", "codec", check_required(required="Yes")))
-    return rs

@@ -527,6 +527,39 @@ def test_decoded_map_fans_out_rows_with_keep_columns(spark):
     )
 
 
+@pytest.mark.parametrize(
+    "op",
+    [
+        "qc.audio_qc",
+        "qc.stereo_balance",
+        "qc.audio_dropouts",
+        "qc.loudness_gain",
+        "dsp.hum_detection",
+        "dsp.spectral_features",
+    ],
+)
+def test_pcm_operators_name_the_id_after_id_col(spark, op):
+    """A per-clip PCM operator keeps the caller's id column name: the
+    passes behind ``_decoded_map`` used to emit ``clip_id`` whatever
+    ``id_col`` was, so a post-select of ``id_col`` failed or the id was
+    silently renamed."""
+    import importlib
+
+    mod_name, fn_name = op.split(".")
+    fn = getattr(
+        importlib.import_module(f"seronet_data_validator_spark.operators.{mod_name}"),
+        fn_name,
+    )
+    tone = (3000 * np.sin(np.arange(800) * 0.3)).astype(np.int16)
+    df = spark.createDataFrame(
+        [("a", bytearray(wav_bytes(tone, 8000))), ("b", None)],
+        "cid string, bytes binary",
+    )
+    out = fn(df, id_col="cid")
+    assert out.columns[0] == "cid" and "clip_id" not in out.columns
+    assert {r["cid"] for r in out.collect()} == {"a", "b"}
+
+
 def test_header_only_duration_uses_frames_for_stereo(spark):
     """C13a.dur check must count FRAMES, not interleaved samples: a stereo
     clip with a correct dur_ms declaration passes; mismatches still fire."""
