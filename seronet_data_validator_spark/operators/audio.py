@@ -28,6 +28,9 @@ worker is copied ≥3× (socket write, socket read, Arrow assembly):
     a real SNR comparison is required. Clean corpora — the overwhelmingly
     common case — move ~60 B/clip through Arrow instead of the full clip.
   * **No-reference mode ships headers only** (SNR needs no payload at all).
+  * **QC on ships each full payload once.** The QC1 rules (operators/qc.py)
+    ride the same pass; C13a still parses only the 60-byte prefix where no
+    SNR comparison is real, and no clip is decoded twice.
   * **Transcript equality is evaluated JVM-side** (a Column comparison);
     only mismatching transcripts cross into Python, as the violation value.
   * The reference join is storage-partitioned (bucketed by clip_id) → no
@@ -370,15 +373,22 @@ def _decoded_map(
                 for row in rows(ids[i], pcm, sr):
                     out.append(row)
                     src_row.append(i)
-            cols = zip(*out) if out else [()] * len(types)
-            take = pa.array(src_row, pa.int64())
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(c, type=t) for c, t in zip(cols, types)]
-                + [batch.column(2 + j).take(take) for j in range(len(keep_columns))],
-                names=out_schema.names,
-            )
+            yield _rows_batch(out, types, batch, keep_columns, src_row, out_schema.names)
 
     return src.mapInArrow(run, schema=out_schema)
+
+
+def _rows_batch(rows: list[tuple], types: list, batch: pa.RecordBatch, keep: tuple,
+                src_row: list, names: list[str]) -> pa.RecordBatch:
+    """Output batch of a decode pass: ``rows`` in the Arrow ``types``, then each
+    ``keep`` column of ``batch`` at the row's source index (``None``: NULL)."""
+    cols = zip(*rows) if rows else [()] * len(types)
+    take = pa.array(src_row, pa.int64())
+    return pa.RecordBatch.from_arrays(
+        [pa.array(c, type=t) for c, t in zip(cols, types)]
+        + [batch.column(k).take(take) for k in keep],
+        names=names,
+    )
 
 
 def audio_violations(
@@ -390,8 +400,13 @@ def audio_violations(
     snr_db_min: float = _SNR_DB_MIN,
     dur_tolerance_ms: int = 2,
     force_full_decode: bool = False,
+    invariants: bool = True,
+    qc: bool = False,
+    keep_columns: tuple = (),
 ) -> DataFrame:
-    """Run the decoded-PCM invariant suite; returns a violations DataFrame.
+    """Run the decoded-PCM invariant suite (C13a) and, with ``qc``, the QC1
+    acceptance rules (operators/qc.py) in one Arrow pass; returns a
+    violations DataFrame.
 
     ``reference_clips`` (clip_id, ref_bytes, ref_transcript) joins 1:1 on the
     id; when absent only the self-consistency checks run (header-only — no
@@ -402,55 +417,53 @@ def audio_violations(
     ``force_full_decode=True`` disables the identity fast path (every row
     ships full payloads and runs the Python SNR) — semantically identical,
     used to benchmark the worst-case full-decode throughput.
+
+    ``qc=True`` adds the QC1 rows of every clip that decodes to at least one
+    sample; ``invariants=False`` drops C13a and the join (qc.qc_violations).
+    ``keep_columns`` follow the rows: a QC1 row carries its clip's values, a
+    C13a row NULL (C13a is table-level: the runner's NULL partition).
     """
-    has_ref = reference_clips is not None
-    header = F.substring(F.col("bytes"), 1, 60)  # 44B canonical PCM header
-    # + 16B so the IMA ADPCM fact/data headers (offsets 40..60) ride along
-    if has_ref:
-        ref = reference_clips.select(
-            F.col(id_column), F.col("ref_bytes"), F.col("ref_transcript")
+    ship = keep_columns if qc else ()  # QC off: no more than the header crosses
+    # 60 B = the 44B canonical PCM header + 16B, so the IMA ADPCM fact/data
+    # headers (offsets 40..60) ride along
+    payload = F.col("bytes") if qc else F.substring(F.col("bytes"), 1, 60)
+    df, needs_snr = clips, F.lit(False)
+    ref_payload, bad_transcript = F.lit(None).cast("binary"), F.lit(None).cast("string")
+    if invariants and reference_clips is not None:
+        df = clips.join(
+            reference_clips.select(id_column, "ref_bytes", "ref_transcript"), id_column, "left"
         )
-        df = clips.select(
-            id_column, "bytes", "sr_hz", "dur_ms", "transcript"
-        ).join(ref, id_column, "left")
-        # full payloads cross to Python ONLY when an SNR comparison is real:
-        # both sides present and NOT bit-identical (identical ⇒ SNR = ∞).
-        needs_snr = (
-            F.col("bytes").isNotNull()
-            & F.col("ref_bytes").isNotNull()
-            & ~(F.col("bytes") == F.col("ref_bytes"))
-        )
-        if force_full_decode:
-            needs_snr = F.col("bytes").isNotNull() & F.col("ref_bytes").isNotNull()
+        # C13a needs full payloads ONLY when an SNR comparison is real: both
+        # sides present and NOT bit-identical (identical ⇒ SNR = ∞).
+        needs_snr = F.col("bytes").isNotNull() & F.col("ref_bytes").isNotNull()
+        if not force_full_decode:
+            needs_snr = needs_snr & ~(F.col("bytes") == F.col("ref_bytes"))
         t_bad = F.col("ref_transcript").isNotNull() & ~F.col("transcript").eqNullSafe(
             F.col("ref_transcript")
         )
-        proj = df.select(
-            F.col(id_column),
-            F.col("sr_hz"),
-            F.col("dur_ms"),
-            needs_snr.alias("_full"),
-            F.length("bytes").alias("_blen"),
-            F.when(needs_snr, F.col("bytes")).otherwise(header).alias("_payload"),
-            F.when(needs_snr, F.col("ref_bytes")).alias("_ref_payload"),
-            # only mismatching transcripts cross the Arrow boundary, as the
-            # violation's column_value ('None' mirrors the str(None) the old
-            # pandas path reported for a NULL transcript)
-            F.when(t_bad, F.coalesce(F.col("transcript"), F.lit("None"))).alias("_bad_transcript"),
-        )
-    else:
-        proj = clips.select(
-            F.col(id_column),
-            F.col("sr_hz"),
-            F.col("dur_ms"),
-            F.lit(False).alias("_full"),
-            F.length("bytes").alias("_blen"),
-            header.alias("_payload"),
-            F.lit(None).cast("binary").alias("_ref_payload"),
-            F.lit(None).cast("string").alias("_bad_transcript"),
-        )
+        ref_payload = F.when(needs_snr, F.col("ref_bytes"))
+        # only mismatching transcripts cross the Arrow boundary, as the
+        # violation's column_value ('None' mirrors the str(None) the old
+        # pandas path reported for a NULL transcript)
+        bad_transcript = F.when(t_bad, F.coalesce(F.col("transcript"), F.lit("None")))
+        if not qc:
+            payload = F.when(needs_snr, F.col("bytes")).otherwise(payload)
+    c13a = [F.col("sr_hz"), F.col("dur_ms"), needs_snr.alias("_full"),
+            F.length("bytes").alias("_blen"), ref_payload.alias("_ref_payload"),
+            bad_transcript.alias("_bad_transcript")]
+    proj = df.select(
+        F.col(id_column), payload.alias("_payload"), *(c13a if invariants else ()), *ship
+    )
 
-    out_names = [f.name for f in VIOLATION_SCHEMA.fields]
+    if qc:
+        from seronet_data_validator_spark.operators.qc import (
+            QC1_STATS, clip_stats, qc1_violations)
+    stats = [T.StructField(c, T.LongType()) for c in QC1_STATS] if qc else []
+    out_schema = T.StructType(
+        VIOLATION_SCHEMA.fields + stats + [proj.schema[c] for c in ship]
+    )
+    types = [f.type for f in to_arrow_schema(out_schema)][: len(out_schema) - len(ship)]
+    no_stats = (None,) * len(stats)
 
     def check_batches(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         scratch = (
@@ -460,83 +473,97 @@ def audio_violations(
         for batch in batches:
             col = {n: batch.column(i) for i, n in enumerate(batch.schema.names)}
             n_rows = batch.num_rows
-            ids = col[id_column]  # ids materialize lazily, per violation only
-            full = col["_full"].to_numpy(zero_copy_only=False)
-            blen = pa.compute.fill_null(col["_blen"], 0).to_numpy(zero_copy_only=False)
-            # NULL detection uses the Arrow validity bitmap — a sentinel value
-            # would conflate NULL with a (user-supplied) negative declaration,
-            # silently skipping the mismatch check for adversarial inputs.
-            sr_decl = pa.compute.fill_null(col["sr_hz"], 0).to_numpy(zero_copy_only=False)
-            dur_decl = pa.compute.fill_null(col["dur_ms"], 0).to_numpy(zero_copy_only=False)
-            sr_valid = (
-                col["sr_hz"].is_valid().to_numpy(zero_copy_only=False)
-                if col["sr_hz"].null_count else np.ones(n_rows, dtype=bool)
-            )
-            dur_valid = (
-                col["dur_ms"].is_valid().to_numpy(zero_copy_only=False)
-                if col["dur_ms"].null_count else np.ones(n_rows, dtype=bool)
-            )
-            get_payload, payload_valid = _binary_views(col["_payload"])
-            get_ref, _ = _binary_views(col["_ref_payload"])
-            bad_t = col["_bad_transcript"]
-            bad_t_valid = (
-                bad_t.is_valid().to_numpy(zero_copy_only=False)
-                if bad_t.null_count else np.ones(n_rows, dtype=bool)
-            ) if len(bad_t) else np.zeros(0, dtype=bool)
-
-            out: dict[str, list] = {k: [] for k in out_names}
+            ids = col[id_column]  # ids materialize lazily, per output row only
+            get_payload, _ = _binary_views(col["_payload"])
+            out: list[tuple] = []
+            src_row: list[int | None] = []  # a C13a row takes NULL keep columns
 
             def emit(i: int, column: str, value: str, rule: str, msg: str) -> None:
-                out["severity"].append(SEVERITY_ERROR)
-                out["table_name"].append(table_name)
-                out["row_ref"].append(ids[i].as_py())
-                out["column_name"].append(column)
-                out["column_value"].append(value)
-                out["rule_id"].append(rule)
-                out["message"].append(msg)
+                out.append((SEVERITY_ERROR, table_name, ids[i].as_py(),
+                            column, value, rule, msg) + no_stats)
+                src_row.append(None)
+
+            def valid(name: str) -> np.ndarray:
+                # NULL detection uses the Arrow validity bitmap — a sentinel
+                # value would conflate NULL with a (user-supplied) negative
+                # declaration, silently skipping the mismatch check for
+                # adversarial inputs.
+                a = col[name]
+                return (a.is_valid().to_numpy(zero_copy_only=False) if a.null_count
+                        else np.ones(n_rows, dtype=bool))
+
+            def declared(name: str) -> np.ndarray:
+                return pa.compute.fill_null(col[name], 0).to_numpy(zero_copy_only=False)
+
+            full = np.zeros(n_rows, dtype=bool)
+            if invariants:
+                full = col["_full"].to_numpy(zero_copy_only=False)
+                blen, sr_decl, dur_decl = declared("_blen"), declared("sr_hz"), declared("dur_ms")
+                sr_valid, dur_valid = valid("sr_hz"), valid("dur_ms")
+                get_ref, _ = _binary_views(col["_ref_payload"])
 
             for i in range(n_rows):
                 seg = get_payload(i)
-                try:
-                    if full[i]:
-                        pcm, sr = _decode_view(seg)
-                        n_samples = len(pcm)
+                pcm = None
+                if invariants:
+                    try:
+                        if full[i]:
+                            pcm, sr = _decode_view(seg)
+                            n_samples = len(pcm)
+                        else:  # the header alone, even when the payload is full
+                            n_samples, sr, _fmt, _ch, _bits = _parse_header(
+                                None if seg is None else seg[:60], int(blen[i])
+                            )
+                    except ValueError as e:
+                        emit(i, "bytes", f"<{int(blen[i])}B>",
+                             "C13a.decode", f"audio buffer failed to decode: {e}")
                     else:
-                        n_samples, sr, _fmt, _ch, _bits = _parse_header(
-                            seg, int(blen[i])
-                        )
-                except ValueError as e:
-                    emit(i, "bytes", f"<{int(blen[i])}B>",
-                         "C13a.decode", f"audio buffer failed to decode: {e}")
-                    continue
-                if sr_valid[i] and sr != int(sr_decl[i]):
-                    emit(i, "sr_hz", str(int(sr_decl[i])), "C13a.sr_mismatch",
-                         f"declared sr_hz {int(sr_decl[i])} != decoded {sr}")
-                if dur_valid[i]:
-                    decoded_ms = round(n_samples / sr * 1000.0) if sr else -1
-                    if abs(decoded_ms - int(dur_decl[i])) > dur_tolerance_ms:
-                        emit(i, "dur_ms", str(int(dur_decl[i])), "C13a.dur_mismatch",
-                             f"declared dur_ms {int(dur_decl[i])} != decoded {decoded_ms}")
-                if full[i]:
-                    rseg = get_ref(i)
-                    if rseg is not None:
+                        if sr_valid[i] and sr != int(sr_decl[i]):
+                            emit(i, "sr_hz", str(int(sr_decl[i])), "C13a.sr_mismatch",
+                                 f"declared sr_hz {int(sr_decl[i])} != decoded {sr}")
+                        if dur_valid[i]:
+                            decoded_ms = round(n_samples / sr * 1000.0) if sr else -1
+                            if abs(decoded_ms - int(dur_decl[i])) > dur_tolerance_ms:
+                                emit(i, "dur_ms", str(int(dur_decl[i])), "C13a.dur_mismatch",
+                                     f"declared dur_ms {int(dur_decl[i])} != decoded {decoded_ms}")
+                        rseg = get_ref(i) if full[i] else None
+                        if rseg is not None:
+                            try:
+                                ref_pcm, _sr = _decode_view(rseg)
+                            except ValueError:
+                                ref_pcm = None
+                            if ref_pcm is not None:
+                                s = snr_db(ref_pcm, pcm, scratch)
+                                if s < snr_db_min:
+                                    emit(i, "bytes", f"snr={s:.1f}dB", "C13a.snr",
+                                         f"decoded PCM SNR {s:.1f} dB below required {snr_db_min} dB")
+                if qc:
+                    if not full[i]:  # a failed SNR decode is not retried
                         try:
-                            ref_pcm, _sr = _decode_view(rseg)
+                            pcm, _sr = _decode_view(seg)
                         except ValueError:
-                            ref_pcm = None
-                        if ref_pcm is not None:
-                            s = snr_db(ref_pcm, pcm, scratch)
-                            if s < snr_db_min:
-                                emit(i, "bytes", f"snr={s:.1f}dB", "C13a.snr",
-                                     f"decoded PCM SNR {s:.1f} dB below required {snr_db_min} dB")
-            for i in np.nonzero(bad_t_valid)[0] if len(bad_t_valid) else ():
-                emit(int(i), "transcript", bad_t[int(i)].as_py(), "C13a.transcript",
-                     "transcript does not equal reference transcript")
-            yield pa.RecordBatch.from_pydict(
-                {k: pa.array(out[k], type=pa.string()) for k in out_names}
-            )
+                            pass
+                    if pcm is not None and len(pcm):
+                        out.append((None, None, ids[i].as_py(), None, None, None, None)
+                                   + clip_stats(pcm))
+                        src_row.append(i)
+            for i in np.nonzero(valid("_bad_transcript"))[0] if invariants else ():
+                emit(int(i), "transcript", col["_bad_transcript"][int(i)].as_py(),
+                     "C13a.transcript", "transcript does not equal reference transcript")
+            yield _rows_batch(out, types, batch, ship, src_row, out_schema.names)
 
-    return proj.mapInArrow(check_batches, schema=VIOLATION_SCHEMA)
+    out = proj.mapInArrow(check_batches, schema=out_schema)
+    if not qc:
+        return out.select(
+            *[F.lit(None).cast(clips.schema[c].dataType).alias(c) for c in keep_columns], "*"
+        )
+    # a stats row (NULL rule_id) expands into its QC1 violations, a C13a row
+    # stays itself
+    own = F.array(F.struct(*VIOLATION_SCHEMA.names))
+    rows = F.when(F.col("rule_id").isNull(), qc1_violations(table_name)).otherwise(own)
+    return out.select(F.explode(rows).alias("_v"), *keep_columns).select(
+        "_v.*", *keep_columns
+    )
 
 
 def transcript_cer(

@@ -28,7 +28,9 @@ views, no shuffle) produces the integer stats; every verdict and the
 gain math is native Column code on top, so Catalyst sees ordinary
 projections. At 10^12-clip scale the pass is embarrassingly parallel and
 emits a fixed-width row per clip — the stats table is ~10^6× smaller
-than the corpus.
+than the corpus. The QC1 violations (``qc_violations``) ride the
+audio-invariant pass instead (audio.audio_violations), which decodes
+each clip once for both families.
 """
 
 from __future__ import annotations
@@ -41,6 +43,7 @@ from pyspark.sql import types as T
 from seronet_data_validator_spark.operators.audio import (
     _decode_view_channels,
     _decoded_map,
+    audio_violations,
 )
 
 QC_STATS_SCHEMA = T.StructType(
@@ -62,21 +65,39 @@ QC_FRAME = 160
 SILENCE_PEAK = 328
 
 
+#: The per-clip QC1 stats, in :func:`clip_stats` order.
+QC1_STATS = ("n_samples", "clip_count", "dc_sum", "n_frames", "silence_frames")
+
+
+def clip_stats(
+    s16: np.ndarray, frame: int = QC_FRAME, silence_peak: int = SILENCE_PEAK
+) -> tuple[int, int, int, int, int]:
+    """The :data:`QC1_STATS` of a non-empty decoded clip: samples at full
+    scale (|s| >= 32767), DC sum, and silent-frame counts over
+    non-overlapping ``frame``-sample windows (the trailing partial frame
+    counts as a frame; zero-padding it cannot raise a max-of-abs, so the
+    framing matches a plain ``GROUP BY i // frame`` replay)."""
+    s = s16.astype(np.int64)
+    n = len(s)
+    a = np.abs(s)
+    clip_count = int((a >= 32767).sum())
+    nf = (n + frame - 1) // frame
+    pad = nf * frame - n
+    if pad:
+        a = np.concatenate([a, np.zeros(pad, np.int64)])
+    fpeak = a.reshape(nf, frame).max(axis=1)
+    return n, clip_count, int(s.sum()), nf, int((fpeak < silence_peak).sum())
+
+
 def audio_qc_stats(
     clips: DataFrame,
     *,
     id_col: str = "clip_id",
     frame: int = QC_FRAME,
     silence_peak: int = SILENCE_PEAK,
-    keep_columns: tuple = (),
 ) -> DataFrame:
-    """Integer QC aggregates per clip: samples at full scale (|s| >= 32767),
-    DC sum, and silent-frame counts over non-overlapping ``frame``-sample
-    windows (the trailing partial frame counts as a frame; zero-padding it
-    cannot raise a max-of-abs, so the framing matches a plain
-    ``GROUP BY i // frame`` replay).
-
-    Narrow mapInArrow pass over the real RIFF/FLAC decode
+    """Integer QC aggregates per clip (:func:`clip_stats`). Narrow
+    mapInArrow pass over the real RIFF/FLAC decode
     (operators/audio._decode_view) — a decode bug surfaces as a value
     mismatch in the oracle, exactly like audio_basic_features.
     """
@@ -85,22 +106,49 @@ def audio_qc_stats(
         if s16 is None or len(s16) == 0:
             yield (cid, 0, sr or 0, None, None, None, None)
             return
-        s = s16.astype(np.int64)
-        n = len(s)
-        a = np.abs(s)
-        clip_count = int((a >= 32767).sum())
-        dc_sum = int(s.sum())
-        nf = (n + frame - 1) // frame
-        pad = nf * frame - n
-        if pad:
-            a = np.concatenate([a, np.zeros(pad, np.int64)])
-        fpeak = a.reshape(nf, frame).max(axis=1)
-        silent = int((fpeak < silence_peak).sum())
-        yield (cid, n, sr, clip_count, dc_sum, nf, silent)
+        n, *rest = clip_stats(s16, frame, silence_peak)
+        yield (cid, n, sr, *rest)
 
-    return _decoded_map(
-        clips, QC_STATS_SCHEMA, rows, id_col=id_col, keep_columns=keep_columns
-    )
+    return _decoded_map(clips, QC_STATS_SCHEMA, rows, id_col=id_col)
+
+
+def _qc1_rules() -> list[tuple]:
+    """The QC1 rules over the :data:`QC1_STATS` columns, each (verdict,
+    condition, severity, rule_id, column_value, message). Every condition
+    is an INTEGER comparison, so the booleans replay exactly: clipping
+    (> 0.1% of samples at full scale) is an Error, an irreversibly damaged
+    payload; a silent majority of 20 ms frames and a DC offset above 5% of
+    full scale are Warnings. Spark formats the clipping percentage: it
+    rounds the shortest decimal string HALF_UP, Python's ``round`` does not.
+    """
+    n, cc, dc, nf, sf = (F.col(c) for c in QC1_STATS)
+    pct = F.round(cc * F.lit(100.0) / n, 2).cast("string")
+    return [
+        ("is_clipped", cc * F.lit(1000) > n, "Error", "QC1.clipped", cc,
+         F.concat(F.lit("Clipping on "), pct, F.lit("% of samples (>0.1% allowed)"))),
+        ("is_silent", sf * F.lit(2) > nf, "Warning", "QC1.silent", sf,
+         F.concat(F.lit("Silent majority: "), sf.cast("string"), F.lit("/"),
+                  nf.cast("string"), F.lit(" frames under the silence threshold"))),
+        ("dc_biased", F.abs(dc) * F.lit(20) > F.lit(32767) * n, "Warning",
+         "QC1.dc_offset", dc, F.lit("DC offset above 5% of full scale")),
+    ]
+
+
+def qc1_violations(table_name: str):
+    """The QC1 violations of one stats row (its id in ``row_ref``) as an
+    array of VIOLATION_SCHEMA structs, clean rules compacted away."""
+    return F.array_compact(F.array(*[
+        F.when(cond, F.struct(
+            F.lit(severity).alias("severity"),
+            F.lit(table_name).alias("table_name"),
+            F.col("row_ref"),
+            F.lit("bytes").alias("column_name"),
+            value.cast("string").alias("column_value"),
+            F.lit(rule_id).alias("rule_id"),
+            message.alias("message"),
+        ))
+        for _name, cond, severity, rule_id, value, message in _qc1_rules()
+    ]))
 
 
 def audio_qc(
@@ -109,34 +157,15 @@ def audio_qc(
     id_col: str = "clip_id",
     frame: int = QC_FRAME,
     silence_peak: int = SILENCE_PEAK,
-    keep_columns: tuple = (),
 ) -> DataFrame:
-    """Per-clip QC verdicts over :func:`audio_qc_stats`.
-
-    Every rule is an INTEGER comparison so the booleans replay exactly:
-
-    * ``is_clipped`` — more than 0.1% of samples at full scale
-      (``clip_count * 1000 > n_samples``).
-    * ``is_silent`` — a majority of 20 ms frames under the silence
-      threshold (``silence_frames * 2 > n_frames``).
-    * ``dc_biased`` — |mean| above 5% of full scale, compared in the
-      integer domain (``|dc_sum| * 20 > 32767 * n_samples``).
-    * ``qc_pass`` — none of the above (undecodable clips get NULL
-      verdicts and qc_pass = false).
+    """Per-clip QC verdicts over :func:`audio_qc_stats`: ``is_clipped``,
+    ``is_silent`` and ``dc_biased`` are the QC1 rules (:func:`_qc1_rules`);
+    ``qc_pass`` is none of them (undecodable clips get NULL verdicts and
+    qc_pass = false).
     """
-    stats = audio_qc_stats(
-        clips,
-        id_col=id_col,
-        frame=frame,
-        silence_peak=silence_peak,
-        keep_columns=keep_columns,
-    )
+    stats = audio_qc_stats(clips, id_col=id_col, frame=frame, silence_peak=silence_peak)
     decoded = F.col("clip_count").isNotNull()
-    is_clipped = F.col("clip_count") * F.lit(1000) > F.col("n_samples")
-    is_silent = F.col("silence_frames") * F.lit(2) > F.col("n_frames")
-    dc_biased = F.abs(F.col("dc_sum")) * F.lit(20) > F.lit(32767) * F.col(
-        "n_samples"
-    )
+    v = {name: F.when(decoded, cond) for name, cond, *_ in _qc1_rules()}
     return stats.select(
         id_col,
         "n_samples",
@@ -145,14 +174,10 @@ def audio_qc(
         "dc_sum",
         "n_frames",
         "silence_frames",
-        F.when(decoded, is_clipped).alias("is_clipped"),
-        F.when(decoded, is_silent).alias("is_silent"),
-        F.when(decoded, dc_biased).alias("dc_biased"),
+        *[c.alias(name) for name, c in v.items()],
         F.coalesce(
-            F.when(decoded, ~(is_clipped | is_silent | dc_biased)),
-            F.lit(False),
+            ~(v["is_clipped"] | v["is_silent"] | v["dc_biased"]), F.lit(False)
         ).alias("qc_pass"),
-        *keep_columns,
     )
 
 
@@ -303,86 +328,19 @@ def qc_violations(
     *,
     table_name: str = "clips",
     id_column: str = "clip_id",
-    frame: int = QC_FRAME,
-    silence_peak: int = SILENCE_PEAK,
     keep_columns: tuple = (),
 ) -> DataFrame:
-    """Lifecycle adapter: :func:`audio_qc` verdicts as violation rows
-    (model.VIOLATION_SCHEMA), for the optional QC pass in
-    runner.validate_clips — clipping is an Error (irreversibly damaged
-    payload), silence-majority and DC bias are Warnings (salvageable, but
-    a training pipeline wants them surfaced). Undecodable clips emit
-    NOTHING here: the C13 audio-invariant pass owns decode failures, and
-    the C22 dedup would otherwise have to break the tie.
-
-    Same emission shape as the fused rule pass (plans/compile.py):
-    array_compact over per-rule structs + explode_outer, so clean clips
-    cost one NULL row and the pass adds no join or shuffle.
+    """The QC1 rules (:func:`_qc1_rules`) as violation rows
+    (model.VIOLATION_SCHEMA): the QC-only mode of the lifecycle's one
+    payload pass, audio.audio_violations. Undecodable and zero-sample clips
+    emit NOTHING here: the C13a audio-invariant pass owns decode failures,
+    and the C22 dedup would otherwise have to break the tie. Clean clips
+    emit nothing and the pass adds no join or shuffle.
     """
-    qc = audio_qc(
-        clips,
-        id_col=id_column,
-        frame=frame,
-        silence_peak=silence_peak,
-        keep_columns=keep_columns,
+    return audio_violations(
+        clips, table_name=table_name, id_column=id_column,
+        invariants=False, qc=True, keep_columns=keep_columns,
     )
-
-    def emit(cond, severity, rule_id, value, message):
-        return F.when(
-            F.coalesce(cond, F.lit(False)),
-            F.struct(
-                F.lit(severity).alias("severity"),
-                F.lit(table_name).alias("table_name"),
-                F.col(id_column).cast("string").alias("row_ref"),
-                F.lit("bytes").alias("column_name"),
-                value.cast("string").alias("column_value"),
-                F.lit(rule_id).alias("rule_id"),
-                message.alias("message"),
-            ),
-        )
-
-    pct = F.round(
-        F.col("clip_count") * F.lit(100.0) / F.col("n_samples"), 2
-    ).cast("string")
-    arr = F.array_compact(
-        F.array(
-            emit(
-                F.col("is_clipped"),
-                "Error",
-                "QC1.clipped",
-                F.col("clip_count"),
-                F.concat(
-                    F.lit("Clipping on "), pct, F.lit("% of samples (>0.1% allowed)")
-                ),
-            ),
-            emit(
-                F.col("is_silent"),
-                "Warning",
-                "QC1.silent",
-                F.col("silence_frames"),
-                F.concat(
-                    F.lit("Silent majority: "),
-                    F.col("silence_frames").cast("string"),
-                    F.lit("/"),
-                    F.col("n_frames").cast("string"),
-                    F.lit(" frames under the silence threshold"),
-                ),
-            ),
-            emit(
-                F.col("dc_biased"),
-                "Warning",
-                "QC1.dc_offset",
-                F.col("dc_sum"),
-                F.lit("DC offset above 5% of full scale"),
-            ),
-        )
-    )
-    out = (
-        qc.select(*keep_columns, F.explode_outer(arr).alias("_v"))
-        .where(F.col("_v").isNotNull())
-        .select("_v.*", *keep_columns)
-    )
-    return out
 
 
 #: Container magic → the codec families that legitimately ship in it.

@@ -3,7 +3,8 @@
 validate_clips(): (1) schema contract (driver-side, C21) → (2) resume filter
 (skip checkpointed partitions) → (3) ONE fused row-level rule pass →
 (4) uniqueness + referential + count-reconciliation table passes →
-(5) decoded-PCM invariant pass (Arrow pandas UDF) → (6) union violations and
+(5) ONE payload pass (Arrow): the decoded-PCM invariants and, with
+``run_qc_pass``, the QC1 acceptance rules → (6) union violations and
 per-partition row counts → (7) persist; ONE aggregation gives the verdicts
 (pass = zero Error rows, the reference's Data_Validation_v1.py:191-199) →
 (8) durable runs write the violations from the cache, release it, commit one
@@ -12,9 +13,11 @@ run-manifest row per partition (the verdict of record, read back by
 
 Plan shape at scale: pass (3) and (5) are narrow (no shuffle); (4) shuffles
 once per distinct aggregation key; the verdict aggregation reuses the
-partition column so AQE coalesces it. Total: one scan of the fact table for
-rules, one for audio (bytes pruned from the rules scan), small shuffles of
-key projections only.
+partition column so AQE coalesces it. Over bucketed tables with audio,
+references and an inlined registry: 5 scans (the fact table for rules with
+bytes pruned, C4 ids, the payload pass and row counts; the references), one
+Python node, QC or not, and 3 exchanges (references' broadcast, row counts,
+dedup).
 """
 
 from __future__ import annotations
@@ -35,8 +38,6 @@ from seronet_data_validator_spark.model import (
     SEVERITY_WARNING,
     VIOLATION_SCHEMA,
 )
-# qc.qc_violations is resolved per call: perfbench/trace.py wraps it on its module
-from seronet_data_validator_spark.operators import qc
 from seronet_data_validator_spark.operators.audio import audio_violations
 from seronet_data_validator_spark.operators.integrity import (
     consistency_violations,
@@ -88,15 +89,27 @@ class ValidationResult:
     """``violations`` of a durable run (``output_root``) is a lazy read of
     the stored violations of ``run_id``, skipped partitions included; the
     run has released its cache. An in-memory run's ``violations`` reads the
-    persisted result, which the caller owns: it stays cached until the
-    caller runs ``spark.catalog.clearCache()`` (``unpersist()`` on the
-    returned frame does not match the cached plan)."""
+    persisted result, which the caller owns: ``close()`` (or leaving a
+    ``with`` block) releases it. Calls served from one prepared plan share
+    that cache entry."""
 
     run_id: str
     violations: DataFrame
     verdicts: list[dict] = field(default_factory=list)
     passed: bool = True
     skipped_partitions: list[str] = field(default_factory=list)
+    _persisted: DataFrame | None = field(default=None, repr=False, compare=False)
+
+    def close(self) -> None:
+        """Unpersist what the run persisted; ``violations`` then recomputes."""
+        if self._persisted is not None:
+            self._persisted.unpersist()
+
+    def __enter__(self) -> ValidationResult:
+        return self
+
+    def __exit__(self, *exc) -> None:
+        self.close()
 
 
 # Compiled-plan cache (PREPARED-STATEMENT reuse, not result caching): the
@@ -156,7 +169,8 @@ def validate_clips(
     * ``run_qc_pass`` — QC1 corpus acceptance verdicts over the decoded
       PCM (operators/qc.py): clipping → Error, silence-majority and DC
       bias → Warnings. Beyond-reference: the audio analog of the
-      reference's per-cell value rules, as a second narrow Arrow pass.
+      reference's per-cell value rules, run inside the audio pass (5),
+      which then ships each full payload to Python once.
     """
     t0 = time.perf_counter()
     rs = ruleset or clips_ruleset()
@@ -274,7 +288,7 @@ def violation_families(
     audio_force_full_decode: bool = False,
     run_qc_pass: bool,
 ) -> list[DataFrame]:
-    """Steps (3)-(5b): the violation families of ``df`` in pass order (the
+    """Steps (3)-(5): the violation families of ``df`` in pass order (the
     C22 dedup's first-writer order), for ``validate_clips`` and for each
     micro-batch of ``stream_validate_clips``. With ``partition_column=None``
     the families carry only the VIOLATION_SCHEMA columns."""
@@ -374,25 +388,16 @@ def violation_families(
             cv = _with_null_part(cv, partition_column)
         parts.append(cv)
 
-    # (5) audio invariant pass (Arrow pandas UDF) — narrow, partition-parallel.
-    if run_audio_pass and "bytes" in df.columns:
-        av = audio_violations(df, reference_clips, table_name=rs.table_name,
-                              id_column=rs.row_ref_column,
-                              force_full_decode=audio_force_full_decode)
-        parts.append(_with_null_part(av, partition_column))
-
-    # (5b) optional QC1 acceptance pass — same narrow Arrow shape as (5);
-    # the partition column rides the batch through, so each verdict lands
-    # on its real partition (no NULL-sentinel needed).
-    if run_qc_pass and "bytes" in df.columns:
-        parts.append(
-            qc.qc_violations(
-                df,
-                table_name=rs.table_name,
-                id_column=rs.row_ref_column,
-                keep_columns=keep,
-            )
-        )
+    # (5) one payload pass (Arrow, narrow): C13a rows land on the NULL
+    # partition, QC1 rows on their clip's own. One _ord serves both families:
+    # their dedup keys cannot collide (on column bytes, C13a values are
+    # <NB>/snr=..., QC1 values integers), so first-writer-wins is unchanged.
+    if (run_audio_pass or run_qc_pass) and "bytes" in df.columns:
+        parts.append(audio_violations(
+            df, reference_clips, table_name=rs.table_name,
+            id_column=rs.row_ref_column, force_full_decode=audio_force_full_decode,
+            invariants=run_audio_pass, qc=run_qc_pass, keep_columns=keep,
+        ))
     return parts
 
 
@@ -505,7 +510,7 @@ def _finish_validation(
     return ValidationResult(
         run_id,
         real_violations.select(*[f.name for f in VIOLATION_SCHEMA.fields]),
-        verdicts, passed, skipped,
+        verdicts, passed, skipped, None if output_root else violations,
     )
 
 

@@ -48,9 +48,8 @@ def test_validate_clips_plan_cache_hits_and_results_identical(spark):
                             reference_clips=refs, run_id="c")
     assert len(R._PLAN_CACHE) == 2
     assert _sorted_rows(res3.violations) == rows1
-    # the returned frames are projections of the persisted results, so
-    # their unpersist() matches no cached plan; release them all
-    spark.catalog.clearCache()
+    for res in (res1, res2, res3):
+        res.close()
 
 
 def test_validate_clips_plan_cache_skips_durable_runs(tmp_path, spark):
