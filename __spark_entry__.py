@@ -805,13 +805,10 @@ def q_user_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_stream_sessions_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Batch replay of streaming/stateful.sessionize_stream's closed-session
-    emission — same key/gap parameters, same output schema (key,
-    session_start, session_end, n_events). tests/test_streaming.py proves
-    the stateful stream (applyInPandasWithState, EventTimeTimeout) emits
-    row-identically to this temporal.sessionize replay on shared fixtures,
-    so the driver's value check on this query transfers to the
-    stateful-streaming path."""
+    """Closed gap sessions as a batch query: temporal.sessionize with the
+    user_sessions key and 30-minute gap, projected to a closed-session
+    emission's schema (key, session_start, session_end, n_events). The
+    DuckDB oracle replays the same lag -> flag -> running-sum closure."""
     from seronet_data_validator_spark.operators.temporal import sessionize
 
     ev = _t(spark, sf_dir, "events").select("user_id", "ts")
@@ -5854,9 +5851,8 @@ GROUP BY clip_id
             SELECT c.codec, c.n_clips, r.container, r.lossy
             FROM clip_counts c LEFT JOIN reg r USING (codec)
         """,
-        # batch replay of the stateful stream's closed-session emission:
-        # same lag->flag->running-sum closure as user_sessions, projected to
-        # the stream's output schema (key, session_start, session_end,
+        # closed gap sessions: same lag->flag->running-sum closure as
+        # user_sessions, projected to (key, session_start, session_end,
         # n_events)
         "stream_sessions_replay": """
             WITH flagged AS (

@@ -25,7 +25,6 @@ from __future__ import annotations
 
 import json
 import os
-import shutil
 import time
 
 from pyspark.errors import AnalysisException
@@ -136,33 +135,6 @@ class RunManifest:
         local_df(self.spark, rows, MANIFEST_SCHEMA).coalesce(1).write.mode(
             "append"
         ).parquet(self.path)
-
-    def compact(self, *, target_files: int = 1) -> int:
-        """Rewrite the manifest into ``target_files`` parquet files.
-
-        Each :meth:`commit` appends one small file; thousands of runs →
-        thousands of tiny files and a slow manifest read. Call this from a
-        maintenance cadence. Returns the row count compacted.
-
-        The production analog is an Iceberg ``rewrite_data_files`` table
-        service — Iceberg makes the swap an atomic snapshot commit; on a
-        plain filesystem we materialize off the source files
-        (localCheckpoint), stage to a temp dir and rename, with a ``.old``
-        fallback so a crash mid-swap loses nothing readable."""
-        df = self._read()
-        if df is None:
-            return 0
-        snap = df.localCheckpoint(eager=True)
-        n = snap.count()
-        tmp = self.path + ".compact.tmp"
-        old = self.path + ".compact.old"
-        shutil.rmtree(tmp, ignore_errors=True)
-        snap.coalesce(max(1, target_files)).write.mode("overwrite").parquet(tmp)
-        shutil.rmtree(old, ignore_errors=True)
-        os.rename(self.path, old)
-        os.rename(tmp, self.path)
-        shutil.rmtree(old, ignore_errors=True)
-        return n
 
 
 def partition_verdicts(spark: SparkSession, output_root: str) -> DataFrame:

@@ -7,9 +7,7 @@ audio pass in operators/audio.py.
 
 from seronet_data_validator_spark.functions.tristate import (
     is_blank,
-    is_missing,
     is_na,
-    is_present,
 )
 from seronet_data_validator_spark.functions.casts import (
     as_number,
@@ -20,9 +18,7 @@ from seronet_data_validator_spark.functions.casts import (
 
 __all__ = [
     "is_blank",
-    "is_missing",
     "is_na",
-    "is_present",
     "as_number",
     "as_timestamp",
     "is_number",

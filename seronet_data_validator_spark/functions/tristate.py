@@ -28,11 +28,3 @@ def is_na(c: Column) -> Column:
     reference compares — File_Submission_Object.py:374)."""
     return c == F.lit("N/A")
 
-
-def is_missing(c: Column) -> Column:
-    """Blank or N/A — out-of-scope for most value rules."""
-    return is_blank(c) | is_na(c)
-
-
-def is_present(c: Column) -> Column:
-    return ~is_blank(c)

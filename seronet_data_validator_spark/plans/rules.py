@@ -212,11 +212,6 @@ class RuleSet:
         self.rules.append(rule)
         return self
 
-    def required_columns(self) -> set[str]:
-        cols = {r.column for r in self.rules}
-        cols |= {r.precondition.column for r in self.rules if r.precondition}
-        return cols
-
 
 # ---------------------------------------------------------------------------
 # Check builders — each mirrors one reference primitive (cited per builder).

@@ -5,25 +5,16 @@ folder/status reprocessing, which the batch engine maps to checkpoint/resume.
 This module adds the genuinely-streaming path for continuous ingestion: the
 same fused RuleSet applied to a readStream, with violations appended per
 micro-batch via foreachBatch (which also runs the table-level checks that
-need a batch view), plus watermarked windowed aggregation for event streams.
+need a batch view and the cross-batch key log), plus one watermarked
+windowed aggregation, the per-window PSI drift monitor.
 """
 
-from seronet_data_validator_spark.streaming.stateful import (
-    sessionize_stream,
-    stream_sessionize,
-)
 from seronet_data_validator_spark.streaming.validate_stream import (
-    stream_dedup_within_watermark,
     stream_validate_clips,
     windowed_drift,
-    windowed_event_counts,
 )
 
 __all__ = [
-    "sessionize_stream",
-    "stream_dedup_within_watermark",
-    "stream_sessionize",
     "stream_validate_clips",
     "windowed_drift",
-    "windowed_event_counts",
 ]

@@ -5,9 +5,13 @@ runner uses — one definition of the rules and their families, two execution
 modes. The codec registry is resolved per micro-batch as the batch runner
 resolves it per call; the audio pass runs only when ``reference_clips`` is
 given. The one stream-only family is C4.cross_batch_dup: a durable compact
-key log (id, batch_id) makes uniqueness GLOBAL across batches — the
-foreachBatch analog of dropDuplicatesWithinWatermark state that also
-survives restarts.
+key log (id, first batch_id) makes uniqueness GLOBAL across batches and
+survives restarts. Each micro-batch lists the log once and uses that one
+listing for the cross-batch semi-join and for compaction.
+
+``windowed_drift`` is the one watermarked windowed aggregation: per-window
+PSI drift against a static reference profile, the same plan on batch and
+streaming inputs (two entry queries call it).
 
 At scale this is the continuous-ingestion path: new Iceberg/parquet files
 land, availableNow/continuous triggers pick them up, violations append to
@@ -82,10 +86,12 @@ def stream_validate_clips(
     lives at ``<output_root>/_checkpoint``.
 
     The cross-batch uniqueness key log is COMPACTED every
-    ``compact_seen_keys_every`` batches: tail files (one per batch) are
-    folded into a single ``snap=<batch_id>`` snapshot keyed on the id with
-    its FIRST batch_id (so the replay guard ``batch_id < current`` keeps
-    working), older snapshots and tail files are removed. Per-batch read
+    ``compact_seen_keys_every`` batches. A batch that does not compact
+    appends its keys to ``seen_keys/tail`` (one file per batch). A batch
+    that compacts writes ONE ``snap=<batch_id>`` snapshot straight from the
+    latest snapshot, the tail and its own keys, keyed on the id with its
+    FIRST batch_id (so the replay guard ``batch_id < current`` keeps
+    working), then removes the older snapshots and the tail. Per-batch read
     volume is therefore bounded — one snapshot + at most
     ``compact_seen_keys_every`` tail files — instead of growing with stream
     lifetime. (Production: the log is a bucketed Iceberg table and the
@@ -114,22 +120,21 @@ def stream_validate_clips(
             run_qc_pass=run_qc_pass,
         )
         # cross-batch uniqueness: C4.dup_id only sees THIS micro-batch. The
-        # key log read is the LATEST snapshot plus the post-snapshot tail —
-        # bounded, not O(stream history). batch_id < current keeps replays
-        # (at-least-once foreachBatch) from flagging a batch against its own
-        # earlier append; snapshots keep each key's FIRST batch_id. Appended
-        # last: its dedup key (row_ref "-3", the id column) is shared only
-        # with C4.dup_id, which keeps the row.
-        read_paths = []
+        # key log is listed ONCE per batch — the LATEST snapshot plus the
+        # post-snapshot tail, bounded, not O(stream history) — and that one
+        # listing serves both the semi-join below and the compaction.
+        # batch_id < current keeps replays (at-least-once foreachBatch) from
+        # flagging a batch against its own earlier write; snapshots keep each
+        # key's FIRST batch_id. Appended last: its dedup key (row_ref "-3",
+        # the id column) is shared only with C4.dup_id, which keeps the row.
         snaps = _seen_snapshots(seen_root)
-        if snaps:
-            read_paths.append(os.path.join(seen_root, f"snap={snaps[-1]}"))
+        log_paths = [os.path.join(seen_root, f"snap={snaps[-1]}")] if snaps else []
         if os.path.isdir(seen_tail):
-            read_paths.append(seen_tail)
-        if read_paths:
+            log_paths.append(seen_tail)
+        log = sp.read.schema(seen_schema).parquet(*log_paths) if log_paths else None
+        if log is not None:
             prior_keys = (
-                sp.read.schema(seen_schema).parquet(*read_paths)
-                .where(F.col("batch_id") < batch_id)
+                log.where(F.col("batch_id") < batch_id)
                 .select(rs.row_ref_column).dropDuplicates([rs.row_ref_column])
             )
             key = F.col(rs.row_ref_column)
@@ -160,44 +165,38 @@ def stream_validate_clips(
             .partitionBy("batch_id")
             .parquet(viol_path)
         )
-        # append this batch's keys to the log AFTER the violation write so a
+        # this batch's keys go to the log AFTER the violation write so a
         # mid-batch crash never records keys whose violations were lost
-        (
-            batch_df.select(
-                F.col(rs.row_ref_column).cast("string").alias(rs.row_ref_column),
-                F.lit(batch_id).cast("long").alias("batch_id"),
-            )
-            .write.mode("append")
-            .parquet(seen_tail)
+        keys = batch_df.select(
+            F.col(rs.row_ref_column).cast("string").alias(rs.row_ref_column),
+            F.lit(batch_id).cast("long").alias("batch_id"),
         )
-        # periodic compaction: fold snapshot + tail into ONE new snapshot
-        # (key → first batch_id), then drop superseded snapshots and tail
-        # files. Crash windows are safe: the .tmp dir is invisible to the
-        # reader until the atomic rename, a stale older snapshot is simply
-        # not the max, and un-deleted tail files only re-supply rows the
-        # snapshot already holds (dropDuplicates on read absorbs them).
-        if compact_seen_keys_every and batch_id > 0 and batch_id % compact_seen_keys_every == 0:
-            src = []
-            snaps = _seen_snapshots(seen_root)
-            if snaps:
-                src.append(os.path.join(seen_root, f"snap={snaps[-1]}"))
-            if os.path.isdir(seen_tail):
-                src.append(seen_tail)
-            if src:
-                compacted = (
-                    sp.read.schema(seen_schema).parquet(*src)
-                    .groupBy(rs.row_ref_column)
-                    .agg(F.min("batch_id").alias("batch_id"))
-                )
-                tmp = os.path.join(seen_root, f"snap={batch_id}.tmp")
-                final = os.path.join(seen_root, f"snap={batch_id}")
-                shutil.rmtree(tmp, ignore_errors=True)
-                compacted.write.mode("overwrite").parquet(tmp)
-                os.rename(tmp, final)
-                for s in snaps:
-                    shutil.rmtree(os.path.join(seen_root, f"snap={s}"),
-                                  ignore_errors=True)
-                shutil.rmtree(seen_tail, ignore_errors=True)
+        if not (compact_seen_keys_every and batch_id % compact_seen_keys_every == 0):
+            keys.write.mode("append").parquet(seen_tail)
+            return
+        # compaction: ONE new snapshot (key → first batch_id) written straight
+        # from the listing above plus this batch's keys, then the superseded
+        # snapshots and the tail are dropped. Crash windows are safe: the .tmp
+        # dir is invisible to the reader until the atomic rename, a stale
+        # older snapshot is simply not the max, and an un-deleted tail only
+        # re-supplies rows the snapshot already holds (dropDuplicates on read
+        # absorbs them). A replay that finds snap=<batch_id> already renamed
+        # skips the rewrite: the earlier attempt folded this batch's keys.
+        final = os.path.join(seen_root, f"snap={batch_id}")
+        if not os.path.isdir(final):
+            src = keys if log is None else log.unionByName(keys)
+            tmp = final + ".tmp"
+            shutil.rmtree(tmp, ignore_errors=True)
+            (
+                src.groupBy(rs.row_ref_column)
+                .agg(F.min("batch_id").alias("batch_id"))
+                .write.mode("overwrite").parquet(tmp)
+            )
+            os.rename(tmp, final)
+        for s in snaps:
+            if s != batch_id:
+                shutil.rmtree(os.path.join(seen_root, f"snap={s}"), ignore_errors=True)
+        shutil.rmtree(seen_tail, ignore_errors=True)
 
     writer = (
         stream.writeStream.foreachBatch(process_batch)
@@ -207,79 +206,6 @@ def stream_validate_clips(
     if trigger_available_now:
         writer = writer.trigger(availableNow=True)
     return writer.start()
-
-
-def stream_dedup_within_watermark(
-    spark: SparkSession,
-    input_path: str,
-    output_root: str,
-    *,
-    id_col: str = "clip_id",
-    watermark: str = "10 minutes",
-    trigger_available_now: bool = True,
-    max_files_per_trigger: int | None = None,
-):
-    """Bounded-lateness streaming EXACT DEDUP: keep the first arrival of
-    each ``id_col``, drop re-arrivals within the watermark horizon, via
-    ``dropDuplicatesWithinWatermark`` (state-store-backed — the engine
-    evicts per-key state once the watermark passes, so state is bounded by
-    arrival rate × horizon, not by stream lifetime).
-
-    This is the curation-path complement to ``stream_validate_clips``'s
-    key-log uniqueness: the key log FLAGS duplicates as C4 violations with
-    exact GLOBAL history (survives restarts, unbounded horizon, compacted
-    reads); this operator SILENTLY DROPS them for ingest-dedup pipelines
-    where only the first copy should land, and is the right tool when
-    duplicates only ever arrive within a bounded lateness window. Event
-    time is the ingest timestamp — re-sends beyond the horizon are NOT
-    deduped (document the horizon as a data contract, or use the key log).
-
-    Returns the StreamingQuery; deduped rows land in
-    ``<output_root>/deduped`` with the checkpoint at
-    ``<output_root>/_dedup_checkpoint``."""
-    reader = spark.readStream.schema(CLIPS_SCHEMA)
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    stream = (
-        reader.parquet(input_path)
-        .withColumn("ingest_ts", F.current_timestamp())
-        .withWatermark("ingest_ts", watermark)
-        .dropDuplicatesWithinWatermark([id_col])
-    )
-    writer = (
-        stream.writeStream.format("parquet")
-        .option("path", os.path.join(output_root, "deduped"))
-        .option("checkpointLocation", os.path.join(output_root, "_dedup_checkpoint"))
-        .outputMode("append")
-    )
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
-
-
-def windowed_event_counts(
-    events_stream: DataFrame,
-    *,
-    window: str = "1 hour",
-    watermark: str = "2 hours",
-    ts_col: str = "ts",
-    key_col: str = "event_type",
-) -> DataFrame:
-    """Watermarked tumbling-window aggregation over an event stream — the
-    late-data-tolerant streaming analog of the batch events_hourly query.
-    Works on both streaming and batch DataFrames (same plan)."""
-    return (
-        events_stream.withWatermark(ts_col, watermark)
-        .groupBy(F.window(F.col(ts_col), window).alias("win"), F.col(key_col))
-        .agg(F.count(F.lit(1)).alias("n"), F.round(F.sum("value"), 2).alias("sum_value"))
-        .select(
-            F.col("win.start").alias("window_start"),
-            F.col("win.end").alias("window_end"),
-            key_col,
-            "n",
-            "sum_value",
-        )
-    )
 
 
 def windowed_drift(

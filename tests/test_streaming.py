@@ -9,10 +9,7 @@ from seronet_data_validator_spark.sources.clips import (
     codec_registry_df,
     generate_clips,
 )
-from seronet_data_validator_spark.streaming import (
-    stream_validate_clips,
-    windowed_event_counts,
-)
+from seronet_data_validator_spark.streaming import stream_validate_clips
 
 
 def test_stream_validate_clips(spark, tmp_path):
@@ -125,44 +122,6 @@ def test_seen_key_log_compaction_bounded(spark, tmp_path):
     assert log.select("clip_id").distinct().count() == n_ids
 
 
-def test_stream_dedup_within_watermark(spark, tmp_path):
-    """State-store dedup keeps the first arrival per id across micro-batches
-    and drops re-arrivals inside the watermark horizon."""
-    from seronet_data_validator_spark.streaming import stream_dedup_within_watermark
-
-    inp = str(tmp_path / "in")
-    out = str(tmp_path / "out")
-    base = generate_clips(spark, 60, seed=5).cache()
-    # three landed files: originals, a full duplicate wave, fresh rows —
-    # maxFilesPerTrigger=1 forces them into separate micro-batches
-    base.coalesce(1).write.parquet(inp)
-    base.limit(25).coalesce(1).write.mode("append").parquet(inp)
-    fresh = generate_clips(spark, 20, seed=99).coalesce(1)
-    fresh.write.mode("append").parquet(inp)
-
-    q = stream_dedup_within_watermark(
-        spark, inp, out, watermark="10 minutes", max_files_per_trigger=1
-    )
-    q.awaitTermination(180)
-
-    got = spark.read.parquet(os.path.join(out, "deduped"))
-    n_unique = (
-        base.select("clip_id").union(fresh.select("clip_id")).distinct().count()
-    )
-    assert got.select("clip_id").distinct().count() == n_unique
-    # every surviving row is unique — the duplicate wave was dropped
-    assert got.count() == n_unique
-
-
-def test_windowed_event_counts_matches_batch(spark):
-    ev = spark.read.parquet("/root/testdata/sf0.001/events.parquet")
-    out = windowed_event_counts(ev, window="1 hour", watermark="2 hours")
-    rows = out.collect()
-    assert len(rows) > 0
-    total = sum(r["n"] for r in rows)
-    assert total == ev.count()
-
-
 def test_windowed_drift_batch_and_stream_agree(spark, tmp_path):
     """PSI per tumbling window: ~0 when the reference profile matches the
     stream, large when shifted; the identical plan runs batch and streaming
@@ -205,56 +164,44 @@ def test_windowed_drift_batch_and_stream_agree(spark, tmp_path):
     assert got and got <= want and len(want) - len(got) <= 1
 
 
-def test_stream_sessionize_stateful(spark, tmp_path):
-    """applyInPandasWithState sessionization: inline gap-closure within a
-    batch, event-time-timeout closure once the watermark passes, per-key
-    state surviving a restart, and agreement with batch sessionize."""
-    import datetime
+def test_replayed_compacting_batch_is_idempotent(spark, tmp_path):
+    """A compacting micro-batch whose commit was lost after its snapshot
+    rename (a crash between the key-log write and the stream commit) replays
+    on restart. The replay must find snap=<batch_id> already folded, keep the
+    stream alive, and leave the violations and the key log as the first run
+    wrote them."""
+    inp = str(tmp_path / "in")
+    out = str(tmp_path / "out")
+    # three single-file micro-batches; the third repeats 4 ids of the first
+    for n, seed in ((10, 11), (10, 12), (4, 11)):
+        generate_clips(spark, n, seed=seed).coalesce(1).write.mode("append").parquet(inp)
+    ids = {r[0] for r in spark.read.parquet(inp).select("clip_id").distinct().collect()}
 
-    from seronet_data_validator_spark.operators.temporal import sessionize
-    from seronet_data_validator_spark.streaming import stream_sessionize
+    def run():
+        q = stream_validate_clips(
+            spark, inp, out, max_files_per_trigger=1, compact_seen_keys_every=1,
+        )
+        q.awaitTermination(180)
+        assert q.exception() is None
+        viols = spark.read.parquet(os.path.join(out, "violations_stream"))
+        return sorted(tuple(r) for r in viols.collect())
 
-    inp, out = str(tmp_path / "in"), str(tmp_path / "out")
-    base = datetime.datetime(2024, 1, 1)
-    ts = lambda s: base + datetime.timedelta(seconds=s)  # noqa: E731
-    schema = "user_id long, ts timestamp"
-    rows1 = [(1, ts(0)), (1, ts(10)), (1, ts(2000)), (2, ts(5))]
-    spark.createDataFrame(rows1, schema).coalesce(1).write.mode("append").parquet(inp)
-    q = stream_sessionize(spark, inp, out, schema, gap_seconds=1800, watermark="1 seconds")
-    q.awaitTermination(120)
-    got = {(r["key"], str(r["session_start"]), str(r["session_end"]), r["n_events"])
-           for r in spark.read.parquet(out + "/sessions").collect()}
-    # user 1's first session closed INLINE by its own 2000s event; user 2's
-    # closed by event-time timeout (watermark 1999s > 5s + gap)
-    assert (1, "2024-01-01 00:00:00", "2024-01-01 00:00:10", 2) in got
-    assert (2, "2024-01-01 00:00:05", "2024-01-01 00:00:05", 1) in got
-    # user 1's session at 2000s is still OPEN (watermark has not passed it)
-    assert len(got) == 2
+    first = run()
+    assert sum(r[5] == "C4.cross_batch_dup" for r in first) == 4
+    commits = os.path.join(out, "_checkpoint", "commits")
+    os.remove(os.path.join(commits, "2"))
+    if os.path.exists(os.path.join(commits, ".2.crc")):
+        os.remove(os.path.join(commits, ".2.crc"))
 
-    # restart from checkpoint with a far-future event: state is restored,
-    # the watermark advances, and the open session closes exactly once
-    spark.createDataFrame([(3, ts(100_000))], schema).coalesce(1).write.mode(
-        "append"
-    ).parquet(inp)
-    q2 = stream_sessionize(spark, inp, out, schema, gap_seconds=1800, watermark="1 seconds")
-    q2.awaitTermination(120)
-    sess = spark.read.parquet(out + "/sessions")
-    got2 = {(r["key"], str(r["session_start"]), r["n_events"]) for r in sess.collect()}
-    assert (1, "2024-01-01 00:33:20", 1) in got2
-    assert len(got2) == 3  # user 3's session is open, never emitted
-
-    # batch parity: closed streaming sessions == batch sessionize sessions
-    # for the users whose sessions have all closed (1 and 2)
-    batch = spark.createDataFrame(rows1, schema)
-    bs = (
-        sessionize(batch, key="user_id", ts_col="ts", gap_seconds=1800)
-        .groupBy("user_id", "session_idx")
-        .agg(F.min("ts").alias("s"), F.max("ts").alias("e"), F.count("*").alias("n"))
-    )
-    batch_set = {(r["user_id"], str(r["s"]), str(r["e"]), r["n"]) for r in bs.collect()}
-    stream_set = {(r["key"], str(r["session_start"]), str(r["session_end"]),
-                   r["n_events"]) for r in sess.where(F.col("key") < 3).collect()}
-    assert stream_set == batch_set
+    assert run() == first
+    assert os.path.exists(os.path.join(commits, "2")), "batch 2 was not replayed"
+    seen_root = os.path.join(out, "seen_keys")
+    assert not os.path.exists(os.path.join(seen_root, "tail"))
+    assert sorted(os.listdir(seen_root)) == ["snap=2"]
+    log = spark.read.schema("clip_id string, batch_id long").parquet(
+        os.path.join(seen_root, "snap=2"))
+    assert {r[0] for r in log.collect()} == ids
+    assert log.count() == len(ids)
 
 
 def test_stream_qc_pass_matches_batch(spark, tmp_path):
