@@ -305,8 +305,7 @@ def q_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_embedding_close_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Embedding-cosine near-dup semantics, exact pair subset (the at-scale
-    path is LSH-bucketed — operators/dedup.embedding_near_duplicates)."""
+    """Embedding-cosine near-dup semantics over the exact pair set."""
     # Norms are per-VECTOR, so compute them on the 200-row side BEFORE the
     # pair join (200 evaluations each instead of 40k per pair side); the
     # where() goes on the JOINED frame's computed column, and keeping the
@@ -2473,7 +2472,7 @@ def q_transcript_wer(spark: SparkSession, sf_dir: str) -> DataFrame:
     substitution / deletion / insertion at position p = k % L). WER is one
     IEEE division (dist / L) — bit-identical. Reference analog: the
     transcript-equality invariant (Validation_Rules.py) graded instead of
-    binary, like transcript_cer."""
+    binary."""
     from seronet_data_validator_spark.operators.audio import transcript_wer
 
     base = spark.range(0, 80, 1, 4).selectExpr(

@@ -17,6 +17,8 @@ Validation_Rules.py:83.
 
 from __future__ import annotations
 
+from pyspark.sql import Column
+from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 SEVERITY_ERROR = "Error"
@@ -41,6 +43,30 @@ VIOLATION_FIELDS = [
 VIOLATION_SCHEMA = T.StructType(
     [T.StructField(name, dtype, True) for name, dtype in VIOLATION_FIELDS]
 )
+
+
+def violation_columns(
+    severity: str | Column, table_name: str | Column, row_ref: str | Column,
+    column_name: str | Column, column_value: str | Column, rule_id: str | Column,
+    message: str | Column,
+) -> list[Column]:
+    """The VIOLATION_SCHEMA columns of one violation row, aliased and in
+    order: the one builder of every Column-built violation family. A ``str``
+    argument is a literal. ``row_ref`` and ``column_value`` are cast to
+    string, and a NULL ``column_value`` reads ``'NULL'``."""
+    def col(v: str | Column) -> Column:
+        return v if isinstance(v, Column) else F.lit(v)
+
+    return [
+        col(severity).alias("severity"),
+        col(table_name).alias("table_name"),
+        col(row_ref).cast("string").alias("row_ref"),
+        col(column_name).alias("column_name"),
+        F.coalesce(col(column_value).cast("string"), F.lit("NULL")).alias("column_value"),
+        col(rule_id).alias("rule_id"),
+        col(message).alias("message"),
+    ]
+
 
 PARTITION_VERDICT_SCHEMA = T.StructType(
     [

@@ -55,7 +55,8 @@ from pyspark.sql.pandas.types import to_arrow_schema
 
 from seronet_data_validator_spark.model import SEVERITY_ERROR, VIOLATION_SCHEMA
 
-_SNR_DB_MIN = 30.0
+_SNR_DB_MIN = 30.0  # C13a: decoded PCM vs its reference
+_DUR_TOLERANCE_MS = 2  # C13a: declared vs decoded duration
 _SNR_CHUNK = 16384  # samples per dot-product chunk (128 KB of float32 scratch)
 
 # --- G.711 companded-codec expansion tables (ITU-T G.711, public spec) ----
@@ -397,8 +398,6 @@ def audio_violations(
     *,
     table_name: str = "clips",
     id_column: str = "clip_id",
-    snr_db_min: float = _SNR_DB_MIN,
-    dur_tolerance_ms: int = 2,
     force_full_decode: bool = False,
     invariants: bool = True,
     qc: bool = False,
@@ -523,7 +522,7 @@ def audio_violations(
                                  f"declared sr_hz {int(sr_decl[i])} != decoded {sr}")
                         if dur_valid[i]:
                             decoded_ms = round(n_samples / sr * 1000.0) if sr else -1
-                            if abs(decoded_ms - int(dur_decl[i])) > dur_tolerance_ms:
+                            if abs(decoded_ms - int(dur_decl[i])) > _DUR_TOLERANCE_MS:
                                 emit(i, "dur_ms", str(int(dur_decl[i])), "C13a.dur_mismatch",
                                      f"declared dur_ms {int(dur_decl[i])} != decoded {decoded_ms}")
                         rseg = get_ref(i) if full[i] else None
@@ -534,9 +533,9 @@ def audio_violations(
                                 ref_pcm = None
                             if ref_pcm is not None:
                                 s = snr_db(ref_pcm, pcm, scratch)
-                                if s < snr_db_min:
+                                if s < _SNR_DB_MIN:
                                     emit(i, "bytes", f"snr={s:.1f}dB", "C13a.snr",
-                                         f"decoded PCM SNR {s:.1f} dB below required {snr_db_min} dB")
+                                         f"decoded PCM SNR {s:.1f} dB below required {_SNR_DB_MIN} dB")
                 if qc:
                     if not full[i]:  # a failed SNR decode is not retried
                         try:
@@ -563,35 +562,6 @@ def audio_violations(
     rows = F.when(F.col("rule_id").isNull(), qc1_violations(table_name)).otherwise(own)
     return out.select(F.explode(rows).alias("_v"), *keep_columns).select(
         "_v.*", *keep_columns
-    )
-
-
-def transcript_cer(
-    clips: DataFrame,
-    reference: DataFrame,
-    *,
-    id_col: str = "clip_id",
-    text_col: str = "transcript",
-) -> DataFrame:
-    """Character error rate vs the reference transcript — the GRADED
-    companion to the pass/fail transcript-equality invariant
-    (/root/reference has only exact comparison; a triage queue needs to
-    rank mismatches): cer = levenshtein / len(reference), 0.0 for exact
-    matches, >1 possible for insert-heavy hypotheses (standard CER
-    convention). Column-only (`levenshtein` is JVM codegen, no UDF); ONE
-    equi join which is zero-Exchange on the staged bucketed tables exactly
-    like the invariant pass's reference join. Run it over the mismatch
-    subset (post-filter) when only failures need ranking — the join then
-    carries violation-sized input, not the corpus."""
-    obs = clips.select(id_col, F.col(text_col).alias("_obs"))
-    ref = reference.select(id_col, F.col(text_col).alias("_ref"))
-    j = obs.join(ref, id_col)
-    dist = F.levenshtein("_obs", "_ref")
-    cer = dist / F.greatest(F.length("_ref"), F.lit(1))
-    return j.select(
-        id_col,
-        F.round(cer, 4).alias("cer"),
-        (dist == 0).alias("exact_match"),
     )
 
 
@@ -642,9 +612,9 @@ def transcript_wer(
     id_col: str = "clip_id",
     text_col: str = "transcript",
 ) -> DataFrame:
-    """Word error rate vs the reference transcript — the token-level
-    companion to transcript_cer (ASR convention: WER = word-level edit
-    distance / reference word count). Tokenization (trim/lower/split) is
+    """Word error rate vs the reference transcript — the graded companion
+    to the pass/fail transcript-equality invariant (ASR convention: WER =
+    word-level edit distance / reference word count). Tokenization (trim/lower/split) is
     JVM Column code; only the two token ARRAYS cross into Python, through
     one Arrow-batched pandas UDF running the vectorized DP above — no
     per-row Python round trips, no full-text shipping beyond the tokens

@@ -49,18 +49,6 @@ MIX_SCHEMA = T.StructType(
 )
 
 
-def assign_noise(
-    clips: DataFrame, n_buckets: int, *, id_col: str = "clip_id"
-) -> DataFrame:
-    """Deterministic noise assignment: ``noise_id = xxhash64(id) mod B``.
-    Kept separate from :func:`mix_at_snr` so pipelines with their own
-    pairing (or an oracle fixture with a replayable key) can supply the
-    ``noise_id`` column directly."""
-    return clips.withColumn(
-        "noise_id", F.pmod(F.xxhash64(F.col(id_col)), F.lit(n_buckets))
-    )
-
-
 def mix_at_snr(
     clips: DataFrame,
     noise: DataFrame,
@@ -71,7 +59,7 @@ def mix_at_snr(
 ) -> DataFrame:
     """Mix each clip with its assigned noise clip at amplitude ratio
     ``ratio`` (signal RMS / scaled-noise RMS). ``clips`` must carry
-    ``key_col`` (see :func:`assign_noise`); ``noise`` is ``(key_col,
+    ``key_col``; ``noise`` is ``(key_col,
     bytes)`` and is broadcast. Noise shorter than the clip tiles
     cyclically (the standard practice); silent noise leaves the clip
     unchanged (scale 0). Output keeps the clip id, the mixed RIFF bytes,

@@ -583,7 +583,7 @@ def banded_hamming_pairs(
     its all-pairs OUTPUT is inherently quadratic. ``star=True`` caps that
     too: per final bucket emit only (bucket-min id, other id) hub pairs —
     linear output that preserves component connectivity for
-    connected_components / dedup_keep_first (hub-spoke hamming is 0 in the
+    connected_components (hub-spoke hamming is 0 in the
     identical-fingerprint buckets this is for).
     """
     width = total_bits // n_bands
@@ -691,129 +691,6 @@ def simhash_near_duplicates(
     )
 
 
-def embedding_near_duplicates(
-    df: DataFrame,
-    *,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    threshold: float = 0.95,
-    n_planes: int = 12,
-    seed: int = 11,
-    max_bucket_size: int | None = None,
-    n_refine_planes: int = 8,
-    star: bool = False,
-) -> DataFrame:
-    """Embedding-cosine near-dup with random-hyperplane LSH bucketing:
-    sign-pattern of `n_planes` fixed random projections → bucket; cosine
-    verified exactly within buckets. Shuffle carries (bucket, id, vec) once —
-    no all-pairs join. Output (id_a, id_b, cos_sim ≥ threshold).
-
-    Hot-bucket handling at scale: a bucket can blow up two ways.
-    (a) Coarse collision — dissimilar vectors sharing one short sign pattern.
-    ``max_bucket_size`` fixes this: one count agg finds oversized buckets and
-    a broadcast semi-join extends ONLY their keys with ``n_refine_planes``
-    extra sign bits, splitting them into up to 2**n_refine_planes sub-buckets
-    (pairs whose refined bits differ are lost — same recall trade as simply
-    using more planes, but paid only where needed).
-    (b) A genuinely all-similar cluster — extra planes cannot split it and
-    its all-pairs OUTPUT is inherently quadratic. For dedup that output is
-    wasted: ``star=True`` emits only hub pairs (bucket-min id, other id) —
-    linear in bucket size — which is exactly what
-    :func:`connected_components` / :func:`dedup_keep_first` need, since the
-    hub connects the whole bucket transitively."""
-    import random
-
-    first = df.select(F.size(vec_col).alias("d")).first()
-    dim = first["d"]
-    rnd = random.Random(seed)
-    planes = [
-        [rnd.gauss(0, 1) for _ in range(dim)]
-        for _ in range(n_planes + (n_refine_planes if max_bucket_size else 0))
-    ]
-
-    def proj_sign(plane: list[float]) -> str:
-        # SQL text, not Column calls: the (n_planes+refine) × dim literal
-        # lattice is thousands of py4j round trips otherwise (driver
-        # plan-build time was exceeding the stage time; same fix as
-        # similarity._cell_struct_sql). repr(float) round-trips bit-exactly.
-        arr = ", ".join(f"{x!r}D" for x in plane)
-        return (
-            f"(CASE WHEN aggregate(zip_with({vec_col}, array({arr}), "
-            f"(a, b) -> CAST(a AS DOUBLE) * b), 0.0D, (acc, v) -> acc + v) >= 0 "
-            f"THEN '1' ELSE '0' END)"
-        )
-
-    bucket = (
-        F.expr("concat(" + ", ".join(proj_sign(p) for p in planes[:n_planes]) + ")")
-        if n_planes
-        else F.lit("")
-    )
-    norm = F.sqrt(
-        F.aggregate(F.col(vec_col), F.lit(0.0), lambda a, v: a + v.cast("double") * v.cast("double"))
-    )
-    bucketed = _ensure_parallelism(df).select(
-        F.col(id_col), F.col(vec_col), bucket.alias("bucket"), norm.alias("nrm")
-    )
-    if max_bucket_size:
-        refine = F.expr(
-            "concat(" + ", ".join(proj_sign(p) for p in planes[n_planes:]) + ")"
-        )
-        hot = (
-            bucketed.groupBy("bucket")
-            .count()
-            .where(F.col("count") > max_bucket_size)
-            .select(F.col("bucket").alias("hot_bucket"))
-        )
-        bucketed = (
-            bucketed.join(
-                F.broadcast(hot), F.col("bucket") == F.col("hot_bucket"), "left"
-            )
-            .withColumn(
-                "bucket",
-                F.when(F.col("hot_bucket").isNotNull(), F.concat("bucket", refine))
-                .otherwise(F.col("bucket")),
-            )
-            .drop("hot_bucket")
-        )
-    if star:
-        # hub = min id per bucket; emit (hub, spoke) only — linear output
-        bucketed = bucketed.withColumn(
-            "hub", F.min(id_col).over(Window.partitionBy("bucket"))
-        )
-        l = bucketed.where(F.col(id_col) == F.col("hub")).drop("hub").alias("l")
-        r = bucketed.where(F.col(id_col) != F.col("hub")).drop("hub").alias("r")
-    else:
-        l, r = bucketed.alias("l"), bucketed.alias("r")
-    dot = F.aggregate(
-        F.zip_with(F.col(f"l.{vec_col}"), F.col(f"r.{vec_col}"),
-                   lambda a, b: a.cast("double") * b.cast("double")),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
-    )
-    return (
-        l.join(
-            r,
-            (F.col("l.bucket") == F.col("r.bucket"))
-            & (F.col(f"l.{id_col}") < F.col(f"r.{id_col}")),
-        )
-        .select(
-            F.col(f"l.{id_col}").alias("id_a"),
-            F.col(f"r.{id_col}").alias("id_b"),
-            F.round(dot / (F.col("l.nrm") * F.col("r.nrm")), 4).alias("cos_sim"),
-        )
-        .where(F.col("cos_sim") >= threshold)
-    )
-
-
-def dedup_keep_first(df: DataFrame, pairs: DataFrame, id_col: str = "doc_id") -> DataFrame:
-    """Apply near-dup pairs: drop the higher id of each pair (connected
-    components approximated by one-hop — adequate for dedup where clusters
-    are small; for transitive chains use connected_components +
-    dedup_by_components). left_anti on the drop set."""
-    drops = pairs.select(F.col("id_b").alias(id_col)).distinct()
-    return df.join(drops, id_col, "left_anti")
-
-
 def connected_components(
     pairs: DataFrame,
     *,
@@ -832,8 +709,8 @@ def connected_components(
     (node, component) where component = the minimum node id reachable — the
     canonical representative.
 
-    This closes the transitive-chain gap of one-hop dedup_keep_first: a~b,
-    b~c (but not a~c) still lands a, b, c in ONE component.
+    Transitive: a~b, b~c (but not a~c) still lands a, b, c in ONE
+    component.
 
     Cache lifecycle: the returned labels frame is backed by an eager
     localCheckpoint (lineage truncated each round — see the loop comment);
@@ -981,27 +858,6 @@ def connected_components(
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", prev_width)
         edges.unpersist()
-
-
-def dedup_by_components(
-    df: DataFrame,
-    pairs: DataFrame,
-    id_col: str = "doc_id",
-    *,
-    max_iter: int = 20,
-    cache_handles: list | None = None,
-) -> DataFrame:
-    """Keep exactly one document per connected component (the minimum id),
-    transitively: a~b~c keeps only a even without an a~c pair.
-
-    ``cache_handles`` receives the persisted labels frame (see
-    connected_components) so repeated calls in a long-lived session don't
-    accumulate cached blocks."""
-    comp = connected_components(pairs, max_iter=max_iter, cache_handles=cache_handles)
-    drops = comp.where(F.col("node") != F.col("component")).select(
-        F.col("node").alias(id_col)
-    )
-    return df.join(drops, id_col, "left_anti")
 
 
 def ngram_contamination(

@@ -24,8 +24,6 @@ Scale notes (the part the reference, being pandas, never had to solve):
 
 from __future__ import annotations
 
-from typing import Sequence
-
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -33,53 +31,25 @@ from seronet_data_validator_spark.model import (
     ROW_REF_CROSS_TABLE,
     ROW_REF_TABLE_DUP,
     SEVERITY_ERROR,
-    SEVERITY_WARNING,
+    violation_columns,
 )
 
 
-def _v(severity: str, table: str, row_ref: Column, column: str, value: Column,
-       rule_id: str, message: Column) -> list[Column]:
-    return [
-        F.lit(severity).alias("severity"),
-        F.lit(table).alias("table_name"),
-        row_ref.cast("string").alias("row_ref"),
-        F.lit(column).alias("column_name"),
-        F.coalesce(value.cast("string"), F.lit("NULL")).alias("column_value"),
-        F.lit(rule_id).alias("rule_id"),
-        message.alias("message"),
-    ]
-
-
-def duplicate_id_violations(
-    df: DataFrame,
-    id_column: str,
-    table_name: str,
-    *,
-    exclude_values: Sequence[str] = ("N/A", ""),
-) -> DataFrame:
+def duplicate_id_violations(df: DataFrame, id_column: str, table_name: str) -> DataFrame:
     """C4 check_for_dup_ids (File_Submission_Object.py:345-354): one violation
-    per duplicated ID value, message carries the repeat count, row_ref '-3'
-    (the reference's table-level sentinel)."""
+    per duplicated ID value ('N/A' and '' are no IDs), message carries the
+    repeat count, row_ref '-3' (the reference's table-level sentinel)."""
     c = F.col(id_column)
     return (
-        df.where(c.isNotNull() & ~c.cast("string").isin(*exclude_values))
+        df.where(c.isNotNull() & ~c.cast("string").isin("N/A", ""))
         .groupBy(id_column)
         .agg(F.count(F.lit(1)).alias("_n"))
         .where(F.col("_n") > 1)
-        .select(
-            *_v(
-                SEVERITY_ERROR,
-                table_name,
-                F.lit(ROW_REF_TABLE_DUP),
-                id_column,
-                c,
-                "C4.dup_id",
-                F.concat(
-                    F.lit("ID "), c, F.lit(" appears "), F.col("_n").cast("string"),
-                    F.lit(" times; IDs must be unique"),
-                ),
-            )
-        )
+        .select(*violation_columns(
+            SEVERITY_ERROR, table_name, ROW_REF_TABLE_DUP, id_column, c, "C4.dup_id",
+            F.concat(F.lit("ID "), c, F.lit(" appears "), F.col("_n").cast("string"),
+                     F.lit(" times; IDs must be unique")),
+        ))
     )
 
 
@@ -89,10 +59,8 @@ def referential_violations(
     key: str,
     table_name: str,
     *,
-    dim_key: str | None = None,
     registry_name: str = "registry",
     row_ref_column: str | None = None,
-    broadcast_dim: bool = True,
     keep_columns: tuple[str, ...] = (),
 ) -> DataFrame:
     """C15 check_assay_special (File_Submission_Object.py:289-300): fact keys
@@ -103,25 +71,16 @@ def referential_violations(
     columns so violations attribute to their REAL partition — identical to
     the fused inline path's keep_columns, keeping the two C15 strategies
     verdict-equivalent regardless of registry size."""
-    d = dim.select(F.col(dim_key or key).alias(key)).dropDuplicates([key])
-    if broadcast_dim:
-        d = F.broadcast(d)
+    d = F.broadcast(dim.select(key).dropDuplicates([key]))
     missing = df.where(
         F.col(key).isNotNull() & (F.col(key).cast("string") != "")
     ).join(d, key, "left_anti")
-    row_ref = F.col(row_ref_column) if row_ref_column else F.lit(ROW_REF_CROSS_TABLE)
-    return missing.select(
-        *[F.col(c) for c in keep_columns],
-        *_v(
-            SEVERITY_ERROR,
-            table_name,
-            row_ref,
-            key,
-            F.col(key),
-            "C15.referential",
-            F.concat(F.lit("Value "), F.col(key), F.lit(f" was not found in {registry_name}")),
-        )
-    )
+    return missing.select(*keep_columns, *violation_columns(
+        SEVERITY_ERROR, table_name,
+        F.col(row_ref_column) if row_ref_column else ROW_REF_CROSS_TABLE,
+        key, F.col(key), "C15.referential",
+        F.concat(F.lit("Value "), F.col(key), F.lit(f" was not found in {registry_name}")),
+    ))
 
 
 def salted_left_anti(
@@ -293,49 +252,30 @@ def presence_violations(
     *,
     child: str,
     parent: str,
-    parent_missing_severity: str = SEVERITY_ERROR,
-    child_missing_severity: str | None = None,
+    child_missing_severity: str,
 ) -> DataFrame:
     """Rules over the presence matrix: ID in child but not parent → Error
-    ('id not found in parent'); optionally parent-without-child → Warning
-    (the reference conditions this on Biospecimen_Type == PBMC;
-    File_Submission_Object.py:722-757)."""
-    c_in = F.col(f"in_{child}")
-    p_in = F.col(f"in_{parent}")
-    orphan_cond = c_in & ~p_in
-    if child_missing_severity is None:
-        return matrix.where(orphan_cond).select(
-            *_v(
-                parent_missing_severity,
-                child,
-                F.lit(ROW_REF_CROSS_TABLE),
-                id_column,
-                F.col(id_column),
-                "C17.orphan",
-                F.concat(F.lit("ID "), F.col(id_column),
-                         F.lit(f" in {child} not found in {parent}")),
-            )
-        )
+    ('id not found in parent'); parent-without-child →
+    ``child_missing_severity`` (the reference conditions this on
+    Biospecimen_Type == PBMC; File_Submission_Object.py:722-757)."""
+    orphan = F.col(f"in_{child}") & ~F.col(f"in_{parent}")
+    key = F.col(id_column)
+
+    def either(if_orphan: str, if_childless: str) -> Column:
+        return F.when(orphan, F.lit(if_orphan)).otherwise(F.lit(if_childless))
+
     # BOTH directions in ONE pass over the matrix (a union of two filtered
     # branches would re-run the whole presence aggregation — the expensive
     # part at scale — once per direction): rows where presence differs are
     # violations; severity/rule/table/message are conditional expressions.
-    return matrix.where(c_in != p_in).select(
-        F.when(orphan_cond, F.lit(parent_missing_severity))
-        .otherwise(F.lit(child_missing_severity)).alias("severity"),
-        F.when(orphan_cond, F.lit(child)).otherwise(F.lit(parent)).alias("table_name"),
-        F.lit(ROW_REF_CROSS_TABLE).alias("row_ref"),
-        F.lit(id_column).alias("column_name"),
-        F.coalesce(F.col(id_column).cast("string"), F.lit("NULL")).alias("column_value"),
-        F.when(orphan_cond, F.lit("C17.orphan")).otherwise(F.lit("C17.childless")).alias("rule_id"),
-        F.when(
-            orphan_cond,
-            F.concat(F.lit("ID "), F.col(id_column),
-                     F.lit(f" in {child} not found in {parent}")),
-        ).otherwise(
-            F.concat(F.lit("ID "), F.col(id_column),
-                     F.lit(f" in {parent} has no rows in {child}")),
-        ).alias("message"),
+    return matrix.where(F.col(f"in_{child}") != F.col(f"in_{parent}")).select(
+        *violation_columns(
+            either(SEVERITY_ERROR, child_missing_severity), either(child, parent),
+            ROW_REF_CROSS_TABLE, id_column, key,
+            either("C17.orphan", "C17.childless"),
+            F.concat(F.lit("ID "), key, either(f" in {child} not found in {parent}",
+                                               f" in {parent} has no rows in {child}")),
+        )
     )
 
 
@@ -449,16 +389,13 @@ def consistency_violations(
         lambda x: x.isNotNull(),
     )
     return agg.select(key.alias("_k"), F.explode(fired).alias("_cv")).select(
-        F.lit(SEVERITY_ERROR).alias("severity"),
-        F.lit(table_name).alias("table_name"),
-        F.lit(ROW_REF_CROSS_TABLE).cast("string").alias("row_ref"),
-        F.lit(group_col).alias("column_name"),
-        F.coalesce(F.col("_k").cast("string"), F.lit("NULL")).alias("column_value"),
-        # coalesce restores the branch-union's non-nullable rule_id field
-        # (struct fields behind when() are nullable; the filter guarantees
-        # the value is never actually NULL)
-        F.coalesce(F.col("_cv.r"), F.lit("")).alias("rule_id"),
-        F.col("_cv.m").alias("message"),
+        *violation_columns(
+            SEVERITY_ERROR, table_name, ROW_REF_CROSS_TABLE, group_col, F.col("_k"),
+            # coalesce restores the branch-union's non-nullable rule_id field
+            # (struct fields behind when() are nullable; the filter guarantees
+            # the value is never actually NULL)
+            F.coalesce(F.col("_cv.r"), F.lit("")), F.col("_cv.m"),
+        )
     )
 
 
@@ -469,11 +406,8 @@ def suppressed_referential_violations(
     table_name: str,
     prior_violations: DataFrame,
     *,
-    dim_key: str | None = None,
     registry_name: str = "registry",
     row_ref_column: str | None = None,
-    broadcast_dim: bool = True,
-    broadcast_prior: bool = True,
 ) -> DataFrame:
     """C20 check_map_ids (File_Submission_Object.py:758-784): referential
     check whose candidate violations are anti-joined against keys ALREADY
@@ -481,42 +415,29 @@ def suppressed_referential_violations(
     pattern (the reference reads its own Error_list as a filter before
     reporting, File_Submission_Object.py:779-781).
 
-    Two left_anti joins: fact vs dim (the C15 referential core), then
-    candidates vs prior violation values for this column. Both anti sides are
-    key projections; pass ``broadcast_dim=False`` / ``broadcast_prior=False``
-    when a side is too large to ship to every executor (a long-lived
-    violations table can reach billions of rows) — the join then falls back
-    to a shuffle anti-join on the key."""
-    dim_side = dim.select(F.col(dim_key or key).alias(key)).dropDuplicates([key])
-    if broadcast_dim:
-        dim_side = F.broadcast(dim_side)
+    Two broadcast left_anti joins: fact vs dim (the C15 referential core),
+    then candidates vs prior violation values for this column. Both anti
+    sides are key projections."""
+    dim_side = F.broadcast(dim.select(key).dropDuplicates([key]))
     candidates = fact.where(
         F.col(key).isNotNull() & (F.col(key).cast("string") != "")
     ).join(dim_side, key, "left_anti")
     # violation values are stored as strings — cast back to the fact key's
     # type so the anti-join compares natively (no implicit double coercion)
     key_type = fact.schema[key].dataType
-    already = (
+    already = F.broadcast(
         prior_violations.where(F.col("column_name") == key)
         .select(F.col("column_value").cast(key_type).alias(key))
         .dropDuplicates([key])
     )
-    if broadcast_prior:
-        already = F.broadcast(already)
     fresh = candidates.join(already, key, "left_anti")
-    row_ref = F.col(row_ref_column) if row_ref_column else F.lit(ROW_REF_CROSS_TABLE)
-    return fresh.select(
-        *_v(
-            SEVERITY_ERROR,
-            table_name,
-            row_ref,
-            key,
-            F.col(key),
-            "C20.map_id",
-            F.concat(F.lit("Value "), F.col(key),
-                     F.lit(f" was not found in {registry_name} (not previously reported)")),
-        )
-    )
+    return fresh.select(*violation_columns(
+        SEVERITY_ERROR, table_name,
+        F.col(row_ref_column) if row_ref_column else ROW_REF_CROSS_TABLE,
+        key, F.col(key), "C20.map_id",
+        F.concat(F.lit("Value "), F.col(key),
+                 F.lit(f" was not found in {registry_name} (not previously reported)")),
+    ))
 
 
 def count_reconciliation_violations(
@@ -524,32 +445,22 @@ def count_reconciliation_violations(
     manifest: DataFrame,
     partition_column: str,
     table_name: str,
-    *,
-    declared_column: str = "declared_clip_count",
 ) -> DataFrame:
     """C18 get_passing_part_ids (File_Submission_Object.py:654-666): declared
-    count (manifest metadata) vs observed count per partition. Full outer so
-    both phantom-partition directions surface."""
+    count (the manifest's ``declared_clip_count``) vs observed count per
+    partition. Full outer so both phantom-partition directions surface."""
+    declared = F.col("declared_clip_count")
     observed = df.groupBy(partition_column).agg(F.count(F.lit(1)).alias("_observed"))
     joined = observed.join(F.broadcast(manifest), partition_column, "full_outer")
     bad = joined.where(
-        F.coalesce(F.col("_observed"), F.lit(0)) != F.coalesce(F.col(declared_column), F.lit(-1))
+        F.coalesce(F.col("_observed"), F.lit(0)) != F.coalesce(declared, F.lit(-1))
     )
-    return bad.select(
-        *_v(
-            SEVERITY_ERROR,
-            table_name,
-            F.lit(ROW_REF_CROSS_TABLE),
-            partition_column,
-            F.col(partition_column),
-            "C18.count_mismatch",
-            F.concat(
-                F.lit("Declared count "),
-                F.coalesce(F.col(declared_column).cast("string"), F.lit("NULL")),
-                F.lit(" != observed "),
-                F.coalesce(F.col("_observed").cast("string"), F.lit("0")),
-                F.lit(f" for partition "),
-                F.coalesce(F.col(partition_column), F.lit("NULL")),
-            ),
-        )
-    )
+    return bad.select(*violation_columns(
+        SEVERITY_ERROR, table_name, ROW_REF_CROSS_TABLE, partition_column,
+        F.col(partition_column), "C18.count_mismatch",
+        F.concat(
+            F.lit("Declared count "), F.coalesce(declared.cast("string"), F.lit("NULL")),
+            F.lit(" != observed "), F.coalesce(F.col("_observed").cast("string"), F.lit("0")),
+            F.lit(" for partition "), F.coalesce(F.col(partition_column), F.lit("NULL")),
+        ),
+    ))

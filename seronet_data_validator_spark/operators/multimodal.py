@@ -473,25 +473,11 @@ def _parse_avi(b: bytes) -> tuple[int, int, bytes, list[tuple[int, int]]]:
     return int(w), int(h), codec, frames
 
 
-def _parse_avi_mjpeg(b: bytes) -> tuple[int, int, list[tuple[int, int]]]:
-    """MJPEG-restricted view of :func:`_parse_avi`. Non-intra-frame codecs
-    (H.264/VP9/...) raise NotImplementedError: they need a codec library —
-    swap in pyav/ffmpeg at that single point in production. Raw BI_RGB
-    ('DIB ') streams decode through the _parse_avi path in video_frames."""
-    w, h, codec, frames = _parse_avi(b)
-    if codec not in (b"MJPG", b"mjpg"):
-        raise NotImplementedError(
-            f"AVI video codec {codec!r}: only MJPEG and raw BI_RGB decode "
-            "natively; inter-frame codecs need a codec library"
-        )
-    return w, h, frames
-
-
 def _parse_y4m(b: bytes) -> tuple[int, int, int, int, int]:
     """Parse a YUV4MPEG2 stream header → (width, height, frame_payload_len,
     data_offset, luma_len). C420*/C444/mono supported (pure numpy stride
-    math); MJPEG-in-AVI decodes through _parse_avi_mjpeg + the T.81
-    decoder; inter-frame compressed codecs (mp4/h264/vp9/...) are NOT
+    math); MJPEG-in-AVI decodes through _parse_avi + the T.81
+    decoder (video_frames); inter-frame compressed codecs (mp4/h264/vp9/...) are NOT
     parseable without a codec library and raise NotImplementedError — swap
     in pyav/ffmpeg at that single point in production; the Spark-side
     plumbing (schema, batching, sampling) does not change."""

@@ -40,6 +40,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from seronet_data_validator_spark.model import violation_columns
 from seronet_data_validator_spark.operators.audio import (
     _decode_view_channels,
     _decoded_map,
@@ -138,15 +139,8 @@ def qc1_violations(table_name: str):
     """The QC1 violations of one stats row (its id in ``row_ref``) as an
     array of VIOLATION_SCHEMA structs, clean rules compacted away."""
     return F.array_compact(F.array(*[
-        F.when(cond, F.struct(
-            F.lit(severity).alias("severity"),
-            F.lit(table_name).alias("table_name"),
-            F.col("row_ref"),
-            F.lit("bytes").alias("column_name"),
-            value.cast("string").alias("column_value"),
-            F.lit(rule_id).alias("rule_id"),
-            message.alias("message"),
-        ))
+        F.when(cond, F.struct(*violation_columns(
+            severity, table_name, F.col("row_ref"), "bytes", value, rule_id, message)))
         for _name, cond, severity, rule_id, value, message in _qc1_rules()
     ]))
 

@@ -221,7 +221,7 @@ def semantic_dedup_pairs(
     compare pairs ONLY within a cluster, keep pairs with cosine >=
     ``threshold``. Semantic near-dups (paraphrases, re-encodes, crops) that
     no lexical hash catches. Returns (cell, id_a, id_b, cos_sim); feed to
-    dedup.dedup_keep_first / dedup.dedup_by_components to prune.
+    dedup.connected_components to prune.
 
     Scale shape: centroids train on a bounded sample (train_centroids);
     assignment is a full-corpus narrow pass (literal centroid arrays — no

@@ -46,24 +46,10 @@ from seronet_data_validator_spark.model import (
     ROW_REF_WHOLE_COLUMN,
     SEVERITY_ERROR,
     VIOLATION_SCHEMA,
+    violation_columns,
 )
 from seronet_data_validator_spark.plans.rules import Rule, RuleSet, dict_flag_col
 from seronet_data_validator_spark.sources.local import local_df
-
-
-def _violation_struct(
-    table_name: str, row_ref: Column, column_name: str, value: Column,
-    severity: Column, rule_id: str, message: Column,
-) -> Column:
-    return F.struct(
-        severity.alias("severity"),
-        F.lit(table_name).alias("table_name"),
-        row_ref.cast("string").alias("row_ref"),
-        F.lit(column_name).alias("column_name"),
-        F.coalesce(value.cast("string"), F.lit("NULL")).alias("column_value"),
-        F.lit(rule_id).alias("rule_id"),
-        message.alias("message"),
-    )
 
 
 def _structural_violations(
@@ -125,10 +111,10 @@ def _rule_lanes(
     lanes = tuple(
         F.when(
             F.coalesce(em.condition, F.lit(False)),
-            _violation_struct(
-                table_name, row_ref, rule.column, value_col,
-                em.severity, rule.rule_id, em.message,
-            ),
+            F.struct(*violation_columns(
+                em.severity, table_name, row_ref, rule.column, value_col,
+                rule.rule_id, em.message,
+            )),
         ).otherwise(F.lit(None))
         for em in rule.emissions(prepared)
     )
@@ -248,19 +234,16 @@ def union_violation_parts(parts: list[DataFrame]) -> DataFrame:
     return tagged[0]
 
 
-def dedup_violations(violations: DataFrame, *, order_col: str | None = None) -> DataFrame:
+def dedup_violations(violations: DataFrame, *, order_col: str) -> DataFrame:
     """Reference dedups Error_list on (sheet, row, column, value) keeping the
     FIRST writer (File_Submission_Object.py:255-256), where "first" is rule
     execution order — an ordering the distributed union does not preserve.
 
-    With ``order_col`` (an explicit pass/rule ordinal the runner tags each
-    violation source with), first-writer-wins is reproduced deterministically
-    via a min-ordinal window; (rule_id, message) break residual ties so the
-    result is stable under any partitioning. Without it, plain
-    dropDuplicates on the reference's key (arbitrary but sufficient when all
-    producers of a key are equivalent)."""
-    if order_col is None:
-        return violations.dropDuplicates(DEDUP_KEY)
+    ``order_col`` is the explicit pass/rule ordinal the runner tags each
+    violation source with (:func:`union_violation_parts`): first-writer-wins
+    is reproduced deterministically via a min-ordinal window; (rule_id,
+    message) break residual ties so the result is stable under any
+    partitioning."""
     w = Window.partitionBy(*DEDUP_KEY).orderBy(order_col, "rule_id", "message")
     return (
         violations.withColumn("_rn", F.row_number().over(w))

@@ -4,20 +4,23 @@ validate_clips(): (1) schema contract (driver-side, C21) → (2) resume filter
 (skip checkpointed partitions) → (3) ONE fused row-level rule pass →
 (4) uniqueness + referential + count-reconciliation table passes →
 (5) ONE payload pass (Arrow): the decoded-PCM invariants and, with
-``run_qc_pass``, the QC1 acceptance rules → (6) union violations and
-per-partition row counts → (7) persist; ONE aggregation gives the verdicts
-(pass = zero Error rows, the reference's Data_Validation_v1.py:191-199) →
-(8) durable runs write the violations from the cache, release it, commit one
-run-manifest row per partition (the verdict of record, read back by
-``checkpoint.partition_verdicts``) and return the stored read.
+``run_qc_pass``, the QC1 acceptance rules → (6) union + dedup the violations
+→ (7) persist; ONE action fills the cache and gives the verdicts: the
+violations' per-(partition, severity) counts unioned with the input's
+per-partition row counts (pass = zero Error rows, the reference's
+Data_Validation_v1.py:191-199) → (8) durable runs write the violations from
+the cache, release it, commit one run-manifest row per partition (the
+verdict of record, read back by ``checkpoint.partition_verdicts``) and
+return the stored read.
 
 Plan shape at scale: pass (3) and (5) are narrow (no shuffle); (4) shuffles
-once per distinct aggregation key; the verdict aggregation reuses the
-partition column so AQE coalesces it. Over bucketed tables with audio,
-references and an inlined registry: 5 scans (the fact table for rules with
-bytes pruned, C4 ids, the payload pass and row counts; the references), one
-Python node, QC or not, and 3 exchanges (references' broadcast, row counts,
-dedup).
+once per distinct aggregation key. Over bucketed tables with audio,
+references and an inlined registry the violations plan has 4 scans (the
+fact table for rules with bytes pruned, C4 ids and the payload pass; the
+references), one Python node, QC or not, and 2 exchanges (references'
+broadcast, dedup). The verdict action adds one more scan of the fact table,
+pruned to the partition column, whose aggregation reuses the partition
+column so AQE coalesces it.
 """
 
 from __future__ import annotations
@@ -86,12 +89,14 @@ class SiteConsistencySpec:
 
 @dataclass
 class ValidationResult:
-    """``violations`` of a durable run (``output_root``) is a lazy read of
-    the stored violations of ``run_id``, skipped partitions included; the
-    run has released its cache. An in-memory run's ``violations`` reads the
+    """``violations`` holds exactly the violation rows (VIOLATION_SCHEMA
+    columns). That of a durable run (``output_root``) is a lazy read of the
+    stored violations of ``run_id``, skipped partitions included; the run
+    has released its cache. An in-memory run's ``violations`` is the
     persisted result, which the caller owns: ``close()`` (or leaving a
     ``with`` block) releases it. Calls served from one prepared plan share
-    that cache entry."""
+    that cache entry. ``verdicts`` has one dict per partition validated by
+    this call (PARTITION_VERDICT_SCHEMA keys)."""
 
     run_id: str
     violations: DataFrame
@@ -217,7 +222,7 @@ def validate_clips(
         hit = _PLAN_CACHE.get(plan_key)
         if hit is not None:
             return _finish_validation(
-                spark, hit["plan"], run_id, partition_column,
+                spark, hit["plan"], clips, run_id, partition_column,
                 output_root, run_manifest, skipped, prior_ok, t0,
             )
 
@@ -236,25 +241,6 @@ def validate_clips(
     # it deterministic under any partitioning; rule_id breaks ties within a
     # pass. Violations are tiny relative to the input, so the dedup shuffle is
     # negligible at scale.
-    # pseudo-rows carrying per-partition input counts, so the one verdict
-    # aggregation also counts rows (no separate count job): table_name
-    # '__rows__' (never written, never returned), row_ref = the partition key
-    # so the dedup window keys stay unique.
-    parts.append(
-        clips.groupBy(partition_column)
-        .agg(F.count(F.lit(1)).alias("_n"))
-        .select(
-            F.col(partition_column),
-            F.lit("__rows__").alias("severity"),
-            F.lit("__rows__").alias("table_name"),
-            F.col(partition_column).cast("string").alias("row_ref"),
-            F.lit("").alias("column_name"),
-            F.lit("").alias("column_value"),
-            F.lit("").alias("rule_id"),
-            F.col("_n").cast("string").alias("message"),
-        )
-    )
-
     violations = dedup_violations(union_violation_parts(parts), order_col="_ord")
 
     if plan_key is not None:
@@ -268,7 +254,7 @@ def validate_clips(
         }
 
     return _finish_validation(
-        spark, violations, run_id, partition_column,
+        spark, violations, clips, run_id, partition_column,
         output_root, run_manifest, skipped, prior_ok, t0,
     )
 
@@ -415,6 +401,7 @@ def _registry_rule(keys: tuple) -> Rule:
 def _finish_validation(
     spark: SparkSession,
     violations: DataFrame,
+    clips: DataFrame,
     run_id: str,
     partition_column: str,
     output_root: str | None,
@@ -423,25 +410,30 @@ def _finish_validation(
     prior_ok: dict[str, bool],
     t0: float,
 ) -> ValidationResult:
-    """Steps (7)-(8): persist, verdict aggregation, write, commit — the one
-    execution tail of fresh and prepared-plan calls. ``t0`` is the call's
-    start, so ``wall_ms`` covers the whole call up to the commit."""
-    # Violations feed the aggregation, then the write or the caller — persist
-    # so the expensive passes (audio decode, joins) run ONCE; the aggregation
-    # fills the cache.
-    violations = violations.persist(StorageLevel.MEMORY_AND_DISK)
-    real_violations = violations.where(F.col("table_name") != "__rows__")
+    """Steps (7)-(8): persist, verdict action, write, commit — the one
+    execution tail of fresh and prepared-plan calls. ``violations`` is the
+    deduplicated violations plan and ``clips`` its (resume-filtered) input,
+    which gives the per-partition row counts. ``t0`` is the call's start, so
+    ``wall_ms`` covers the whole call up to the commit."""
+    # Violations feed the verdict action, then the write or the caller —
+    # persist so the expensive passes (audio decode, joins) run ONCE; the
+    # verdict action fills the cache.
+    result = violations = violations.persist(StorageLevel.MEMORY_AND_DISK)
 
     try:
-        # (7) ONE aggregation drives both severity counts and row counts.
-        agg_rows = (
-            violations.groupBy(partition_column, "severity")
-            .agg(F.count(F.lit(1)).alias("n"), F.max("message").alias("_msg"))
-            .collect()
-        )
-        sev_counts = {(r[partition_column], r["severity"]): r["n"] for r in agg_rows}
-        row_counts = {r[partition_column]: int(r["_msg"])
-                      for r in agg_rows if r["severity"] == "__rows__"}
+        # (7) ONE action: the violations' (partition, severity) counts and
+        # the input's per-partition row counts, told apart by ``_input``. A
+        # union, not a join, so no broadcast job is added.
+        def counts(df: DataFrame, severity, is_input: bool) -> DataFrame:
+            return df.groupBy(partition_column, severity).agg(
+                F.count(F.lit(1)).alias("n"), F.lit(is_input).alias("_input"))
+
+        agg_rows = counts(violations, F.col("severity"), False).unionByName(
+            counts(clips, F.lit(None).cast("string").alias("severity"), True)
+        ).collect()
+        sev_counts = {(r[partition_column], r["severity"]): r["n"]
+                      for r in agg_rows if not r["_input"]}
+        row_counts = {r[partition_column]: r["n"] for r in agg_rows if r["_input"]}
         if skipped and not row_counts:
             # every partition was committed by an earlier call: nothing to write
             return ValidationResult(
@@ -457,7 +449,7 @@ def _finish_validation(
                 # "10", non-numeric refs after). sortWithinPartitions keeps it
                 # shuffle-free; the partition column leads so the writer keeps
                 # this order instead of re-sorting by partition alone.
-                real_violations.sortWithinPartitions(
+                violations.sortWithinPartitions(
                     partition_column,
                     F.col("row_ref").try_cast("long").asc_nulls_last(),
                     "row_ref",
@@ -471,7 +463,7 @@ def _finish_validation(
             )
             # the caller gets exactly what is durable. Explicit schema: an
             # all-clean (empty) write reads back, and "11" stays a string
-            real_violations = spark.read.schema(T.StructType(
+            result = spark.read.schema(T.StructType(
                 list(VIOLATION_SCHEMA.fields)
                 + [T.StructField(partition_column, T.StringType(), True)]
             )).parquet(path)
@@ -508,8 +500,7 @@ def _finish_validation(
     passed = all(v["pass"] for v in verdicts) if verdicts else global_errors == 0
     passed = passed and all(prior_ok.values())
     return ValidationResult(
-        run_id,
-        real_violations.select(*[f.name for f in VIOLATION_SCHEMA.fields]),
+        run_id, result.select(*VIOLATION_SCHEMA.names),
         verdicts, passed, skipped, None if output_root else violations,
     )
 

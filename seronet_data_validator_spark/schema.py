@@ -74,13 +74,11 @@ def schema_contract_violations(
     spark: SparkSession,
     df: DataFrame,
     table_name: str,
-    contract: T.StructType | None = None,
-    *,
-    strict_types: bool = True,
 ) -> DataFrame | None:
-    """None when the contract holds; otherwise a violations DataFrame whose
-    presence gates data validation (mirroring the reference's column gate)."""
-    contract = contract or CONTRACTS.get(table_name)
+    """None when ``table_name``'s contract (:data:`CONTRACTS`) holds, or it
+    has none; otherwise a violations DataFrame whose presence gates data
+    validation (mirroring the reference's column gate)."""
+    contract = CONTRACTS.get(table_name)
     if contract is None:
         return None
     actual = {f.name: f.dataType for f in df.schema.fields}
@@ -91,7 +89,7 @@ def schema_contract_violations(
                 (SEVERITY_ERROR, table_name, ROW_REF_WHOLE_COLUMN, f.name, "",
                  "C21.schema", "This column is expected and is missing from the table")
             )
-        elif strict_types and actual[f.name] != f.dataType:
+        elif actual[f.name] != f.dataType:
             rows.append(
                 (SEVERITY_ERROR, table_name, ROW_REF_WHOLE_COLUMN, f.name,
                  str(actual[f.name]), "C21.schema",

@@ -28,6 +28,11 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from seronet_data_validator_spark import runner
+from seronet_data_validator_spark.model import (
+    ROW_REF_TABLE_DUP,
+    SEVERITY_ERROR,
+    violation_columns,
+)
 # re-exported only as call sites that perfbench/trace.py wraps by name
 from seronet_data_validator_spark.operators.integrity import (  # noqa: F401
     duplicate_id_violations,
@@ -140,18 +145,12 @@ def stream_validate_clips(
             key = F.col(rs.row_ref_column)
             parts.append(
                 batch_df.join(prior_keys, rs.row_ref_column, "left_semi")
-                .select(
-                    F.lit("Error").alias("severity"),
-                    F.lit(rs.table_name).alias("table_name"),
-                    F.lit("-3").alias("row_ref"),
-                    F.lit(rs.row_ref_column).alias("column_name"),
-                    key.cast("string").alias("column_value"),
-                    F.lit("C4.cross_batch_dup").alias("rule_id"),
-                    F.concat(
-                        F.lit("ID "), key,
-                        F.lit(" already arrived in an earlier micro-batch; IDs must be unique"),
-                    ).alias("message"),
-                )
+                .select(*violation_columns(
+                    SEVERITY_ERROR, rs.table_name, ROW_REF_TABLE_DUP, rs.row_ref_column,
+                    key, "C4.cross_batch_dup",
+                    F.concat(F.lit("ID "), key, F.lit(
+                        " already arrived in an earlier micro-batch; IDs must be unique")),
+                ))
             )
         # same first-writer-wins C22 dedup as the batch runner
         v = runner.dedup_violations(union_violation_parts(parts), order_col="_ord")

@@ -7,7 +7,7 @@ import numpy as np
 import pandas as pd
 import pytest
 
-from seronet_data_validator_spark.operators.augment import assign_noise, mix_at_snr
+from seronet_data_validator_spark.operators.augment import mix_at_snr
 from seronet_data_validator_spark.operators.dsp import (
     audio_basic_features_exact,
     pitch_lag_exact,
@@ -84,14 +84,6 @@ def test_mix_silent_or_missing_noise(spark):
     }
     assert feats["zero_noise"]["peak_abs"] == 1234  # unchanged passthrough
     assert feats["no_bank_row"]["peak_abs"] == 1234
-
-
-def test_assign_noise_deterministic(spark):
-    clips = _df(spark, [_clip(f"c{i}", np.full(10, 100)) for i in range(20)])
-    a = assign_noise(clips.drop("noise_id"), 4).select("clip_id", "noise_id")
-    b = assign_noise(clips.drop("noise_id"), 4).select("clip_id", "noise_id")
-    assert sorted(map(tuple, a.collect())) == sorted(map(tuple, b.collect()))
-    assert all(0 <= r["noise_id"] < 4 for r in a.collect())
 
 
 def test_pitch_lag_square_wave(spark):

@@ -57,61 +57,6 @@ def test_simhash_near_duplicates(spark, docs):
     assert (4, 5) not in got
 
 
-def test_dedup_keep_first(spark, docs):
-    pairs = dedup.minhash_dedup(docs, jaccard_threshold=0.95)
-    kept = dedup.dedup_keep_first(docs, pairs)
-    ids = {r["doc_id"] for r in kept.collect()}
-    assert 1 in ids and 2 not in ids  # higher id of the exact pair dropped
-
-
-def test_embedding_near_duplicates(spark):
-    rng = np.random.default_rng(5)
-    base = rng.normal(0, 1, 16)
-    rows = [
-        (1, [float(x) for x in base]),
-        (2, [float(x) for x in base + rng.normal(0, 0.01, 16)]),  # near dup
-        (3, [float(x) for x in rng.normal(0, 1, 16)]),
-    ]
-    df = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
-    out = dedup.embedding_near_duplicates(df, threshold=0.98).collect()
-    got = {(r["id_a"], r["id_b"]) for r in out}
-    assert got == {(1, 2)}
-
-
-def test_embedding_near_dup_hot_bucket_refinement(spark):
-    # two dissimilar groups engineered into coarse collision: with n_planes=0
-    # everything shares the empty base bucket; max_bucket_size forces the
-    # refinement planes to split the groups while keeping within-group pairs.
-    rng = np.random.default_rng(7)
-    a = rng.normal(0, 1, 16)
-    b = -a  # opposite direction: every refinement plane separates a from b
-    rows = [(i, [float(x) for x in (a if i < 3 else b) + rng.normal(0, 0.005, 16)])
-            for i in range(6)]
-    df = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
-    out = dedup.embedding_near_duplicates(
-        df, threshold=0.95, n_planes=0, max_bucket_size=4, n_refine_planes=8
-    ).collect()
-    got = {(r["id_a"], r["id_b"]) for r in out}
-    assert got == {(0, 1), (0, 2), (1, 2), (3, 4), (3, 5), (4, 5)}
-
-
-def test_embedding_near_dup_star_mode_linear_pairs(spark):
-    # an all-similar cluster: star mode emits only hub pairs (min id → rest),
-    # enough for connected-components dedup, linear instead of quadratic.
-    rng = np.random.default_rng(9)
-    base = rng.normal(0, 1, 16)
-    rows = [(i, [float(x) for x in base + rng.normal(0, 0.003, 16)]) for i in range(5)]
-    df = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
-    out = dedup.embedding_near_duplicates(df, threshold=0.98, star=True).collect()
-    got = {(r["id_a"], r["id_b"]) for r in out}
-    assert got == {(0, 1), (0, 2), (0, 3), (0, 4)}
-    kept = dedup.dedup_keep_first(
-        df, dedup.embedding_near_duplicates(df, threshold=0.98, star=True),
-        id_col="vec_id",
-    )
-    assert {r["vec_id"] for r in kept.collect()} == {0}
-
-
 def test_token_count_and_quality(spark, docs):
     tc = text.token_count(docs).collect()
     assert {r["doc_id"]: r["n_tokens_ws"] for r in tc}[1] == 13
@@ -275,19 +220,12 @@ def test_profile_and_drift(spark):
 
 def test_connected_components_transitive_chain(spark):
     """a~b, b~c, (d~e) with no a~c pair: components must be {a,b,c} and
-    {d,e}; dedup_by_components keeps only the min id per component, unlike
-    one-hop dedup_keep_first which would keep c's absence ambiguous."""
+    {d,e}, each labelled by its minimum id."""
     pairs = spark.createDataFrame(
         [(1, 2), (2, 3), (10, 11)], "id_a long, id_b long"
     )
     comp = {r["node"]: r["component"] for r in dedup.connected_components(pairs).collect()}
     assert comp == {1: 1, 2: 1, 3: 1, 10: 10, 11: 10}
-
-    docs_df = spark.createDataFrame(
-        [(i, f"doc {i}") for i in (1, 2, 3, 10, 11, 99)], "doc_id long, text string"
-    )
-    kept = sorted(r["doc_id"] for r in dedup.dedup_by_components(docs_df, pairs).collect())
-    assert kept == [1, 10, 99]
 
 
 def test_connected_components_long_chain_converges(spark):

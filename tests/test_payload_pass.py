@@ -12,6 +12,7 @@ from __future__ import annotations
 
 import os
 import re
+from collections import Counter
 
 import numpy as np
 import pytest
@@ -40,6 +41,7 @@ from seronet_data_validator_spark.sources.staging import stage_clip_tables
 
 COLS = [f.name for f in VIOLATION_SCHEMA.fields]
 _NODE = re.compile(r"^\(\d+\) (\S+)", re.M)
+_SCAN = re.compile(r"^\(\d+\) Scan parquet (\S+)\nOutput \[\d+\]: \[([^\]]*)\]", re.M)
 
 
 def edge_rows() -> tuple[list[tuple], list[tuple]]:
@@ -165,12 +167,21 @@ def _plan_shape(text: str) -> tuple[int, int, int]:
     )
 
 
+def _fact_scans(text: str, table: str) -> list[tuple[str, ...]]:
+    """The output columns of each scan of ``table`` in a formatted plan."""
+    return sorted(
+        tuple(c.split("#")[0] for c in out.split(", "))
+        for name, out in _SCAN.findall(text) if name.endswith(table)
+    )
+
+
 @pytest.mark.parametrize("qc", [True, False], ids=["qc", "no_qc"])
 def test_lifecycle_plan_shape_budget(spark, monkeypatch, qc):
     """The lifecycle plan (the input of ``_finish_validation``) over bucketed
     tables with audio, references and an inlined registry: the fact table's
     payload is read by one scan and crosses to Python in one node, QC on or
-    off."""
+    off. The verdict action adds one scan of the fact table, pruned to the
+    partition column, for the row counts."""
     prefix = f"shape{os.getpid()}"
     stage_clip_tables(spark, 200, seed=19, buckets=4, bad=True,
                       table_prefix=prefix, refs_from_clips=False)
@@ -183,17 +194,25 @@ def test_lifecycle_plan_shape_budget(spark, monkeypatch, qc):
         return finish(spark_, violations, *args)
 
     monkeypatch.setattr(R, "_finish_validation", capture)
+    fact = f"{prefix}_clips_200_19_bad"
     res = R.validate_clips(
-        spark, spark.table(f"{prefix}_clips_200_19_bad"),
+        spark, spark.table(fact),
         codec_registry=codec_registry_df(spark),
         reference_clips=spark.table(f"{prefix}_refs_200_19"), run_qc_pass=qc,
     )
     scans, exchanges, python = _plan_shape(plans[0])
-    assert scans <= 5, plans[0]
+    assert scans <= 4, plans[0]
+    assert exchanges <= 2, plans[0]
     assert python == 1, plans[0]
-    if qc:
-        assert exchanges <= 3, plans[0]
     assert not res.passed
+    # the last SQL execution of the call is the verdict action (in memory:
+    # no write follows it); its plan holds the cached lifecycle plan too
+    executions = spark._jsparkSession.sharedState().statusStore().executionsList()
+    verdict = executions.apply(executions.size() - 1)
+    assert "runner.py" in verdict.description(), verdict.description()
+    extra = Counter(_fact_scans(verdict.physicalPlanDescription(), fact))
+    extra.subtract(Counter(_fact_scans(plans[0], fact)))
+    assert +extra == Counter({("site",): 1}), verdict.physicalPlanDescription()
     res.close()
 
 

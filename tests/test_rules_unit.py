@@ -169,8 +169,8 @@ def test_check_regex_and_dedup(spark):
     out_df_rows = run_rule(spark, rows, "id string, v string",
                            Rule("r", "v", check_regex(r"^[0-9]+$")))
     assert len(out_df_rows) == 2
-    df = spark.createDataFrame(out_df_rows)
-    assert dedup_violations(df).count() == 1
+    df = spark.createDataFrame(out_df_rows).withColumn("_ord", F.lit(0))
+    assert dedup_violations(df, order_col="_ord").count() == 1
 
 
 def test_int_typed_column_rules_fire(spark):
