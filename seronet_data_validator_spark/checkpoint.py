@@ -101,10 +101,12 @@ class RunManifest:
 
     def resume_filter(self, df: DataFrame, done: list[str], partition_column: str) -> DataFrame:
         """Prune the ``done`` partitions. The isin predicate on the partition
-        column pushes down to the scan → whole-file pruning."""
+        column pushes down to the scan → whole-file pruning. A NULL partition
+        is never committed, so its rows stay (``NOT (NULL IN ...)`` is NULL)."""
         if not done:
             return df
-        return df.where(~F.col(partition_column).isin(done))
+        part = F.col(partition_column)
+        return df.where(part.isNull() | ~part.isin(done))
 
     def commit(
         self,

@@ -392,6 +392,22 @@ def _rows_batch(rows: list[tuple], types: list, batch: pa.RecordBatch, keep: tup
     )
 
 
+def _split_count(clips: DataFrame) -> int | None:
+    """Spark's file-split count for the bytes ``clips`` reads:
+    ``max(defaultParallelism, ceil(bytes / spark.sql.files.maxPartitionBytes))``,
+    the bytes being the size statistics of its plan's leaves. None when a
+    leaf's size is unknown (Spark's ``defaultSizeInBytes`` placeholder)."""
+    jspark = clips.sparkSession._jsparkSession
+    conf = jspark.sessionState().conf()
+    leaves = clips._jdf.queryExecution().analyzed().collectLeaves()
+    sizes = [int(str(leaves.apply(i).stats().sizeInBytes()))
+             for i in range(leaves.size())]
+    if max(sizes) >= conf.defaultSizeInBytes():
+        return None
+    splits = -(-sum(sizes) // conf.filesMaxPartitionBytes())
+    return max(jspark.sparkContext().defaultParallelism(), splits)
+
+
 def audio_violations(
     clips: DataFrame,
     reference_clips: DataFrame | None = None,
@@ -421,6 +437,18 @@ def audio_violations(
     sample; ``invariants=False`` drops C13a and the join (qc.qc_violations).
     ``keep_columns`` follow the rows: a QC1 row carries its clip's values, a
     C13a row NULL (C13a is table-level: the runner's NULL partition).
+
+    The pass runs in as many Python tasks as the input's bytes need
+    (:func:`_split_count`), not one per input partition: each task pays a
+    fixed worker setup before the first batch. In the lifecycle, Spark's
+    ``DisableUnnecessaryBucketedScan`` keeps a bucketed fact scan bucketed
+    under the union and the dedup's exchange, so without the coalesce the
+    pass would start one Python task per bucket, however small. The
+    coalesce sits above the reference join, so a bucketed sort-merge join
+    keeps its co-partitioning, and below ``mapInArrow``: one above it would
+    still start one Python runner per partition below it. A coalesce never
+    adds partitions, so where a bucket is bigger than a file split it
+    changes nothing.
     """
     ship = keep_columns if qc else ()  # QC off: no more than the header crosses
     # 60 B = the 44B canonical PCM header + 16B, so the IMA ADPCM fact/data
@@ -453,6 +481,9 @@ def audio_violations(
     proj = df.select(
         F.col(id_column), payload.alias("_payload"), *(c13a if invariants else ()), *ship
     )
+    n_tasks = _split_count(clips)
+    if n_tasks is not None:
+        proj = proj.coalesce(n_tasks)
 
     if qc:
         from seronet_data_validator_spark.operators.qc import (

@@ -451,7 +451,7 @@ def count_reconciliation_violations(
     partition. Full outer so both phantom-partition directions surface."""
     declared = F.col("declared_clip_count")
     observed = df.groupBy(partition_column).agg(F.count(F.lit(1)).alias("_observed"))
-    joined = observed.join(F.broadcast(manifest), partition_column, "full_outer")
+    joined = observed.join(manifest, partition_column, "full_outer")
     bad = joined.where(
         F.coalesce(F.col("_observed"), F.lit(0)) != F.coalesce(declared, F.lit(-1))
     )

@@ -35,6 +35,8 @@ each clip once for both families.
 
 from __future__ import annotations
 
+import functools
+
 import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -135,9 +137,11 @@ def _qc1_rules() -> list[tuple]:
     ]
 
 
+@functools.lru_cache(maxsize=8)
 def qc1_violations(table_name: str):
     """The QC1 violations of one stats row (its id in ``row_ref``) as an
-    array of VIOLATION_SCHEMA structs, clean rules compacted away."""
+    array of VIOLATION_SCHEMA structs, clean rules compacted away. Built once
+    per table name: the memo holds unresolved Columns only, no DataFrame."""
     return F.array_compact(F.array(*[
         F.when(cond, F.struct(*violation_columns(
             severity, table_name, F.col("row_ref"), "bytes", value, rule_id, message)))

@@ -21,6 +21,13 @@ references), one Python node, QC or not, and 2 exchanges (references'
 broadcast, dedup). The verdict action adds one more scan of the fact table,
 pruned to the partition column, whose aggregation reuses the partition
 column so AQE coalesces it.
+
+Python tasks: Spark's ``DisableUnnecessaryBucketedScan`` keeps bucketed
+scans bucketed under the union, because the dedup's window above its
+exchange needs a distribution, so every family reads one partition per
+bucket. The payload pass (5) coalesces to Spark's file-split count right
+below its ``mapInArrow`` (operators/audio.audio_violations), so small
+buckets share a Python task.
 """
 
 from __future__ import annotations
@@ -434,8 +441,10 @@ def _finish_validation(
         sev_counts = {(r[partition_column], r["severity"]): r["n"]
                       for r in agg_rows if not r["_input"]}
         row_counts = {r[partition_column]: r["n"] for r in agg_rows if r["_input"]}
-        if skipped and not row_counts:
-            # every partition was committed by an earlier call: nothing to write
+        if skipped and set(row_counts) <= {None}:
+            # every partition was committed by an earlier call: nothing to
+            # write. A NULL partition is never committed; the call that
+            # committed the last partition validated and wrote its rows.
             return ValidationResult(
                 run_id, spark.createDataFrame([], VIOLATION_SCHEMA), [],
                 all(prior_ok.values()), skipped,

@@ -2,8 +2,8 @@
 (violations write, then the run-manifest commit) resumes to the result of an
 uninterrupted run; the manifest keeps NULL metrics and 64-bit counts exactly;
 a resumed durable run stays within its Spark job budget, leaves nothing
-cached and does not flag the sites it skipped; and ``wall_ms`` times the
-whole call."""
+cached, does not flag the sites it skipped and still validates NULL-site
+clips; and ``wall_ms`` times the whole call."""
 
 from __future__ import annotations
 
@@ -228,6 +228,38 @@ def test_resume_does_not_flag_skipped_sites(spark, tmp_path, declared_side):
     assert [v["partition_key"] for v in res.verdicts] == SITES[2:]
     assert res.violations.where(F.col("severity") == SEVERITY_ERROR).count() == 0
     assert res.passed
+
+
+def test_resume_keeps_null_site_clips(spark, bad_clips, tmp_path):
+    """A clip with a NULL site belongs to no committed partition: a run
+    resumed with 2 of 4 sites committed still validates it and reports the
+    full run's rows for it; once every site is committed, a call writes
+    nothing."""
+    extra = bad_clips.limit(1).withColumns(
+        {"clip_id": F.lit("no-site"), "site": F.lit(None).cast("string")})
+    clips = bad_clips.unionByName(extra)
+    registry = codec_registry_df(spark)
+
+    def rows(res):
+        return sorted(tuple(r) for r in res.violations.where(
+            F.col("row_ref") == "no-site").collect())
+
+    full = validate_clips(spark, clips, codec_registry=registry, run_id="full",
+                          output_root=str(tmp_path / "full"), run_audio_pass=False)
+    want = rows(full)
+    assert "C3.clip_id_format" in {r[VIOLATION_SCHEMA.names.index("rule_id")] for r in want}
+    root = str(tmp_path / "resumed")
+    _commit_passed(spark, root, "resumed", SITES[:2])
+    res = validate_clips(spark, clips, codec_registry=registry, run_id="resumed",
+                         output_root=root, run_audio_pass=False)
+    assert res.skipped_partitions == SITES[:2]
+    assert rows(res) == want
+    # a NULL partition is never committed, and the call that committed the
+    # last site wrote its rows: a further call has nothing to write
+    again = validate_clips(spark, clips, codec_registry=registry, run_id="resumed",
+                           output_root=root, run_audio_pass=False)
+    assert again.skipped_partitions == SITES
+    assert again.verdicts == [] and again.violations.count() == 0
 
 
 def test_wall_ms_covers_the_whole_call(spark, monkeypatch):

@@ -1,6 +1,7 @@
 """Unit tests for the table-level integrity operators added/wired in round 2:
-C19 consistency, C20 suppression, C17 presence violations, salted anti-join
-skew path, P7 normalization, C22 ordered dedup, truncated-WAV decode."""
+C19 consistency, C20 suppression, C18 count reconciliation, C17 presence
+violations, salted anti-join skew path, P7 normalization, C22 ordered dedup,
+truncated-WAV decode."""
 
 from __future__ import annotations
 
@@ -12,6 +13,7 @@ from seronet_data_validator_spark.operators.audio import audio_violations
 from seronet_data_validator_spark.operators.dedup import exact_duplicates
 from seronet_data_validator_spark.operators.integrity import (
     consistency_violations,
+    count_reconciliation_violations,
     presence_matrix,
     presence_violations,
     salted_left_anti,
@@ -74,6 +76,25 @@ def test_suppressed_referential_skips_already_reported(spark):
     got = {r["column_value"] for r in v.collect()}
     assert got == {"k2"}  # k1 suppressed, k3 in registry
     assert v.collect()[0]["rule_id"] == "C20.map_id"
+
+
+def test_count_reconciliation_full_outer_join_has_no_broadcast_hint(spark):
+    """C18 joins observed and declared counts full outer, which Spark cannot
+    build as a broadcast: the plan carries no broadcast hint, and both
+    directions of a mismatch surface."""
+    df = spark.createDataFrame([("a",), ("a",), ("b",), (None,)], "site string")
+    manifest = spark.createDataFrame(
+        [("a", 2), ("b", 2), ("c", 1)], "site string, declared_clip_count long")
+    out = count_reconciliation_violations(df, manifest, "site", "clips")
+    assert "broadcast" not in out._jdf.queryExecution().analyzed().toString()
+    assert sorted(tuple(r) for r in out.collect()) == [
+        ("Error", "clips", "-5", "site", "NULL", "C18.count_mismatch",
+         "Declared count NULL != observed 1 for partition NULL"),
+        ("Error", "clips", "-5", "site", "b", "C18.count_mismatch",
+         "Declared count 2 != observed 1 for partition b"),
+        ("Error", "clips", "-5", "site", "c", "C18.count_mismatch",
+         "Declared count 1 != observed 0 for partition c"),
+    ]
 
 
 def test_presence_violations_both_directions(spark):

@@ -1,6 +1,7 @@
 """The compiler's per-rule lane memo (plans/compile._rule_lanes): a Rule's
 prep projections and emission structs are built once and reused on every
-later input, with the same rows and the same analyzed plan."""
+later input, with the same rows and the same analyzed plan. The QC1
+expansion (operators/qc.qc1_violations) is memoized the same way."""
 
 import re
 from collections import Counter
@@ -18,7 +19,8 @@ from seronet_data_validator_spark.plans.rules import (
     check_percent_identity,
 )
 from seronet_data_validator_spark.rulesets import clips_ruleset
-from seronet_data_validator_spark.runner import violation_families
+from seronet_data_validator_spark.operators.qc import qc1_violations
+from seronet_data_validator_spark.runner import validate_clips, violation_families
 from seronet_data_validator_spark.sources.clips import codec_registry_df, generate_clips
 
 # PLANS §12 parse chains: C8 date, C12 duration triplet, C13 percent identity
@@ -114,6 +116,21 @@ def test_families_reuse_the_inlined_registry_rule(spark):
     misses = _rule_lanes.cache_info().misses
     families(8)
     assert _rule_lanes.cache_info().misses == misses
+
+
+def test_lifecycle_reuses_the_qc1_expansion(spark):
+    """The QC1 expansion (qc.qc1_violations) is built once per table name:
+    a second lifecycle call with the QC pass builds nothing new."""
+
+    def call(seed):
+        validate_clips(spark, _clips(spark, seed), run_audio_pass=False,
+                       run_qc_pass=True).close()
+
+    call(7)
+    info = qc1_violations.cache_info()
+    call(8)
+    assert qc1_violations.cache_info().misses == info.misses
+    assert qc1_violations.cache_info().hits > info.hits
 
 
 def test_list_valued_precondition_is_hashable(spark):

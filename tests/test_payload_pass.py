@@ -1,7 +1,8 @@
 """The one payload pass: the C13a audio invariants and the QC1 acceptance
 rules run in a single Arrow decode (operators/audio.audio_violations).
 
-Pins its plan-shape budget in the lifecycle plan, its parity with the
+Pins its plan-shape budget in the lifecycle plan, its Python task count
+(the file-split count, not one task per bucket), its parity with the
 two-pass composition it replaced (rows and partition attribution, every
 mode, with and without references), the disjoint dedup keys that let the
 two rule families share one pass ordinal, Spark's HALF_UP formatting of
@@ -42,6 +43,8 @@ from seronet_data_validator_spark.sources.staging import stage_clip_tables
 COLS = [f.name for f in VIOLATION_SCHEMA.fields]
 _NODE = re.compile(r"^\(\d+\) (\S+)", re.M)
 _SCAN = re.compile(r"^\(\d+\) Scan parquet (\S+)\nOutput \[\d+\]: \[([^\]]*)\]", re.M)
+_COALESCED_JOIN = re.compile(
+    r"MapInArrow \(\d+\)\n\s*\+- Coalesce \(\d+\)\n(\s*\+- Project \(\d+\)\n)*\s*\+- \w*Join")
 
 
 def edge_rows() -> tuple[list[tuple], list[tuple]]:
@@ -204,6 +207,9 @@ def test_lifecycle_plan_shape_budget(spark, monkeypatch, qc):
     assert scans <= 4, plans[0]
     assert exchanges <= 2, plans[0]
     assert python == 1, plans[0]
+    # the payload pass's coalesce sits above the reference join (a bucketed
+    # merge join keeps its co-partitioning) and right below the Python node
+    assert _COALESCED_JOIN.search(plans[0]), plans[0]
     assert not res.passed
     # the last SQL execution of the call is the verdict action (in memory:
     # no write follows it); its plan holds the cached lifecycle plan too
@@ -214,6 +220,61 @@ def test_lifecycle_plan_shape_budget(spark, monkeypatch, qc):
     extra.subtract(Counter(_fact_scans(plans[0], fact)))
     assert +extra == Counter({("site",): 1}), verdict.physicalPlanDescription()
     res.close()
+
+
+def _python_tasks(spark, res) -> int:
+    """The tasks of the one Python node (its partition count) in the executed
+    plan that filled an in-memory result's cache; counting runs no job. The
+    stage holding the node also runs the union's other families, so its task
+    count would not isolate the Python tasks."""
+    cached = spark._jsparkSession.sharedState().cacheManager().lookupCachedData(
+        res._persisted._jdf)
+    todo, found = [cached.get().cachedRepresentation().cacheBuilder().cachedPlan()], []
+    while todo:
+        node = todo.pop()
+        name = node.nodeName()
+        if name == "MapInArrow":
+            found.append(node.execute().getNumPartitions())
+        kids = node.children()
+        todo += [kids.apply(i) for i in range(kids.size())]
+        if name == "AdaptiveSparkPlan":
+            todo.append(node.executedPlan())
+        elif name.endswith("QueryStage"):
+            todo.append(node.plan())
+    assert len(found) == 1
+    return found[0]
+
+
+@pytest.mark.parametrize("split", ["default", "below_bucket"])
+def test_payload_pass_python_tasks(spark, split):
+    """Over 8 buckets the lifecycle's payload pass runs in Spark's file-split
+    count of Python tasks, max(defaultParallelism, ceil(bytes /
+    maxPartitionBytes)), not one task per bucket. With maxPartitionBytes
+    below one bucket's bytes it keeps one task per bucket: the coalesce
+    never adds partitions."""
+    prefix = f"split{os.getpid()}"
+    stage_clip_tables(spark, 200, seed=19, buckets=8, bad=True,
+                      table_prefix=prefix, refs_from_clips=False)
+    clips = spark.table(f"{prefix}_clips_200_19_bad")
+    key = "spark.sql.files.maxPartitionBytes"
+    before = spark.conf.get(key)
+    if split == "below_bucket":
+        bucket_bytes = min(os.path.getsize(f.removeprefix("file:")) for f in clips.inputFiles())
+        spark.conf.set(key, str(bucket_bytes // 2))
+    try:
+        res = R.validate_clips(
+            spark, clips, codec_registry=codec_registry_df(spark),
+            reference_clips=spark.table(f"{prefix}_refs_200_19"), run_qc_pass=True,
+        )
+        tasks = _python_tasks(spark, res)
+        res.close()
+    finally:
+        spark.conf.set(key, before)
+    assert not res.passed
+    if split == "default":
+        assert tasks <= spark.sparkContext.defaultParallelism < 8
+    else:
+        assert tasks == 8
 
 
 def test_in_memory_result_close_releases_cache(spark):
