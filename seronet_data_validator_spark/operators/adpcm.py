@@ -17,7 +17,7 @@ DECODER fully vectorizable across blocks: the state loop below runs once
 per within-block sample position, with every block advancing in numpy
 lanes — the decode cost of a clip is O(samples_per_block) Python
 iterations regardless of clip length, matching the mapInArrow batch model
-(audio._decoded_map) the other codecs use.
+(arrow_rows._decoded_map) the other codecs use.
 
 The encoder exists to build fixtures and round-trip tests (same role as
 flac.flac_bytes): it quantizes against the same reconstruction the decoder

@@ -44,7 +44,7 @@ worker is copied ≥3× (socket write, socket read, Arrow assembly):
 
 from __future__ import annotations
 
-from typing import Callable, Iterable, Iterator
+from typing import Iterator
 
 import numpy as np
 import pyarrow as pa
@@ -54,6 +54,7 @@ from pyspark.sql import types as T
 from pyspark.sql.pandas.types import to_arrow_schema
 
 from seronet_data_validator_spark.model import SEVERITY_ERROR, VIOLATION_SCHEMA
+from seronet_data_validator_spark.operators.arrow_rows import _binary_views, _rows_batch
 
 _SNR_DB_MIN = 30.0  # C13a: decoded PCM vs its reference
 _DUR_TOLERANCE_MS = 2  # C13a: declared vs decoded duration
@@ -126,27 +127,6 @@ def snr_db(ref: np.ndarray, test: np.ndarray, scratch: tuple[np.ndarray, np.ndar
     if p_ref == 0.0:
         return -np.inf
     return 10.0 * np.log10(p_ref / p_noise)
-
-
-def _binary_views(arr: pa.Array) -> tuple[Callable[[int], np.ndarray | None], np.ndarray | None]:
-    """Zero-copy row accessor for an Arrow Binary/LargeBinary array.
-
-    Returns (get(i) -> uint8 view | None, validity bool array | None).
-    Views slice the array's single shared data buffer — no per-row copy."""
-    odt = np.int64 if pa.types.is_large_binary(arr.type) else np.int32
-    bufs = arr.buffers()
-    offsets = np.frombuffer(bufs[1], dtype=odt, count=len(arr) + 1 + arr.offset)[arr.offset:]
-    data = np.frombuffer(bufs[2], dtype=np.uint8) if bufs[2] is not None else np.empty(0, np.uint8)
-    valid = None
-    if arr.null_count:
-        valid = arr.is_valid().to_numpy(zero_copy_only=False)
-
-    def get(i: int) -> np.ndarray | None:
-        if valid is not None and not valid[i]:
-            return None
-        return data[offsets[i] : offsets[i + 1]]
-
-    return get, valid
 
 
 _RIFF = np.frombuffer(b"RIFF", dtype=np.uint8)
@@ -333,65 +313,6 @@ def _decode_view_channels(seg: np.ndarray | None) -> tuple[np.ndarray, int]:
     return mono.astype(np.int64).reshape(-1, 1), sr
 
 
-def _decoded_map(
-    clips: DataFrame,
-    schema: T.StructType,
-    rows: Callable[[object, np.ndarray | None, int | None], Iterable[tuple]],
-    *,
-    id_col: str,
-    keep_columns: tuple = (),
-    decode: Callable[[np.ndarray | None], tuple[np.ndarray, int]] = _decode_view,
-) -> DataFrame:
-    """The one Arrow decode pass behind every per-clip PCM operator.
-
-    Selects ``(id_col, bytes, *keep_columns)``, decodes each payload with
-    ``decode`` over a zero-copy view (a NULL payload or a failed decode
-    gives ``pcm = sr = None``) and calls ``rows(id, pcm, sr)``, which
-    yields that clip's output tuples in ``schema`` order: none, one or
-    many. Batches are built with the Arrow types of ``schema`` itself, and
-    each keep column rides along once per output row of its clip, so the
-    result is ``schema`` (its first field, the id, named ``id_col``) plus
-    the keep columns. Narrow, no shuffle."""
-    src = clips.select(id_col, "bytes", *keep_columns)
-    id_field, *rest = schema.fields
-    out_schema = T.StructType(
-        [T.StructField(id_col, id_field.dataType, id_field.nullable)]
-        + rest + [src.schema[c] for c in keep_columns]
-    )
-    types = [f.type for f in to_arrow_schema(schema)]
-
-    def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for batch in batches:
-            ids = batch.column(0).to_pylist()
-            get, _ = _binary_views(batch.column(1))
-            out: list[tuple] = []
-            src_row: list[int] = []
-            for i in range(batch.num_rows):
-                try:
-                    pcm, sr = decode(get(i))
-                except ValueError:  # a NULL payload fails the header parse too
-                    pcm = sr = None
-                for row in rows(ids[i], pcm, sr):
-                    out.append(row)
-                    src_row.append(i)
-            yield _rows_batch(out, types, batch, keep_columns, src_row, out_schema.names)
-
-    return src.mapInArrow(run, schema=out_schema)
-
-
-def _rows_batch(rows: list[tuple], types: list, batch: pa.RecordBatch, keep: tuple,
-                src_row: list, names: list[str]) -> pa.RecordBatch:
-    """Output batch of a decode pass: ``rows`` in the Arrow ``types``, then each
-    ``keep`` column of ``batch`` at the row's source index (``None``: NULL)."""
-    cols = zip(*rows) if rows else [()] * len(types)
-    take = pa.array(src_row, pa.int64())
-    return pa.RecordBatch.from_arrays(
-        [pa.array(c, type=t) for c, t in zip(cols, types)]
-        + [batch.column(k).take(take) for k in keep],
-        names=names,
-    )
-
-
 def _split_count(clips: DataFrame) -> int | None:
     """Spark's file-split count for the bytes ``clips`` reads:
     ``max(defaultParallelism, ceil(bytes / spark.sql.files.maxPartitionBytes))``,
@@ -495,6 +416,8 @@ def audio_violations(
     types = [f.type for f in to_arrow_schema(out_schema)][: len(out_schema) - len(ship)]
     no_stats = (None,) * len(stats)
 
+    # Not on arrow_rows._decoded_map: a row reads a 60-byte header or a full
+    # payload, the reference payload and the declared columns beside it.
     def check_batches(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         scratch = (
             np.empty(_SNR_CHUNK, dtype=np.float32),

@@ -71,10 +71,10 @@ def mix_at_snr(
         F.broadcast(nz), "__nz_key", "left"
     )
 
-    from seronet_data_validator_spark.operators.audio import (
-        _binary_views,
-        _decode_view,
-    )
+    # Not on arrow_rows._decoded_map: each row decodes two payload columns,
+    # the clip and its noise.
+    from seronet_data_validator_spark.operators.arrow_rows import _binary_views
+    from seronet_data_validator_spark.operators.audio import _decode_view
     from seronet_data_validator_spark.sources.clips import wav_bytes
 
     names = [f.name for f in MIX_SCHEMA.fields]

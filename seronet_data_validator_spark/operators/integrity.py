@@ -71,15 +71,30 @@ def referential_violations(
     columns so violations attribute to their REAL partition — identical to
     the fused inline path's keep_columns, keeping the two C15 strategies
     verdict-equivalent regardless of registry size."""
+    return _referential_rows(
+        _unregistered(df, dim, key), key, table_name, row_ref_column, "C15.referential",
+        f" was not found in {registry_name}", keep_columns,
+    )
+
+
+def _unregistered(fact: DataFrame, dim: DataFrame, key: str) -> DataFrame:
+    """The C15 referential core: rows of ``fact`` whose non-empty ``key`` is
+    absent from ``dim`` (a left_anti join against the broadcast distinct
+    keys, so the fact table never shuffles)."""
     d = F.broadcast(dim.select(key).dropDuplicates([key]))
-    missing = df.where(
+    return fact.where(
         F.col(key).isNotNull() & (F.col(key).cast("string") != "")
     ).join(d, key, "left_anti")
+
+
+def _referential_rows(missing: DataFrame, key: str, table_name: str,
+                      row_ref_column: str | None, rule_id: str, suffix: str,
+                      keep_columns: tuple[str, ...] = ()) -> DataFrame:
+    """One Error per unregistered row: ``Value <key><suffix>``."""
     return missing.select(*keep_columns, *violation_columns(
         SEVERITY_ERROR, table_name,
         F.col(row_ref_column) if row_ref_column else ROW_REF_CROSS_TABLE,
-        key, F.col(key), "C15.referential",
-        F.concat(F.lit("Value "), F.col(key), F.lit(f" was not found in {registry_name}")),
+        key, F.col(key), rule_id, F.concat(F.lit("Value "), F.col(key), F.lit(suffix)),
     ))
 
 
@@ -418,10 +433,6 @@ def suppressed_referential_violations(
     Two broadcast left_anti joins: fact vs dim (the C15 referential core),
     then candidates vs prior violation values for this column. Both anti
     sides are key projections."""
-    dim_side = F.broadcast(dim.select(key).dropDuplicates([key]))
-    candidates = fact.where(
-        F.col(key).isNotNull() & (F.col(key).cast("string") != "")
-    ).join(dim_side, key, "left_anti")
     # violation values are stored as strings — cast back to the fact key's
     # type so the anti-join compares natively (no implicit double coercion)
     key_type = fact.schema[key].dataType
@@ -430,14 +441,11 @@ def suppressed_referential_violations(
         .select(F.col("column_value").cast(key_type).alias(key))
         .dropDuplicates([key])
     )
-    fresh = candidates.join(already, key, "left_anti")
-    return fresh.select(*violation_columns(
-        SEVERITY_ERROR, table_name,
-        F.col(row_ref_column) if row_ref_column else ROW_REF_CROSS_TABLE,
-        key, F.col(key), "C20.map_id",
-        F.concat(F.lit("Value "), F.col(key),
-                 F.lit(f" was not found in {registry_name} (not previously reported)")),
-    ))
+    return _referential_rows(
+        _unregistered(fact, dim, key).join(already, key, "left_anti"), key, table_name,
+        row_ref_column, "C20.map_id",
+        f" was not found in {registry_name} (not previously reported)",
+    )
 
 
 def count_reconciliation_violations(

@@ -2,10 +2,10 @@
 
 Media payloads are opaque `binary` columns with typed metadata columns
 beside them (the clips table's (bytes, sr_hz, dur_ms, codec) is the audio
-instance). The audio operators run through the shared Arrow decode pass
-(audio._decoded_map) over zero-copy buffer views — a pandas conversion
-would materialize a Python ``bytes`` object per row, one extra full copy
-of the corpus: schema,
+instance). The audio, image and video operators run through the shared
+Arrow decode pass (arrow_rows._decoded_map) over zero-copy buffer views —
+a pandas conversion would materialize a Python ``bytes`` object per row,
+one extra full copy of the corpus: schema,
 partitioning and batch shape are the real 100 TB plumbing. Decoders for
 formats whose libraries are not in this container are STUBBED behind a
 clearly-marked NotImplementedError, as permitted by the build brief.
@@ -17,16 +17,15 @@ image decode for the uncompressed public formats (PPM P6, PGM P5,
 
 from __future__ import annotations
 
-from typing import Iterator
+from typing import Callable
 
 import numpy as np
-import pandas as pd
-import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from seronet_data_validator_spark.operators.audio import _binary_views, _decoded_map
+from seronet_data_validator_spark.operators.arrow_rows import _decoded_map
+from seronet_data_validator_spark.operators.audio import _decode_view
 from seronet_data_validator_spark.sources.clips import wav_bytes
 
 AUDIO_FEATURES_SCHEMA = T.StructType(
@@ -60,7 +59,7 @@ def audio_features(clips: DataFrame, *, id_col: str = "clip_id") -> DataFrame:
         clip_ratio = float(np.mean(np.abs(pcm) >= 0.999)) if n else 0.0
         yield (cid, n, sr, rms, peak, zcr, clip_ratio)
 
-    return _decoded_map(clips, AUDIO_FEATURES_SCHEMA, rows, id_col=id_col)
+    return _decoded_map(clips, AUDIO_FEATURES_SCHEMA, rows, id_col=id_col, decode=_decode_view)
 
 
 RESAMPLED_SCHEMA = T.StructType(
@@ -102,7 +101,7 @@ def audio_resample(clips: DataFrame, target_sr: int, *, id_col: str = "clip_id")
         out = resample_linear(s16.astype(np.float32) / 32768.0, sr, target_sr)
         yield (cid, wav_bytes((out * 32767).astype(np.int16), target_sr), target_sr)
 
-    return _decoded_map(clips, RESAMPLED_SCHEMA, rows, id_col=id_col)
+    return _decoded_map(clips, RESAMPLED_SCHEMA, rows, id_col=id_col, decode=_decode_view)
 
 
 IMAGE_FEATURES_SCHEMA = T.StructType(
@@ -234,6 +233,13 @@ def _decode_image(b: bytes) -> tuple[int, int, np.ndarray]:
     )
 
 
+def _image_view(seg: np.ndarray | None) -> tuple[np.ndarray, tuple[int, int]]:
+    """``_decoded_map`` decode of an image payload view → (rgb, (width,
+    height)); a NULL payload fails like an empty one."""
+    w, h, rgb = _decode_image(None if seg is None else seg.tobytes())
+    return rgb, (w, h)
+
+
 def image_features(
     images: DataFrame, *, id_col: str = "item_id", bytes_col: str = "bytes"
 ) -> DataFrame:
@@ -244,23 +250,16 @@ def image_features(
     not in this container — the NotImplementedError path is the documented
     stub boundary). The Spark-side contract (schema, Arrow batching,
     partition-parallel narrow pass) is identical to audio_features."""
-    src = images.select(id_col, bytes_col)
+    w_lum = np.array([0.299, 0.587, 0.114], np.float64)
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for iid, b in zip(pdf[id_col], pdf[bytes_col]):
-                try:
-                    w, h, rgb = _decode_image(b)
-                    luma = float(
-                        np.mean(rgb @ np.array([0.299, 0.587, 0.114], np.float64))
-                    )
-                    rows.append((iid, w, h, luma))
-                except (NotImplementedError, ValueError):
-                    rows.append((iid, None, None, None))
-            yield pd.DataFrame(rows, columns=[f.name for f in IMAGE_FEATURES_SCHEMA.fields])
+    def rows(iid, rgb, wh):
+        if rgb is None:
+            yield (iid, None, None, None)
+        else:  # a 0-pixel image has no mean (NULL, not NaN)
+            yield (iid, *wh, float(np.mean(rgb @ w_lum)) if rgb.size else None)
 
-    return src.mapInPandas(run, schema=IMAGE_FEATURES_SCHEMA)
+    return _decoded_map(images, IMAGE_FEATURES_SCHEMA, rows, id_col=id_col,
+                        decode=_image_view, bytes_col=bytes_col)
 
 
 IMAGE_BASIC_EXACT_SCHEMA = T.StructType(
@@ -283,24 +282,16 @@ def image_basic_features_exact(
     the image analog of dsp.audio_basic_features_exact, and what gives the
     image DECODE path (PPM/BMP/PNG — all lossless) a full value oracle.
     Decode failures yield NULL features (quarantine row)."""
-    src = images.select(id_col, bytes_col)
+    w_lum = np.array([299, 587, 114], np.int64)
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        w_lum = np.array([299, 587, 114], np.int64)
-        for pdf in batches:
-            rows = []
-            for iid, b in zip(pdf[id_col], pdf[bytes_col]):
-                try:
-                    w, h, rgb = _decode_image(b)
-                    s = int((rgb.astype(np.int64) @ w_lum).sum())
-                    rows.append((iid, w, h, w * h, s))
-                except (NotImplementedError, ValueError):
-                    rows.append((iid, None, None, None, None))
-            yield pd.DataFrame(
-                rows, columns=[f.name for f in IMAGE_BASIC_EXACT_SCHEMA.fields]
-            )
+    def rows(iid, rgb, wh):
+        if rgb is None:
+            yield (iid, None, None, None, None)
+        else:
+            yield (iid, *wh, wh[0] * wh[1], int((rgb.astype(np.int64) @ w_lum).sum()))
 
-    return src.mapInPandas(run, schema=IMAGE_BASIC_EXACT_SCHEMA)
+    return _decoded_map(images, IMAGE_BASIC_EXACT_SCHEMA, rows, id_col=id_col,
+                        decode=_image_view, bytes_col=bytes_col)
 
 
 # --- Video: YUV4MPEG2 (Y4M) — the public UNCOMPRESSED container ----------
@@ -511,6 +502,51 @@ def _parse_y4m(b: bytes) -> tuple[int, int, int, int, int]:
     return w, h, payload, nl + 1, luma
 
 
+def _video_view(seg: np.ndarray | None) -> tuple[int, Callable[[int], tuple]]:
+    """``_decoded_map`` decode of a video payload view → (n_frames,
+    frame(i) → (width, height, luma array)). Header-only: frame(i) decodes
+    one frame. Y4M frames sit at a fixed stride (`FRAME\\n` + planar YUV),
+    so frame i is a single slice. AVI walks the RIFF chunks once; MJPEG
+    frames decode through the native T.81 decoder, raw BI_RGB ('DIB ')
+    frames are a pure numpy un-layout (bottom-up padded BGR rows → RGB).
+    Raises NotImplementedError for an inter-frame codec and ValueError for
+    an unreadable or frameless stream."""
+    blob = None if seg is None else seg.tobytes()
+    if blob is not None and blob[:4] == b"RIFF" and blob[8:12] == b"AVI ":
+        from seronet_data_validator_spark.operators.jpeg import decode_jpeg
+
+        aw, ah, codec, frames = _parse_avi(blob)
+        is_mjpeg = codec in (b"MJPG", b"mjpg")
+        if not is_mjpeg and codec not in _AVI_RAW_CODECS:
+            raise NotImplementedError("inter-frame AVI codec: needs a codec library")
+        stride = (aw * 3 + 3) // 4 * 4
+        wl = np.array([0.299, 0.587, 0.114], np.float64)
+
+        def avi_frame(fi: int) -> tuple:
+            f_off, f_len = frames[fi]
+            if is_mjpeg:
+                fw, fh, rgb = decode_jpeg(blob[f_off : f_off + f_len])
+            else:
+                if f_len < stride * ah:
+                    raise ValueError("short DIB frame")
+                fw, fh = aw, ah
+                rows = np.frombuffer(blob, np.uint8, count=stride * ah, offset=f_off)
+                rgb = rows.reshape(ah, stride)[:, : aw * 3].reshape(ah, aw, 3)[::-1, :, ::-1]
+            return fw, fh, rgb.reshape(-1, 3).astype(np.float64) @ wl
+
+        return len(frames), avi_frame
+    w, h, payload, off, luma = _parse_y4m(blob)
+    n_frames = (len(blob) - off) // (6 + payload)  # b"FRAME\n" + planar payload
+    if n_frames <= 0:
+        raise ValueError("Y4M stream without frames")
+
+    def y4m_frame(fi: int) -> tuple:
+        start = off + fi * (6 + payload) + 6
+        return w, h, np.frombuffer(blob, np.uint8, count=luma, offset=start)
+
+    return n_frames, y4m_frame
+
+
 def video_frames(
     items: DataFrame,
     *,
@@ -520,113 +556,30 @@ def video_frames(
 ) -> DataFrame:
     """Video frame-sampling + per-frame luma features over a binary video
     column — the third leg of the multimodal triad (audio_features /
-    image_features / THIS). Y4M frames sit at a fixed stride
-    (`FRAME\\n` + planar YUV), so sampling frame i is a single slice — no
-    sequential decode, exactly the property Iceberg-resident uncompressed
-    intermediates are chosen for in preprocessing pipelines.
+    image_features / THIS). Only the sampled frames decode (:func:`_video_view`),
+    the property Iceberg-resident uncompressed intermediates are chosen
+    for in preprocessing pipelines.
 
     Emits up to ``max_frames`` evenly-spaced frames per item as
     (frame_idx, width, height, n_frames, mean_luma, std_luma). Narrow
-    mapInArrow, zero-copy byte views; undecodable/compressed items are
-    skipped (feature extraction semantics — route them through the
-    validation path to FLAG them instead)."""
-    src = items.select(id_col, bytes_col)
+    mapInArrow, zero-copy byte views; undecodable/compressed items and
+    frames are skipped (feature extraction semantics — route them through
+    the validation path to FLAG them instead)."""
 
-    def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for batch in batches:
-            ids = batch.column(0).to_pylist()
-            get, _ = _binary_views(batch.column(1))
-            out = {n: [] for n in
-                   ("item_id", "frame_idx", "width", "height", "n_frames",
-                    "mean_luma", "std_luma")}
-            for i in range(batch.num_rows):
-                seg = get(i)
-                blob = seg.tobytes() if seg is not None else None
-                if blob is not None and blob[:4] == b"RIFF" and blob[8:12] == b"AVI ":
-                    # AVI: header-only chunk walk, decode ONLY the sampled
-                    # frames — MJPEG through the native T.81 decoder, raw
-                    # BI_RGB ('DIB ') as a pure numpy un-layout (bottom-up
-                    # padded BGR rows → RGB); inter-frame codecs skip
-                    from seronet_data_validator_spark.operators.jpeg import decode_jpeg
+    def rows(iid, n_frames, frame):
+        if n_frames is None:
+            return
+        take = np.unique(np.linspace(0, n_frames - 1, num=min(max_frames, n_frames)).astype(int))
+        for fi in take:
+            try:
+                w, h, y = frame(fi)
+            except (ValueError, NotImplementedError):
+                continue
+            yield (iid, int(fi), w, h, int(n_frames),
+                   round(float(y.mean()), 4), round(float(y.std()), 4))
 
-                    try:
-                        aw, ah, codec, frames = _parse_avi(blob)
-                    except ValueError:
-                        continue
-                    is_mjpeg = codec in (b"MJPG", b"mjpg")
-                    if not is_mjpeg and codec not in _AVI_RAW_CODECS:
-                        continue  # inter-frame codec: needs a codec library
-                    n_frames = len(frames)
-                    take = np.unique(
-                        np.linspace(0, n_frames - 1,
-                                    num=min(max_frames, n_frames)).astype(int)
-                    )
-                    wl = np.array([0.299, 0.587, 0.114], np.float64)
-                    stride = (aw * 3 + 3) // 4 * 4
-                    for fi in take:
-                        f_off, f_len = frames[fi]
-                        try:
-                            if is_mjpeg:
-                                fw, fh, rgb = decode_jpeg(
-                                    blob[f_off : f_off + f_len]
-                                )
-                            else:
-                                if f_len < stride * ah:
-                                    raise ValueError("short DIB frame")
-                                fw, fh = aw, ah
-                                rows = np.frombuffer(
-                                    blob, np.uint8, count=stride * ah,
-                                    offset=f_off,
-                                ).reshape(ah, stride)
-                                rgb = (
-                                    rows[:, : aw * 3]
-                                    .reshape(ah, aw, 3)[::-1, :, ::-1]
-                                )
-                        except (ValueError, NotImplementedError):
-                            continue
-                        y = rgb.reshape(-1, 3).astype(np.float64) @ wl
-                        out["item_id"].append(ids[i])
-                        out["frame_idx"].append(int(fi))
-                        out["width"].append(fw)
-                        out["height"].append(fh)
-                        out["n_frames"].append(int(n_frames))
-                        out["mean_luma"].append(round(float(y.mean()), 4))
-                        out["std_luma"].append(round(float(y.std()), 4))
-                    continue
-                try:
-                    w, h, payload, off, luma = _parse_y4m(blob)
-                except (ValueError, NotImplementedError):
-                    continue
-                stride = 6 + payload  # b"FRAME\n" + planar payload
-                n_frames = (len(blob) - off) // stride
-                if n_frames <= 0:
-                    continue
-                take = np.unique(
-                    np.linspace(0, n_frames - 1,
-                                num=min(max_frames, n_frames)).astype(int)
-                )
-                for fi in take:
-                    start = off + fi * stride + 6
-                    y = np.frombuffer(blob, np.uint8, count=luma, offset=start)
-                    out["item_id"].append(ids[i])
-                    out["frame_idx"].append(int(fi))
-                    out["width"].append(w)
-                    out["height"].append(h)
-                    out["n_frames"].append(int(n_frames))
-                    out["mean_luma"].append(round(float(y.mean()), 4))
-                    out["std_luma"].append(round(float(y.std()), 4))
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(out["item_id"], pa.string()),
-                 pa.array(out["frame_idx"], pa.int32()),
-                 pa.array(out["width"], pa.int32()),
-                 pa.array(out["height"], pa.int32()),
-                 pa.array(out["n_frames"], pa.int32()),
-                 pa.array(out["mean_luma"], pa.float64()),
-                 pa.array(out["std_luma"], pa.float64())],
-                list(out.keys()),
-            )
-
-    return src.mapInArrow(run, schema=VIDEO_FRAMES_SCHEMA)
+    return _decoded_map(items, VIDEO_FRAMES_SCHEMA, rows, id_col=id_col,
+                        decode=_video_view, bytes_col=bytes_col)
 
 
 def clip_chunks(

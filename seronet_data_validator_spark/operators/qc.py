@@ -43,9 +43,10 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from seronet_data_validator_spark.model import violation_columns
+from seronet_data_validator_spark.operators.arrow_rows import _decoded_map
 from seronet_data_validator_spark.operators.audio import (
+    _decode_view,
     _decode_view_channels,
-    _decoded_map,
     audio_violations,
 )
 
@@ -112,7 +113,7 @@ def audio_qc_stats(
         n, *rest = clip_stats(s16, frame, silence_peak)
         yield (cid, n, sr, *rest)
 
-    return _decoded_map(clips, QC_STATS_SCHEMA, rows, id_col=id_col)
+    return _decoded_map(clips, QC_STATS_SCHEMA, rows, id_col=id_col, decode=_decode_view)
 
 
 def _qc1_rules() -> list[tuple]:
@@ -469,7 +470,7 @@ def audio_dropouts(
             int(lens.sum()),
         )
 
-    stats = _decoded_map(clips, DROPOUT_SCHEMA, rows, id_col=id_col)
+    stats = _decoded_map(clips, DROPOUT_SCHEMA, rows, id_col=id_col, decode=_decode_view)
     decoded = F.col("n_dropouts").isNotNull()
     return stats.select(
         id_col,

@@ -6,9 +6,13 @@ Python.
 
 from __future__ import annotations
 
+import zlib
+
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
+from seronet_data_validator_spark.operators.arrow_rows import _decoded_map
 from seronet_data_validator_spark.operators.dedup import _ensure_parallelism
 
 # Tiny stopword profiles (public common-word lists, heavily truncated — this
@@ -596,19 +600,13 @@ def compression_ratio(
     but not repeated PHRASES). Low ratio → repetitive; ~1 → already-random
     (or encrypted/minified) content — both tails are suspect.
 
-    zlib is C-speed and the pass is a narrow mapInArrow (no shuffle, no
-    Python-per-row overhead beyond the per-doc compress call, which is the
-    operator's actual work). Empty docs are excluded (no ratio to
-    compute). Output: (id, n_bytes, ratio)."""
+    zlib is C-speed and the pass is a narrow mapInArrow over zero-copy
+    UTF-8 views (no shuffle, no Python-per-row overhead beyond the per-doc
+    compress call, which is the operator's actual work). Empty docs are
+    excluded (no ratio to compute). Output: (id, n_bytes, ratio)."""
     # single-file inputs serialize the scan stage on one core; the
     # repartition is a no-op once the input has >= cores files (scale)
     df = _ensure_parallelism(df)
-    import zlib
-    from typing import Iterator
-
-    import pyarrow as pa
-    from pyspark.sql import types as T
-
     out_schema = T.StructType(
         [
             T.StructField(id_col, T.LongType()),
@@ -616,27 +614,14 @@ def compression_ratio(
             T.StructField("ratio", T.DoubleType()),
         ]
     )
-    src = df.select(id_col, text_col)
 
-    def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for batch in batches:
-            ids = batch.column(0).to_pylist()
-            texts = batch.column(1).to_pylist()
-            oi, ob, orr = [], [], []
-            for i, t in zip(ids, texts):
-                if not t:
-                    continue
-                raw = t.encode("utf-8")
-                oi.append(i)
-                ob.append(len(raw))
-                orr.append(round(len(zlib.compress(raw, level)) / len(raw), 4))
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(oi, pa.int64()), pa.array(ob, pa.int64()),
-                 pa.array(orr, pa.float64())],
-                [id_col, "n_bytes", "ratio"],
-            )
+    def rows(doc_id, utf8, _):
+        if utf8 is not None and len(utf8):
+            raw = utf8.tobytes()
+            yield (doc_id, len(raw), round(len(zlib.compress(raw, level)) / len(raw), 4))
 
-    return src.mapInArrow(run, schema=out_schema)
+    return _decoded_map(df, out_schema, rows, id_col=id_col,
+                        decode=lambda view: (view, None), bytes_col=text_col)
 
 
 def normalize_transcript(

@@ -199,10 +199,12 @@ def validate_clips(
     # skipped partitions keep their STORED verdict — a failed dataset must
     # not report clean on re-run just because its partitions are committed.
     # The declared sides of C18 and C19 lose the skipped partitions too, or
-    # their now-absent clips would read as missing.
+    # their now-absent clips would read as missing; C17 keeps the whole
+    # input's ids, or a committed site's reference ids would read as childless.
     run_manifest = RunManifest(spark, output_root) if output_root else None
     prior_ok = run_manifest.prior_verdicts(run_id) if run_manifest else {}
     skipped = sorted(prior_ok)
+    presence_clips = clips
     if run_manifest is not None:
         clips = run_manifest.resume_filter(clips, skipped, partition_column)
         if manifest is not None:
@@ -238,6 +240,7 @@ def validate_clips(
         codec_registry=codec_registry, reference_clips=reference_clips,
         manifest=manifest, prior_violations=prior_violations,
         site_consistency=site_consistency, run_presence_pass=run_presence_pass,
+        presence_clips=presence_clips,
         run_audio_pass=run_audio_pass, audio_force_full_decode=audio_force_full_decode,
         run_qc_pass=run_qc_pass,
     )
@@ -277,6 +280,7 @@ def violation_families(
     prior_violations: DataFrame | None = None,
     site_consistency: SiteConsistencySpec | None = None,
     run_presence_pass: bool = False,
+    presence_clips: DataFrame | None = None,
     run_audio_pass: bool,
     audio_force_full_decode: bool = False,
     run_qc_pass: bool,
@@ -284,7 +288,9 @@ def violation_families(
     """Steps (3)-(5): the violation families of ``df`` in pass order (the
     C22 dedup's first-writer order), for ``validate_clips`` and for each
     micro-batch of ``stream_validate_clips``. With ``partition_column=None``
-    the families carry only the VIOLATION_SCHEMA columns."""
+    the families carry only the VIOLATION_SCHEMA columns. C17 reads its
+    clip ids from ``presence_clips`` (default ``df``): a resumed run passes
+    its input from before the resume filter."""
     keep = (partition_column,) if partition_column else ()
     parts: list[DataFrame] = []
 
@@ -338,7 +344,8 @@ def violation_families(
     if run_presence_pass and reference_clips is not None:
         m = presence_matrix(
             {
-                "clips": df.select(rs.row_ref_column),
+                "clips": (df if presence_clips is None else presence_clips)
+                .select(rs.row_ref_column),
                 "reference": reference_clips.select(rs.row_ref_column),
             },
             rs.row_ref_column,

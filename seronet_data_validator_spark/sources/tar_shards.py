@@ -145,6 +145,8 @@ def untar_members(shards: DataFrame, *, bytes_col: str = "tar_bytes") -> DataFra
     """Explode shard archives back into (shard_id, member, bytes) — the
     read side of the shard pipeline. Narrow mapInArrow; archive payloads
     never leave the task that read them."""
+    # Not on operators.arrow_rows._decoded_map: this is the reference
+    # decoder of the shard writer, kept as plain Python bytes and tarfile.
     src = shards.select("shard_id", bytes_col)
 
     def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:

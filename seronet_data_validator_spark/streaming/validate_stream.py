@@ -113,9 +113,10 @@ def stream_validate_clips(
     seen_tail = os.path.join(seen_root, "tail")
     seen_schema = f"{rs.row_ref_column} string, batch_id long"
 
+    # An empty micro-batch (an empty file landed) runs the same steps as any
+    # other: every family, the dynamic-overwrite write and the key-log steps
+    # accept empty input, so probing for it would cost a job per batch.
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
         sp = batch_df.sparkSession
         parts = runner.violation_families(
             batch_df, rs,

@@ -461,7 +461,8 @@ def test_decoded_map_fans_out_rows_with_keep_columns(spark):
     undecodable or NULL payload reaches ``rows`` as ``pcm = sr = None``."""
     from pyspark.sql import types as T
 
-    from seronet_data_validator_spark.operators.audio import _decoded_map
+    from seronet_data_validator_spark.operators.arrow_rows import _decoded_map
+    from seronet_data_validator_spark.operators.audio import _decode_view
 
     def wav(samples):
         return bytearray(wav_bytes(np.array(samples, np.int16), 8000))
@@ -493,7 +494,7 @@ def test_decoded_map_fans_out_rows_with_keep_columns(spark):
             yield (cid, k, v, sr)
 
     out = _decoded_map(
-        df, schema, rows, id_col="clip_id", keep_columns=("site", "grp")
+        df, schema, rows, id_col="clip_id", decode=_decode_view, keep_columns=("site", "grp")
     )
     assert out.schema == T.StructType(
         list(schema.fields)
@@ -509,6 +510,45 @@ def test_decoded_map_fans_out_rows_with_keep_columns(spark):
         ],
         key=repr,
     )
+
+
+def test_decoded_map_string_payload_and_not_implemented_decode(spark):
+    """The payload column may be a string column named by ``bytes_col``
+    (each row arrives as a view of its UTF-8 bytes), and a decode that
+    raises NotImplementedError fails that row like a ValueError does."""
+    from pyspark.sql import types as T
+
+    from seronet_data_validator_spark.operators.arrow_rows import _decoded_map
+
+    def decode(view):
+        if view is not None and view.tobytes().startswith(b"x"):
+            raise NotImplementedError("no decoder for this payload")
+        return view, None if view is None else len(view)
+
+    def rows(doc_id, view, n):
+        yield (doc_id, None if view is None else view.tobytes().decode("utf-8"), n)
+
+    df = spark.createDataFrame(
+        [(1, "abc", "s1"), (2, "é日", "s2"), (3, "xyz", "s3"), (4, None, "s4"), (5, "", "s5")],
+        "doc_id long, txt string, site string",
+    ).repartition(2)
+    schema = T.StructType(
+        [
+            T.StructField("doc_id", T.LongType()),
+            T.StructField("text", T.StringType()),
+            T.StructField("n_bytes", T.LongType()),
+        ]
+    )
+    out = _decoded_map(df, schema, rows, id_col="doc_id", decode=decode,
+                       bytes_col="txt", keep_columns=("site",))
+    assert out.columns == ["doc_id", "text", "n_bytes", "site"]
+    assert sorted(tuple(r) for r in out.collect()) == [
+        (1, "abc", 3, "s1"),
+        (2, "é日", 5, "s2"),
+        (3, None, None, "s3"),
+        (4, None, None, "s4"),
+        (5, "", 0, "s5"),
+    ]
 
 
 @pytest.mark.parametrize(

@@ -2,8 +2,8 @@
 (violations write, then the run-manifest commit) resumes to the result of an
 uninterrupted run; the manifest keeps NULL metrics and 64-bit counts exactly;
 a resumed durable run stays within its Spark job budget, leaves nothing
-cached, does not flag the sites it skipped and still validates NULL-site
-clips; and ``wall_ms`` times the whole call."""
+cached, does not flag the sites it skipped (C17, C18, C19) and still
+validates NULL-site clips; and ``wall_ms`` times the whole call."""
 
 from __future__ import annotations
 
@@ -20,7 +20,8 @@ from seronet_data_validator_spark import runner
 from seronet_data_validator_spark.checkpoint import RunManifest, partition_verdicts
 from seronet_data_validator_spark.model import SEVERITY_ERROR, VIOLATION_SCHEMA
 from seronet_data_validator_spark.runner import SiteConsistencySpec, validate_clips
-from seronet_data_validator_spark.sources.clips import SITES, codec_registry_df, generate_clips
+from seronet_data_validator_spark.sources.clips import (
+    SITES, codec_registry_df, generate_clips, reference_clips)
 
 RUN = "crash"
 STORED_SCHEMA = T.StructType(
@@ -260,6 +261,28 @@ def test_resume_keeps_null_site_clips(spark, bad_clips, tmp_path):
                            output_root=root, run_audio_pass=False)
     assert again.skipped_partitions == SITES
     assert again.verdicts == [] and again.violations.count() == 0
+
+
+def test_resume_keeps_presence_rows(spark, bad_clips, tmp_path):
+    """C17 reads the ids of the whole input, not the resume-filtered clips:
+    a run resumed with 2 of 4 sites committed reports the C17 rows of an
+    in-memory run, not the committed sites' reference ids as childless."""
+    kw = {"codec_registry": codec_registry_df(spark), "run_audio_pass": False,
+          "reference_clips": reference_clips(spark, 200, seed=47),
+          "run_presence_pass": True}
+
+    def c17(res):
+        return sorted(tuple(r) for r in res.violations.where(
+            F.col("rule_id").startswith("C17.")).select(*VIOLATION_SCHEMA.names).collect())
+
+    with validate_clips(spark, bad_clips, run_id="mem", **kw) as mem:
+        want = c17(mem)
+    assert "C17.childless" in {r[VIOLATION_SCHEMA.names.index("rule_id")] for r in want}
+    root = str(tmp_path / "resumed")
+    _commit_passed(spark, root, "resumed", SITES[:2])
+    res = validate_clips(spark, bad_clips, run_id="resumed", output_root=root, **kw)
+    assert res.skipped_partitions == SITES[:2]
+    assert c17(res) == want
 
 
 def test_wall_ms_covers_the_whole_call(spark, monkeypatch):

@@ -243,3 +243,55 @@ def test_stream_qc_pass_matches_batch(spark, tmp_path):
     b_rows = sorted(map(tuple, bv.collect()))
     assert s_rows == b_rows
     assert any(r[1] == victim and r[2] == "QC1.clipped" for r in s_rows)
+
+
+def test_empty_file_runs_as_an_empty_batch(spark, tmp_path):
+    """An empty file landing between two non-empty ones is a micro-batch
+    with no rows. It writes no violations and no keys: the violations and
+    the key log's (id, first batch_id) equal those of a run without that
+    file, batch ids past it shifted by one, and so do they after a restart
+    over one more file. Compaction every 2 makes the empty batch append to
+    the tail and the next batch read it."""
+    from seronet_data_validator_spark.sources.clips import CLIPS_SCHEMA
+
+    registry = codec_registry_df(spark)
+
+    def land(inp, parts):
+        df = spark.createDataFrame([], CLIPS_SCHEMA)
+        for n, seed in parts:
+            df = df.unionByName(generate_clips(spark, n, seed=seed))
+        df.coalesce(1).write.mode("append").parquet(inp)
+
+    def run(name, files, restart_file, batch_no):
+        inp, out = str(tmp_path / name / "in"), str(tmp_path / name / "out")
+        for parts in files:
+            land(inp, parts)
+        for restart in (False, True):
+            if restart:
+                land(inp, restart_file)
+            q = stream_validate_clips(spark, inp, out, codec_registry=registry,
+                                      max_files_per_trigger=1, compact_seen_keys_every=2)
+            q.awaitTermination(180)
+            assert q.exception() is None
+        viols = spark.read.parquet(os.path.join(out, "violations_stream"))
+        by_batch = {}
+        for r in viols.collect():
+            by_batch.setdefault(batch_no[r["batch_id"]], []).append(
+                tuple(r[c] for c in viols.columns if c != "batch_id"))
+        seen_root = os.path.join(out, "seen_keys")
+        log_paths = [os.path.join(seen_root, n) for n in os.listdir(seen_root)
+                     if n.startswith("snap=") and not n.endswith(".tmp")]
+        if os.path.isdir(os.path.join(seen_root, "tail")):
+            log_paths.append(os.path.join(seen_root, "tail"))
+        log = spark.read.schema("clip_id string, batch_id long").parquet(*log_paths)
+        first = log.groupBy("clip_id").agg(F.min("batch_id")).collect()
+        return ({k: sorted(v) for k, v in by_batch.items()},
+                sorted((i, batch_no[b]) for i, b in first))
+
+    a, b, c = [(20, 21)], [(10, 22), (3, 21)], [(5, 22), (2, 21)]
+    with_empty = run("with_empty", [a, [], b], c, {0: 0, 2: 1, 3: 2})
+    without = run("without", [a, b], c, {0: 0, 1: 1, 2: 2})
+    assert with_empty == without
+    viols, keys = without
+    assert [sum(r[5] == "C4.cross_batch_dup" for r in viols[k]) for k in (1, 2)] == [3, 7]
+    assert len(keys) == 30 and {b for _, b in keys} == {0, 1}  # C repeats A and B
