@@ -26,6 +26,7 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from seronet_data_validator_spark.model import (
     ROW_REF_CROSS_TABLE,
@@ -80,7 +81,12 @@ def referential_violations(
 def _unregistered(fact: DataFrame, dim: DataFrame, key: str) -> DataFrame:
     """The C15 referential core: rows of ``fact`` whose non-empty ``key`` is
     absent from ``dim`` (a left_anti join against the broadcast distinct
-    keys, so the fact table never shuffles)."""
+    keys, so the fact table never shuffles). A string key is compared and
+    reported en-dash-normalized (P7, File_Submission_Object.py:134), as the
+    inlined C15 rule sees it in the fused pass, so the verdict does not
+    depend on the registry's size."""
+    if isinstance(fact.schema[key].dataType, T.StringType):
+        fact = fact.withColumn(key, F.translate(F.col(key), "–", "-"))
     d = F.broadcast(dim.select(key).dropDuplicates([key]))
     return fact.where(
         F.col(key).isNotNull() & (F.col(key).cast("string") != "")

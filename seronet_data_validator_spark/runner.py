@@ -13,6 +13,12 @@ the cache, release it, commit one run-manifest row per partition (the
 verdict of record, read back by ``checkpoint.partition_verdicts``) and
 return the stored read.
 
+Every call builds its plan from the inputs it is given, so a registry
+table that gained a key or a RuleSet that gained a rule is seen by the next
+call on the same objects. The memos it uses are keyed on values (a rule's
+lanes in plans/compile.py, the inlined C15 rule per registry-key tuple), so
+they cannot go stale.
+
 Plan shape at scale: pass (3) and (5) are narrow (no shuffle); (4) shuffles
 once per distinct aggregation key. Over bucketed tables with audio,
 references and an inlined registry the violations plan has 4 scans (the
@@ -101,9 +107,8 @@ class ValidationResult:
     stored violations of ``run_id``, skipped partitions included; the run
     has released its cache. An in-memory run's ``violations`` is the
     persisted result, which the caller owns: ``close()`` (or leaving a
-    ``with`` block) releases it. Calls served from one prepared plan share
-    that cache entry. ``verdicts`` has one dict per partition validated by
-    this call (PARTITION_VERDICT_SCHEMA keys)."""
+    ``with`` block) releases it. ``verdicts`` has one dict per partition
+    validated by this call (PARTITION_VERDICT_SCHEMA keys)."""
 
     run_id: str
     violations: DataFrame
@@ -122,26 +127,6 @@ class ValidationResult:
 
     def __exit__(self, *exc) -> None:
         self.close()
-
-
-# Compiled-plan cache (PREPARED-STATEMENT reuse, not result caching): the
-# fused violations plan for a given (clips, registry, reference, options)
-# tuple is a pure function of those inputs. Even with the rule lanes
-# memoized (plans/compile.py), building it costs 0.2-0.46 s of driver-side
-# work per call — the registry collect and the Catalyst analysis of every
-# family, the union and the dedup — paid INSIDE every timed validation pass:
-# a cold in-memory call on 2,000 clips (default rules, no audio pass, 4
-# vCPUs, local[2]) took 0.61-1.13 s against 0.36-0.72 s for a hit. A
-# long-lived service validates with the same plan per batch; rebuilding it
-# each call measures the Python driver, not the engine. Keyed by INPUT
-# OBJECT IDENTITY (plus every plan-shaping flag), so a different DataFrame
-# — even with identical contents — misses and compiles fresh; entries pin
-# their key objects so ids cannot be recycled. Every execution still reads
-# the input tables and recomputes all violations — only the unresolved
-# expression tree is reused. Bounded LRU; session-scoped (applicationId in
-# the key).
-_PLAN_CACHE: dict = {}
-_PLAN_CACHE_MAX = 32
 
 
 def validate_clips(
@@ -199,12 +184,13 @@ def validate_clips(
     # skipped partitions keep their STORED verdict — a failed dataset must
     # not report clean on re-run just because its partitions are committed.
     # The declared sides of C18 and C19 lose the skipped partitions too, or
-    # their now-absent clips would read as missing; C17 keeps the whole
-    # input's ids, or a committed site's reference ids would read as childless.
+    # their now-absent clips would read as missing. C4 and C17 keep the
+    # whole input's ids, or a duplicate across a committed site would go
+    # unreported and a committed site's reference ids would read as childless.
     run_manifest = RunManifest(spark, output_root) if output_root else None
     prior_ok = run_manifest.prior_verdicts(run_id) if run_manifest else {}
     skipped = sorted(prior_ok)
-    presence_clips = clips
+    whole_input = clips
     if run_manifest is not None:
         clips = run_manifest.resume_filter(clips, skipped, partition_column)
         if manifest is not None:
@@ -216,31 +202,12 @@ def validate_clips(
                     site_consistency.declared, skipped, partition_column),
             )
 
-    # Prepared-plan reuse (see _PLAN_CACHE): in-memory runs without a C18
-    # manifest only — durable runs (output_root) interact with external
-    # state per call, and the manifest is not part of the key.
-    plan_key = None
-    if output_root is None and manifest is None:
-        plan_key = (
-            spark.sparkContext.applicationId,
-            id(clips), id(codec_registry), id(reference_clips),
-            id(prior_violations), id(site_consistency), id(ruleset),
-            partition_column, run_presence_pass, run_qc_pass,
-            run_audio_pass, audio_force_full_decode,
-        )
-        hit = _PLAN_CACHE.get(plan_key)
-        if hit is not None:
-            return _finish_validation(
-                spark, hit["plan"], clips, run_id, partition_column,
-                output_root, run_manifest, skipped, prior_ok, t0,
-            )
-
     parts = violation_families(
         clips, rs, partition_column=partition_column,
         codec_registry=codec_registry, reference_clips=reference_clips,
         manifest=manifest, prior_violations=prior_violations,
         site_consistency=site_consistency, run_presence_pass=run_presence_pass,
-        presence_clips=presence_clips,
+        whole_input=whole_input,
         run_audio_pass=run_audio_pass, audio_force_full_decode=audio_force_full_decode,
         run_qc_pass=run_qc_pass,
     )
@@ -252,16 +219,6 @@ def validate_clips(
     # pass. Violations are tiny relative to the input, so the dedup shuffle is
     # negligible at scale.
     violations = dedup_violations(union_violation_parts(parts), order_col="_ord")
-
-    if plan_key is not None:
-        while len(_PLAN_CACHE) >= _PLAN_CACHE_MAX:
-            _PLAN_CACHE.pop(next(iter(_PLAN_CACHE)))
-        _PLAN_CACHE[plan_key] = {
-            "plan": violations,
-            # pin the key objects: id() must stay unambiguous for the entry
-            "refs": (clips, codec_registry, reference_clips,
-                     prior_violations, site_consistency, ruleset),
-        }
 
     return _finish_validation(
         spark, violations, clips, run_id, partition_column,
@@ -280,7 +237,7 @@ def violation_families(
     prior_violations: DataFrame | None = None,
     site_consistency: SiteConsistencySpec | None = None,
     run_presence_pass: bool = False,
-    presence_clips: DataFrame | None = None,
+    whole_input: DataFrame | None = None,
     run_audio_pass: bool,
     audio_force_full_decode: bool = False,
     run_qc_pass: bool,
@@ -288,15 +245,19 @@ def violation_families(
     """Steps (3)-(5): the violation families of ``df`` in pass order (the
     C22 dedup's first-writer order), for ``validate_clips`` and for each
     micro-batch of ``stream_validate_clips``. With ``partition_column=None``
-    the families carry only the VIOLATION_SCHEMA columns. C17 reads its
-    clip ids from ``presence_clips`` (default ``df``): a resumed run passes
-    its input from before the resume filter."""
+    the families carry only the VIOLATION_SCHEMA columns. C4 and C17 read
+    their clip ids from ``whole_input`` (default ``df``): a resumed run
+    passes its input from before the resume filter."""
     keep = (partition_column,) if partition_column else ()
+    ids = df if whole_input is None else whole_input
     parts: list[DataFrame] = []
 
     # C15: a registry small enough to collect compiles to a literal isin
     # INSIDE the fused rule pass — zero extra scans of the fact table, no
-    # join stage. Big registries keep the broadcast anti-join operator.
+    # join stage. Big registries keep the broadcast anti-join operator: an
+    # inlined isin over 10,006 keys costs seconds of py4j on the driver, and
+    # a join for every size would add a scan and an exchange to the plan.
+    # Both paths compare the en-dash-normalized codec (P7).
     anti_join_registry = codec_registry
     if codec_registry is not None and prior_violations is None:
         keys = codec_registry.select("codec").limit(10_001).collect()
@@ -309,7 +270,7 @@ def violation_families(
     parts.append(compile_ruleset(df, rs, keep_columns=keep))
 
     # (4) table-level passes.
-    dup = duplicate_id_violations(df, rs.row_ref_column, rs.table_name)
+    dup = duplicate_id_violations(ids, rs.row_ref_column, rs.table_name)
     parts.append(_with_null_part(dup, partition_column))
     if anti_join_registry is not None:
         if prior_violations is not None:
@@ -344,8 +305,7 @@ def violation_families(
     if run_presence_pass and reference_clips is not None:
         m = presence_matrix(
             {
-                "clips": (df if presence_clips is None else presence_clips)
-                .select(rs.row_ref_column),
+                "clips": ids.select(rs.row_ref_column),
                 "reference": reference_clips.select(rs.row_ref_column),
             },
             rs.row_ref_column,
@@ -424,11 +384,10 @@ def _finish_validation(
     prior_ok: dict[str, bool],
     t0: float,
 ) -> ValidationResult:
-    """Steps (7)-(8): persist, verdict action, write, commit — the one
-    execution tail of fresh and prepared-plan calls. ``violations`` is the
-    deduplicated violations plan and ``clips`` its (resume-filtered) input,
-    which gives the per-partition row counts. ``t0`` is the call's start, so
-    ``wall_ms`` covers the whole call up to the commit."""
+    """Steps (7)-(8): persist, verdict action, write, commit. ``violations``
+    is the deduplicated violations plan and ``clips`` its (resume-filtered)
+    input, which gives the per-partition row counts. ``t0`` is the call's
+    start, so ``wall_ms`` covers the whole call up to the commit."""
     # Violations feed the verdict action, then the write or the caller —
     # persist so the expensive passes (audio decode, joins) run ONCE; the
     # verdict action fills the cache.

@@ -2,8 +2,9 @@
 (violations write, then the run-manifest commit) resumes to the result of an
 uninterrupted run; the manifest keeps NULL metrics and 64-bit counts exactly;
 a resumed durable run stays within its Spark job budget, leaves nothing
-cached, does not flag the sites it skipped (C17, C18, C19) and still
-validates NULL-site clips; and ``wall_ms`` times the whole call."""
+cached, does not flag the sites it skipped (C17, C18, C19), still reports
+duplicates of their ids (C4) and still validates NULL-site clips; and
+``wall_ms`` times the whole call."""
 
 from __future__ import annotations
 
@@ -283,6 +284,32 @@ def test_resume_keeps_presence_rows(spark, bad_clips, tmp_path):
     res = validate_clips(spark, bad_clips, run_id="resumed", output_root=root, **kw)
     assert res.skipped_partitions == SITES[:2]
     assert c17(res) == want
+
+
+def test_resume_keeps_duplicates_across_committed_sites(spark, tmp_path):
+    """C4 reads the ids of the whole input, not the resume-filtered clips: a
+    site-22 clip that repeats an id of the committed site 11 fails a resumed
+    run with the in-memory run's C4 row."""
+    clips = generate_clips(spark, 400, seed=42, bad=False)
+    cid = clips.where(F.col("site") == "11").first()["clip_id"]
+    clips = clips.unionByName(
+        clips.where(F.col("clip_id") == cid).withColumn("site", F.lit("22")))
+    kw = {"codec_registry": codec_registry_df(spark), "run_audio_pass": False}
+
+    def c4(res):
+        return sorted(tuple(r) for r in res.violations.where(
+            F.col("rule_id") == "C4.dup_id").select(*VIOLATION_SCHEMA.names).collect())
+
+    with validate_clips(spark, clips, run_id="mem", **kw) as mem:
+        want = c4(mem)
+        assert mem.passed is False
+    assert len(want) == 1
+    root = str(tmp_path)
+    _commit_passed(spark, root, "resumed", ["11"])
+    res = validate_clips(spark, clips, run_id="resumed", output_root=root, **kw)
+    assert res.skipped_partitions == ["11"]
+    assert c4(res) == want
+    assert res.passed is False
 
 
 def test_wall_ms_covers_the_whole_call(spark, monkeypatch):

@@ -206,8 +206,9 @@ def test_full_lifecycle_good_fixture_clean(spark):
 
 def test_c15_inline_and_antijoin_paths_verdict_equivalent(spark):
     """The registry-size-selected C15 strategy (inlined isin vs broadcast
-    anti-join) must not change per-partition verdicts: a bad codec in
-    partition A fails A and only A on BOTH paths."""
+    anti-join) must not change the C15 rows or the per-partition verdicts:
+    a bad codec in partition A fails A and only A on BOTH paths, and a codec
+    spelled with an en-dash matches its registered '-' form on both (P7)."""
     from pyspark.sql import functions as F
 
     from seronet_data_validator_spark.runner import validate_clips
@@ -216,28 +217,36 @@ def test_c15_inline_and_antijoin_paths_verdict_equivalent(spark):
         generate_clips,
     )
 
-    clips = generate_clips(spark, 300, seed=7)  # clean fixture
-    # corrupt every codec in ONE partition (site) only
-    bad_site = clips.select("site").first()["site"]
-    clips = clips.withColumn(
-        "codec",
-        F.when(F.col("site") == bad_site, F.lit("not_a_codec")).otherwise(F.col("codec")),
+    clean = generate_clips(spark, 300, seed=7)  # clean fixture
+    bad_site = clean.select("site").first()["site"]
+    registry = codec_registry_df(spark)
+    endash_registry = registry.unionByName(
+        spark.createDataFrame([("pcm-s16", "wav", "F")], registry.schema))
+    pad = spark.range(10_001).select(
+        F.concat(F.lit("pad_"), F.col("id")).alias("codec"),
+        F.lit("pad").alias("container"),
+        F.lit("F").alias("lossy"),
     )
-    small = codec_registry_df(spark)  # inlined path (< 10k keys)
-    big = small.unionByName(
-        spark.range(10_001).select(
-            F.concat(F.lit("pad_"), F.col("id")).alias("codec"),
-            F.lit("pad").alias("container"),
-            F.lit("F").alias("lossy"),
+
+    def outcome(clips, reg):
+        with validate_clips(spark, clips, codec_registry=reg,
+                            run_id="vv", run_audio_pass=False) as res:
+            c15 = sorted(tuple(r) for r in res.violations.where(
+                F.col("rule_id") == "C15.referential").collect())
+            return c15, {v["partition_key"]: (v["pass"], v["n_errors"])
+                         for v in res.verdicts}
+
+    for codec, small, site_fails in (("not_a_codec", registry, True),
+                                     ("pcm–s16", endash_registry, False)):
+        # rewrite every codec in ONE partition (site) only
+        clips = clean.withColumn(
+            "codec",
+            F.when(F.col("site") == bad_site, F.lit(codec)).otherwise(F.col("codec")),
         )
-    )  # > 10k keys -> broadcast anti-join path
-
-    def verdicts(reg):
-        res = validate_clips(spark, clips, codec_registry=reg,
-                             run_id="vv", run_audio_pass=False)
-        return {v["partition_key"]: (v["pass"], v["n_errors"]) for v in res.verdicts}
-
-    v_small, v_big = verdicts(small), verdicts(big)
-    assert v_small == v_big
-    assert v_small[bad_site][0] is False
-    assert all(ok for s, (ok, _) in v_small.items() if s != bad_site)
+        big = small.unionByName(pad)  # > 10k keys -> broadcast anti-join path
+        (c15_small, v_small), (c15_big, v_big) = outcome(clips, small), outcome(clips, big)
+        assert c15_small == c15_big, codec
+        assert v_small == v_big, codec
+        assert bool(c15_small) is site_fails
+        assert v_small[bad_site][0] is not site_fails
+        assert all(ok for s, (ok, _) in v_small.items() if s != bad_site)

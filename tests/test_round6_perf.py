@@ -1,15 +1,16 @@
-"""Round-6 optimization regression tests: prepared-plan reuse in
-validate_clips and the Arrow-backed local fixture helper."""
+"""Round-6 optimization regression tests: every validate_clips call builds
+its plan from its current inputs, the banded Hamming probe skip, and the
+Arrow-backed local fixture helper."""
 
 from __future__ import annotations
 
-from pyspark.sql import functions as F
-
 from seronet_data_validator_spark import runner as R
+from seronet_data_validator_spark.model import VIOLATION_SCHEMA
+from seronet_data_validator_spark.plans.rules import Rule, check_in_list
+from seronet_data_validator_spark.rulesets import clips_ruleset
 from seronet_data_validator_spark.sources.clips import (
     codec_registry_df,
     generate_clips,
-    reference_clips,
 )
 from seronet_data_validator_spark.sources.local import local_df
 
@@ -19,49 +20,37 @@ def _sorted_rows(df):
     return sorted(tuple(r) for r in df.select(*cols).collect())
 
 
-def test_validate_clips_plan_cache_hits_and_results_identical(spark):
-    """Two calls with the SAME input objects reuse the compiled plan and
-    return identical violations; a different DataFrame object (same
-    content) misses the cache and still validates correctly."""
-    R._PLAN_CACHE.clear()
+def test_validate_clips_builds_its_plan_from_current_inputs(spark, tmp_path):
+    """A call on the same input objects sees what changed in them since the
+    last call: a rule added to the RuleSet reports its rows, and a codec
+    INSERTed into the registry table is no longer reported by C15. A call on
+    a different DataFrame with identical content returns identical rows."""
+    spark.sql("DROP TABLE IF EXISTS plan_inputs_registry")
+    spark.sql("CREATE TABLE plan_inputs_registry (codec string, container string, "
+              f"lossy string) USING parquet LOCATION '{tmp_path / 'registry'}'")
+    codec_registry_df(spark).write.insertInto("plan_inputs_registry")
+    reg = spark.table("plan_inputs_registry")
+    rs = clips_ruleset()
     clips = generate_clips(spark, 300, seed=43, bad=True)
-    reg = codec_registry_df(spark)
-    refs = reference_clips(spark, 300, seed=43)
+    rule_id, value = (VIOLATION_SCHEMA.names.index(c) for c in ("rule_id", "column_value"))
 
-    res1 = R.validate_clips(spark, clips, codec_registry=reg,
-                            reference_clips=refs, run_id="a")
-    rows1 = _sorted_rows(res1.violations)
-    assert len(R._PLAN_CACHE) == 1
-    res2 = R.validate_clips(spark, clips, codec_registry=reg,
-                            reference_clips=refs, run_id="b")
-    rows2 = _sorted_rows(res2.violations)
-    assert len(R._PLAN_CACHE) == 1  # hit, no new entry
-    assert rows1 == rows2
-    assert res1.passed == res2.passed
-    assert [v["partition_key"] for v in res1.verdicts] == [
-        v["partition_key"] for v in res2.verdicts
-    ]
+    def rows(df, rule=None):
+        with R.validate_clips(spark, df, codec_registry=reg, ruleset=rs,
+                              run_audio_pass=False) as res:
+            return [r for r in _sorted_rows(res.violations)
+                    if rule is None or r[rule_id] == rule]
 
-    # different input object (identical content): must MISS and recompute
-    clips_b = generate_clips(spark, 300, seed=43, bad=True)
-    res3 = R.validate_clips(spark, clips_b, codec_registry=reg,
-                            reference_clips=refs, run_id="c")
-    assert len(R._PLAN_CACHE) == 2
-    assert _sorted_rows(res3.violations) == rows1
-    for res in (res1, res2, res3):
-        res.close()
+    before = rows(clips)
+    assert rows(generate_clips(spark, 300, seed=43, bad=True)) == before
 
+    rs.add(Rule("X1.opus_only", "codec", check_in_list(["opus"])))
+    assert rows(clips, "X1.opus_only")
 
-def test_validate_clips_plan_cache_skips_durable_runs(tmp_path, spark):
-    """output_root (durable/resume) runs interact with external state per
-    call — they must never be served from the plan cache."""
-    R._PLAN_CACHE.clear()
-    clips = generate_clips(spark, 200, seed=43, bad=True)
-    res = R.validate_clips(spark, clips, codec_registry=codec_registry_df(spark),
-                           run_id="d", output_root=str(tmp_path / "out"))
-    assert not R._PLAN_CACHE
-    assert res.verdicts
-    spark.catalog.clearCache()
+    c15 = [r for r in before if r[rule_id] == "C15.referential"]
+    new_codec = c15[0][value]
+    spark.sql(f"INSERT INTO plan_inputs_registry VALUES ('{new_codec}', 'x', 'F')")
+    assert rows(clips, "C15.referential") == [r for r in c15 if r[value] != new_codec]
+    spark.sql("DROP TABLE plan_inputs_registry")
 
 
 def test_banded_hamming_input_rows_bound_is_exact(spark):
